@@ -1,28 +1,117 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import scala.collection.immutable.VectorMap
+import com.fasterxml.jackson.databind.JsonNode
+import graft.tools.Harness
+import graft.tools.Harness.dec
 object Bench {
+  /** The reference-min file (schema at [[updatedReference]]). */
+  val refFile = "bench_reference.json"
+
+  /** One JSON record of the bench. Field order matters to the stdout parser: the
+    * documented contract line is
+    * {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    * — lead with metric/value/unit so a prefix-anchored parser (e.g. a
+    * search for '{"metric"') finds the line; extra keys follow "queries". */
+  def jsonLine(entries: Seq[(String, Double)], places: Int, omitted: Int, total: Double,
+      runs: Int, errors: Seq[String], contended: Boolean, sf: String): VectorMap[String, Any] =
+    VectorMap("metric" -> "total", "value" -> dec(total, 3), "unit" -> "sec",
+      "queries" -> entries.sortBy(_._1).map { case (k, v) => k -> dec(v, places) }.to(VectorMap)) ++
+      (if (omitted > 0) Some("omitted" -> omitted) else None) ++
+      VectorMap("runs" -> runs, "errors" -> errors.sorted, "contended" -> contended, "sf" -> sf)
+
+  /** The compact stdout line. The bench runner keeps only the LAST 2000 chars of
+    * stdout and parses the JSON line out of that tail (round 6: a 3.4 KB
+    * line over 99 queries front-truncated there → "parsed": null, an
+    * unreadable bench). The line must therefore FIT ENTIRELY in that tail
+    * together with the runner's trailer lines: short query keys
+    * (q97_bpe_encode → q97), centisecond values, and — should the catalog
+    * ever outgrow even that — drop the fastest queries first with an
+    * "omitted" count. Full-name millisecond detail goes to
+    * bench_detail.json and stderr.
+    *
+    * The r8 runner record showed WHERE the parse dies: the captured tail
+    * held the END of the stderr detail line, then "[info] " + the FIRST
+    * ~1100 chars of an 1800-char compact line — the window is 2000 chars
+    * of MERGED output, and whatever shares it (detail-line tail, sbt
+    * prefix, trailer) evicts the compact line's end. The only robust
+    * contract is a final line so short it fits whole beside all of that.
+    * r19: the sbt "[info] " prefix is gone (run/outputStrategy :=
+    * StdoutOutput) and the only writer after this line is sbt's ~75-char
+    * "[success] Total time" trailer, so 1500 + trailer fits the 2000-char
+    * window whole with ~400 chars of slack for shutdown stragglers. */
+  def compactLine(wall: Map[String, Double], runs: Int, errors: Seq[String],
+      contended: Boolean, sf: String): String = {
+    val total = if (wall.nonEmpty) wall.values.sum else 0.0
+    val short = wall.toSeq.map { case (k, v) => (k.takeWhile(_ != '_'), v) }
+    // qNN prefixes are unique today; fall back to full names if that changes
+    var kept = (if (short.map(_._1).distinct.size == short.size) short else wall.toSeq)
+      .sortBy { case (_, v) => -v } // trim from the fast tail, keep the slow head
+    def render(omitted: Int) =
+      Harness.render(jsonLine(kept, 2, omitted, total, runs, errors, contended, sf))
+    var line = render(0)
+    val budget = 1500
+    while (line.length > budget && kept.nonEmpty) {
+      kept = kept.dropRight(1)
+      line = render(short.size - kept.size)
+    }
+    line
+  }
+
+  /** Reference blocks, newest first: (fixture hash, (updated_ms, query → min)). */
+  type Reference = Seq[(String, (Long, Map[String, Double]))]
+
+  /** The reference after a full uncontended run. Schema:
+    * {"fixtures": {"<hash>": {"updated_ms": N, "queries": {q: min}}}} —
+    * PER-FIXTURE blocks, because full-catalog runs happen at different SFs
+    * (the round bench at sf0.1, Doctor at sf0.01) whose fixture hashes differ:
+    * a single-hash schema would flip-flop between them, losing the
+    * cross-round mins each time. Only the newest 4 blocks are kept. */
+  def updatedReference(all: Map[String, (Long, Map[String, Double])], fixtureHash: String,
+      published: Map[String, Double], nowMs: Long): Reference = {
+    val cur = all.get(fixtureHash).map(_._2).getOrElse(Map.empty[String, Double])
+      .filter { case (k, _) => published.contains(k) } // drop renamed/removed queries
+    // seeded with the existing reference entries: a query that ERRORED
+    // this run (wall = 0, e.g. the documented transient compile-race
+    // NoClassDefFoundError class) keeps its cross-round min instead of
+    // being silently erased — losing it would blind the >2x
+    // readjudication defense for that query next round (r17 ADVICE 1)
+    val updated = cur ++ published.toSeq.filter(_._2 > 0).map { case (k, w) =>
+      k -> cur.get(k).fold(w)(math.min(_, w))
+    }
+    ((all - fixtureHash).toSeq.sortBy(-_._2._1).take(3) :+
+      (fixtureHash -> (nowMs, updated))).sortBy(-_._2._1)
+  }
+
+  def renderReference(ref: Reference): String =
+    Harness.json.writerWithDefaultPrettyPrinter().writeValueAsString(VectorMap("fixtures" ->
+      ref.map { case (h, (ts, qs)) => h -> VectorMap("updated_ms" -> ts, "queries" ->
+        qs.toSeq.sortBy(_._1).map { case (k, m) => k -> math.rint(m * 1000) / 1000 }.to(VectorMap))
+      }.to(VectorMap))) + "\n"
+
+  /** The `query → seconds` object at `field` of a JSON record (empty when absent). */
+  private def doubles(n: JsonNode, field: String): Map[String, Double] =
+    n.path(field).properties().asScala.iterator.map(e => e.getKey -> e.getValue.asDouble()).toMap
+
+  def readReference(): Map[String, (Long, Map[String, Double])] =
+    try {
+      val p = Paths.get(refFile)
+      if (!Files.exists(p)) Map.empty
+      else Harness.json.readTree(Files.readString(p)).path("fixtures").properties().asScala
+        .iterator.map(e => e.getKey -> (e.getValue.path("updated_ms").asLong(0L),
+          doubles(e.getValue, "queries"))).toMap
+    } catch { case _: Exception => Map.empty }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
     // runs per query; the reported time is the MIN across runs. One cold
     // run per query measured codegen/JIT noise as phantom 2-6× regressions
     // (round-5 verdict: recorded 126 s vs judge-reproduced 65 s on the
     // same machine) — min-of-2 reports steady-state work, not warmup.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: JIT/codegen/parquet-reader init otherwise lands on
-    // whichever query runs first and distorts its number
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    val spark = Harness.session()
+    Harness.warmUp(spark)
     // registration is data prep (every other query reads pre-existing
     // parquet) — build the shared registries before the timed loop
     try Queries.prewarmRegistries(spark, sfDir)
@@ -33,31 +122,9 @@ object Bench {
     // numbers on identical code — see StreamOps.warmup's scaladoc
     try graft.streaming.StreamOps.warmup(spark)
     catch { case _: Throwable => () }
-    // noop sink forces full evaluation of every operator (a bare count()
-    // lets Catalyst prune projection-only work and under-measures).
     val errors = scala.collection.mutable.LinkedHashSet.empty[String]
-    // Contention self-diagnosis (round-9 verdict: the driver's 253 s record
-    // was ~40% machine noise on code that cleanly measures 175 s, and the
-    // artifact could not say so). Per run we track our own process CPU
-    // (OperatingSystemMXBean, ns) and the whole machine's busy time
-    // (/proc/stat, USER_HZ=100 ticks); external load = (system busy − our
-    // busy) / (cores × wall). A clean local[n] run has external ≈ 0; a
-    // contended one shows other processes eating the cores the wall time
-    // paid for.
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => Some(b)
-      case _ => None
-    }
-    def procCpuNs(): Long = osBean.map(_.getProcessCpuTime).getOrElse(-1L)
-    def systemBusyTicks(): Long =
-      try {
-        val line = java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/stat")).get(0)
-        val f = line.trim.split("\\s+").drop(1).map(_.toLong)
-        // busy = total − idle − iowait (fields 4,5 zero-indexed 3,4)
-        f.sum - f(3) - (if (f.length > 4) f(4) else 0L)
-      } catch { case _: Exception => -1L }
-    val nCores = cpus.toInt
-    // (externalCoreSeconds, wallSeconds) accumulated over every timed run
+    // Contention self-diagnosis (see Harness.Sample): external core-seconds
+    // and wall seconds accumulated over every timed run
     var externAccum = 0.0
     var wallAccum = 0.0
     // dev iteration: SPARK_GRAFT_BENCH_ONLY=q115_edit_pairs,q29_dedup_minhash
@@ -76,11 +143,8 @@ object Bench {
     // -1.0 = sentinel when every attempt failed or the query is missing.
     def calibrate(attempts: Int): Double = SparkEntry.queries.get(calibrationQuery).map { fn =>
       val ok = (1 to attempts).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val good =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
-        if (good) Some((System.nanoTime() - t0) / 1e9) else None
+        try Some(Harness.timed(Harness.noop(fn(spark, sfDir))).wall)
+        catch { case _: Throwable => None }
       }
       if (ok.nonEmpty) ok.min else -1.0
     }.getOrElse(-1.0)
@@ -99,35 +163,24 @@ object Bench {
       // per run: (wall, our process-CPU seconds); the reported cpu is the
       // one PAIRED with the min-wall run so detail rows stay consistent
       def runOnce(): Option[(Double, Double)] = {
-        val c0 = procCpuNs(); val s0 = systemBusyTicks()
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        val sample =
+          try Some(Harness.timed(Harness.noop(fn(spark, sfDir))))
           catch {
             case e: Throwable =>
               // a failed query must FAIL the bench (nonzero rc + errors key),
-              // not silently record its time-to-throw as a timing
+              // not silently record its time-to-throw as a timing: a failed
+              // run contributes NO timing, or its time-to-throw would win the
+              // min and report a fast failure as the steady-state time
               errors += name
               System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              false
+              None
           }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val cpuSec = if (c0 >= 0) (procCpuNs() - c0) / 1e9 else -1.0
-        val s1 = systemBusyTicks()
-        if (ok && s0 >= 0 && s1 >= 0 && cpuSec >= 0) {
-          externAccum += math.max(0.0, (s1 - s0) / 100.0 - cpuSec)
-          wallAccum += dt
+        sample.filter(_.external >= 0).foreach { s =>
+          externAccum += s.external
+          wallAccum += s.wall
         }
-        spark.catalog.clearCache() // queries that cache intermediates don't skew later ones
-        // localCheckpoint RDDs aren't covered by clearCache — over ~380
-        // queries they accrue block-manager memory and degrade the late,
-        // shuffle-heavy queries (the ScaleProbe lesson; r14 measured the
-        // back two thirds of the run ~12% slower than the front before
-        // this, with the scan-shaped calibration anchor flat)
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        // a failed run contributes NO timing: its time-to-throw would win
-        // the min and report a fast failure as the steady-state time
-        if (ok) Some((dt, cpuSec)) else None
+        Harness.reset(spark)
+        sample.map(s => (s.wall, s.cpu))
       }
       val times = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
       (1 to runs).foreach(_ => runOnce().foreach(times += _))
@@ -174,15 +227,13 @@ object Bench {
     val fixtureHash: String =
       try {
         val md = java.security.MessageDigest.getInstance("SHA-256")
-        val dir = java.nio.file.Paths.get(sfDir)
-        import scala.jdk.CollectionConverters._
-        val stream = java.nio.file.Files.list(dir)
+        val stream = Files.list(Paths.get(sfDir))
         val names =
           try stream.iterator().asScala.toSeq.sortBy(_.getFileName.toString)
           finally stream.close() // a leaked stream holds a directory fd per run
         names.foreach { p =>
           md.update(p.getFileName.toString.getBytes("UTF-8"))
-          md.update(java.nio.file.Files.readAllBytes(p))
+          md.update(Files.readAllBytes(p))
         }
         md.digest().map("%02x".format(_)).mkString.take(16)
       } catch { case e: Exception => s"unavailable:${e.getClass.getSimpleName}" }
@@ -200,52 +251,17 @@ object Bench {
     // never updates the reference.
     // ------------------------------------------------------------------
     val isChild = sys.env.contains("SPARK_GRAFT_BENCH_CHILD")
-    val refFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF_FILE", "bench_reference.json")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    // schema: {"fixtures": {"<hash>": {"updated_ms": N, "queries": {q: min}}}}
-    // — PER-FIXTURE blocks, because full-catalog runs happen at different
-    // SFs (the driver at sf0.1, Doctor at sf0.01) whose fixture hashes
-    // differ: a single-hash schema would flip-flop between them, losing
-    // the cross-round mins each time. Only the newest 4 blocks are kept.
-    def readRefAll(): Map[String, (Long, Map[String, Double])] =
-      try {
-        val p = java.nio.file.Paths.get(refFile)
-        if (!java.nio.file.Files.exists(p)) Map.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          val n = mapper.readTree(java.nio.file.Files.readString(p))
-          val fx = n.get("fixtures")
-          if (fx == null) Map.empty
-          else fx.properties().asScala.iterator.map { e =>
-            val qs = Option(e.getValue.get("queries")).map(_.properties().asScala.iterator
-              .map(q => q.getKey -> q.getValue.asDouble()).toMap).getOrElse(Map.empty[String, Double])
-            e.getKey -> (Option(e.getValue.get("updated_ms")).map(_.asLong()).getOrElse(0L), qs)
-          }.toMap
-        }
-      } catch { case _: Exception => Map.empty }
-    def readRef(): Map[String, Double] =
-      readRefAll().get(fixtureHash).map(_._2).getOrElse(Map.empty)
     // fresh-JVM isolation run over the suspect queries; returns their
     // steady-state mins from the child's detail record
     def isolatedTimes(names: Seq[String]): Map[String, Double] =
       try {
-        val tmp = java.nio.file.Files.createTempFile("graft-bench-readj", ".json")
-        val javaBin = java.nio.file.Paths.get(
-          System.getProperty("java.home"), "bin", "java").toString
-        import scala.jdk.CollectionConverters._
-        val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-          .getInputArguments.asScala.filter(a =>
-            a.startsWith("--add-opens") || a.startsWith("--add-exports") ||
-              a.startsWith("--enable-native-access") || a.startsWith("-Xmx") ||
-              a.startsWith("-Xss") || a.startsWith("-Djdk."))
-        val cmd = (Seq(javaBin) ++ jvmArgs ++
-          Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")).asJava
-        val pb = new ProcessBuilder(cmd)
-        pb.environment().put("SPARK_GRAFT_BENCH_ONLY", names.mkString(","))
-        pb.environment().put("SPARK_GRAFT_BENCH_CHILD", "1")
-        pb.environment().put("SPARK_GRAFT_BENCH_DETAIL_FILE", tmp.toString)
-        pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+        val tmp = Files.createTempFile("graft-bench-readj", ".json")
+        val pb = Harness.childJvm("graft.Bench", Nil, Map(
+          "SPARK_GRAFT_BENCH_ONLY" -> names.mkString(","),
+          "SPARK_GRAFT_BENCH_CHILD" -> "1",
+          "SPARK_GRAFT_BENCH_DETAIL_FILE" -> tmp.toString,
+          "SPARK_GRAFT_SF_DIR" -> sfDir,
+          "SPARK_GRAFT_CPUS" -> Harness.cpus.toString))
         // the child's compact stdout line must never reach OUR stdout
         // (the driver parses our tail); its [bench] diagnostics join our
         // stderr like any other progress output
@@ -254,18 +270,14 @@ object Bench {
         val proc = pb.start()
         val done = proc.waitFor(120L * names.size + 300L, java.util.concurrent.TimeUnit.SECONDS)
         if (!done) { proc.destroyForcibly(); Map.empty }
-        else {
-          import scala.jdk.CollectionConverters._
-          val n = mapper.readTree(java.nio.file.Files.readString(tmp)).get("queries")
-          if (n == null) Map.empty
-          else n.properties().asScala.iterator.map(e => e.getKey -> e.getValue.asDouble()).toMap
-        }
+        else doubles(Harness.json.readTree(Files.readString(tmp)), "queries")
       } catch {
         case e: Exception =>
           System.err.println(s"[bench] readjudication child failed: ${e.getMessage}")
           Map.empty
       }
-    val ref = if (isChild) Map.empty[String, Double] else readRef()
+    val ref = if (isChild) Map.empty[String, Double]
+      else readReference().get(fixtureHash).map(_._2).getOrElse(Map.empty)
     val suspectsAll = results.toSeq.collect {
       // floor 0.5 s: below it a 2× swing is scheduler noise, not state
       case (name, (w, _, _, _)) if w > 0.5 && ref.get(name).exists(m =>
@@ -287,16 +299,14 @@ object Bench {
       }
     // published wall time = min(in-suite, isolated): the isolated number
     // is the trusted one when suite-order state inflated the in-suite run
-    val published = results.map { case (k, v @ (w, c, mx, sp)) =>
-      readjudicated.get(k) match {
-        case Some(iso) if iso > 0 && iso < w => k -> (iso, c, mx, sp)
-        case _ => k -> v
-      }
+    val wall = results.map { case (k, (w, _, _, _)) =>
+      k -> readjudicated.get(k).filter(iso => iso > 0 && iso < w).getOrElse(w)
     }
     // external load: fraction of the machine's cores busy with OTHER work
-    // during our timed runs (accumulated inside runOnce, so it is final
-    // here); > 0.25 means a quarter of the machine was fighting us
-    val externalLoad = if (wallAccum > 0) externAccum / (wallAccum * nCores) else -1.0
+    // during our timed runs; > 0.25 means a quarter of the machine was
+    // fighting us. contended flags the whole artifact so a slow record
+    // self-diagnoses instead of reading as a regression
+    val externalLoad = if (wallAccum > 0) externAccum / (wallAccum * Harness.cpus) else -1.0
     val contended = externalLoad > 0.25
     // reference update: FULL uncontended runs only (a filtered dev run or
     // a readjudication child must never write the cross-round contract,
@@ -306,123 +316,41 @@ object Bench {
     // fixture hash — a regenerated fixture resets the entry
     if (contended && !isChild && only.isEmpty)
       System.err.println(f"[bench] contended run (external_load=$externalLoad%.3f) - " +
-        "bench_reference.json not updated")
+        s"$refFile not updated")
     if (!isChild && only.isEmpty && !fixtureHash.startsWith("unavailable") && !contended) {
-      try {
-        val all = readRefAll()
-        val cur = all.get(fixtureHash).map(_._2).getOrElse(Map.empty[String, Double])
-          .filter { case (k, _) => published.contains(k) } // drop renamed/removed queries
-        // seeded with the existing reference entries: a query that ERRORED
-        // this run (wall = 0, e.g. the documented transient compile-race
-        // NoClassDefFoundError class) keeps its cross-round min instead of
-        // being silently erased — losing it would blind the >2x
-        // readjudication defense for that query next round (r17 ADVICE 1)
-        val updated = cur ++ published.toSeq.filter(_._2._1 > 0).map { case (k, (w, _, _, _)) =>
-          k -> cur.get(k).fold(w)(math.min(_, w))
-        }
-        val kept = (all - fixtureHash).toSeq.sortBy(-_._2._1).take(3) :+
-          (fixtureHash -> (System.currentTimeMillis(), updated))
-        val root = mapper.createObjectNode()
-        val fx = root.putObject("fixtures")
-        kept.sortBy(-_._2._1).foreach { case (h, (ts, qs)) =>
-          val b = fx.putObject(h)
-          b.put("updated_ms", ts)
-          val qn = b.putObject("queries")
-          qs.toSeq.sortBy(_._1).foreach { case (k, m) =>
-            qn.put(k, math.rint(m * 1000) / 1000) }
-        }
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(refFile),
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root) + "\n")
-      } catch {
+      try Files.writeString(Paths.get(refFile), renderReference(
+        updatedReference(readReference(), fixtureHash, wall, System.currentTimeMillis())))
+      catch {
         case e: Exception => System.err.println(s"[bench] reference write failed: ${e.getMessage}")
       }
     }
-    // The driver keeps only the LAST 2000 chars of stdout and parses the
-    // JSON line out of that tail (round 6: a 3.4 KB line over 99 queries
-    // front-truncated there → "parsed": null, an unreadable bench). The
-    // stdout line must therefore FIT ENTIRELY in that tail together with
-    // the runner's trailer lines: short query keys (q97_bpe_encode → q97),
-    // centisecond values, and — should the catalog ever outgrow even that —
-    // drop the fastest queries first with an "omitted" count. Full-name
-    // millisecond detail goes to bench_detail.json and stderr.
-    // Locale.ROOT: a comma-decimal default locale would break the JSON.
-    def fmt(v: Double, p: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${p}f", Double.box(v))
-    val wall = published.map { case (k, (w, _, _, _)) => k -> w }
     val total = if (wall.nonEmpty) wall.values.sum else 0.0
-    // contended (computed above, before the reference write): flags the
-    // whole artifact so a slow record self-diagnoses instead of reading
-    // as a regression
-    val errs = errors.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def jsonLine(entries: Seq[(String, Double)], p: Int, omitted: Int): String = {
-      val qs = entries.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + fmt(v, p) }
-        .mkString("{", ",", "}")
-      val om = if (omitted > 0) s""""omitted":$omitted,""" else ""
-      // field order matters to the driver: the documented contract line is
-      // {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-      // — lead with metric/value/unit so a prefix-anchored parser (e.g. a
-      // search for '{"metric"') finds the line; extra keys follow "queries".
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$qs,$om"runs":$runs,"errors":$errs,"contended":$contended,"sf":"$sfDir"}"""
-    }
-    val cpuJson = results.toSeq.sortBy(_._1)
-      .map { case (k, (_, c, _, _)) => "\"" + k + "\":" + fmt(c, 3) }
-      .mkString("{", ",", "}")
-    val qmaxJson = results.toSeq.sortBy(_._1)
-      .map { case (k, (_, _, mx, _)) => "\"" + k + "\":" + fmt(mx, 3) }
-      .mkString("{", ",", "}")
-    val qspreadJson = results.toSeq.sortBy(_._1)
-      .map { case (k, (_, _, _, sp)) => "\"" + k + "\":" + fmt(sp, 2) }
-      .mkString("{", ",", "}")
-    // a 0.0 entry means the isolated child FAILED for that query — the
-    // publish logic already ignores it, so it must not surface in the
-    // detail record where the documented "published = min(in-suite,
-    // isolated)" reading would make it a contradictory 0.0 (r17 ADVICE 3)
-    val readjJson = readjudicated.filter(_._2 > 0).toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }
-      .mkString("{", ",", "}")
-    val detail = {
-      val base = jsonLine(wall.toSeq, 3, 0)
-      // splice per-query process-CPU + the contention diagnosis into the
-      // detail record (the machine-readable contract — r9 verdict #1/#3);
-      // "readjudicated" maps query → its isolated fresh-JVM time for every
-      // query the reference-min defense re-ran (published value = the min)
-      base.dropRight(1) +
-        s""","cpu":$cpuJson,"qmax":$qmaxJson,"qspread":$qspreadJson,"readjudicated":$readjJson,""" +
-        s""""calibration":{"query":"$calibrationQuery","start":${fmt(calStart, 3)},"end":${fmt(calEnd, 3)}},""" +
-        s""""external_load":${fmt(externalLoad, 3)},"fixture_hash":"$fixtureHash"}"""
-    }
-    System.err.println(detail)
-    // a SPARK_GRAFT_BENCH_ONLY dev run must NOT clobber the full-catalog
-    // detail file (it silently replaced 160 queries with 3 once) — partial
-    // runs land in a sidecar instead; a readjudication child writes to the
-    // temp path its parent passed
-    val detailFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL_FILE",
-      if (only.isDefined) "bench_detail_partial.json" else "bench_detail.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailFile), detail + "\n")
-    catch { case e: Exception => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
-    val short = wall.toSeq.map { case (k, v) => (k.takeWhile(_ != '_'), v) }
-    // qNN prefixes are unique today; fall back to full names if that changes
-    var kept = (if (short.map(_._1).distinct.size == short.size) short else wall.toSeq)
-      .sortBy { case (_, v) => -v } // trim from the fast tail, keep the slow head
-    var line = jsonLine(kept, 2, 0)
-    // The r8 driver record finally shows WHERE the parse dies: the captured
-    // tail held the END of the stderr detail line, then "[info] " + the
-    // FIRST ~1100 chars of our 1800-char compact line — the window is
-    // 2000 chars of MERGED output, and whatever shares it (detail-line
-    // tail, sbt prefix, trailer) evicts the compact line's end. The only
-    // robust contract is a final line so short it fits whole beside all of
-    // that. Full per-query detail stays authoritative in
-    // bench_detail.json; the stdout line keeps the slow head only.
-    // r19: the sbt "[info] " prefix is gone (run/outputStrategy :=
-    // StdoutOutput) and the only writer after this line is sbt's ~75-char
-    // "[success] Total time" trailer, so 1500 + trailer fits the 2000-char
-    // window whole with ~400 chars of slack for shutdown stragglers.
-    val budget = 1500
-    while (line.length > budget && kept.nonEmpty) {
-      kept = kept.dropRight(1)
-      line = jsonLine(kept, 2, short.size - kept.size)
-    }
+    // the detail record (the machine-readable contract — r9 verdict #1/#3)
+    // adds per-query process-CPU, run noise and the contention diagnosis;
+    // "readjudicated" maps query → its isolated fresh-JVM time for every
+    // query the reference-min defense re-ran (published value = the min)
+    def perQuery(m: Map[String, Double], places: Int) =
+      m.toSeq.sortBy(_._1).map { case (k, v) => k -> dec(v, places) }.to(VectorMap)
+    val detail = jsonLine(wall.toSeq, 3, 0, total, runs, errors.toSeq, contended, sfDir) ++ VectorMap(
+      "cpu" -> perQuery(results.map { case (k, v) => k -> v._2 }, 3),
+      "qmax" -> perQuery(results.map { case (k, v) => k -> v._3 }, 3),
+      "qspread" -> perQuery(results.map { case (k, v) => k -> v._4 }, 2),
+      // a 0.0 entry means the isolated child FAILED for that query — the
+      // publish logic already ignores it, so it must not surface in the
+      // detail record where the documented "published = min(in-suite,
+      // isolated)" reading would make it a contradictory 0.0 (r17 ADVICE 3)
+      "readjudicated" -> perQuery(readjudicated.filter(_._2 > 0), 3),
+      "calibration" -> VectorMap(
+        "query" -> calibrationQuery, "start" -> dec(calStart, 3), "end" -> dec(calEnd, 3)),
+      "external_load" -> dec(externalLoad, 3),
+      "fixture_hash" -> fixtureHash)
+    System.err.println(Harness.render(detail))
+    // a readjudication child writes to the temp path its parent passed
+    try sys.env.get("SPARK_GRAFT_BENCH_DETAIL_FILE") match {
+      case Some(f) => Files.writeString(Paths.get(f), Harness.render(detail) + "\n")
+      case None => Harness.writeArtifact("bench_detail.json", detail, filtered = only.isDefined)
+    } catch { case e: Exception => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
+    val line = compactLine(wall, runs, errors.toSeq, contended, sfDir)
     // stop Spark BEFORE printing: the compact JSON must be the very last
     // stdout write of the process (the driver parses the tail of stdout;
     // any shutdown chatter after the line re-breaks the parse — r1–r7 all

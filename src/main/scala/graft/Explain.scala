@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 
 /** Dump `explain("formatted")` for every catalog query — the plan-quality
   * feedback loop: check PushedFilters reach the parquet scans, small sides
@@ -10,18 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // without the extensions, Similarity.dot falls back to the HOF
-      // spelling and the dumped plans stop matching production
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(logLevel = "ERROR")
     Queries.all
       .filter(q => names.isEmpty || names.contains(q.name))
       .foreach { q =>

@@ -26,7 +26,7 @@ object Units {
     "MWh" -> 1e3,
     "GWh" -> 1e6,
     "TWh" -> 1e9,
-    "therm" -> 29.307111111111112, // 1 therm = 105.4804 MJ / 3.6 MJ/kWh
+    "therm" -> 29.307111111111112, // 1 therm = 105.5056 MJ (100,000 Btu_IT) / 3.6 MJ/kWh
     "MBtu" -> 293.07111111111113) // 1 MBtu (million Btu) = 293.07 kWh
 
   val powerToKw: Map[String, Double] = Map(

@@ -1129,13 +1129,8 @@ object Graph {
     var forest = Seq.empty[(Long, Long, Long, Int)].toDF("a", "b", "w", "round")
     var round = 0
     var done = false
-    val t0 = System.nanoTime()
-    val trace = sys.env.contains("GRAFT_MSF_TRACE")
-    def tr(msg: => String): Unit =
-      if (trace) System.err.println(f"[boruvka] t=${(System.nanoTime() - t0) / 1e9}%.1fs $msg")
     while (!done && round < maxRounds) {
       round += 1
-      tr(s"round $round start")
       // round 1 is the identity round: comp(id) = id, so labeling sym with
       // component ids is a no-op (cu = u, cv = v) and the cross filter is
       // sym's existing u != v guarantee — skip BOTH edge-sized joins on the
@@ -1161,7 +1156,6 @@ object Graph {
           col("__ms_cv").as("cv"))).as("m"))
         .select(col("m.w").as("w"), col("m.a").as("a"), col("m.b").as("b"),
           col("__ms_cu").as("ca"), col("m.cv").as("cb")))
-      tr(s"selected ckpt done n=$nSelected")
       if (nSelected == 0L) done = true
       else {
         forest = forest.unionByName(
@@ -1184,7 +1178,6 @@ object Graph {
             when(col("__ms_mp") === col("c"), least(col("c"), col("p")))
               .otherwise(col("p")).as("p"))
           .transform(org.apache.spark.sql.graft.CheckpointFresh.apply)
-        tr("hook ckpt done")
         // pointer jumping TO CONVERGENCE, in batches of 3 lazy jumps (8×
         // compression per materialization) with a census-sized probe per
         // batch. A FIXED jump count is a trap: relabeling c → ptr^8(c) on
@@ -1222,20 +1215,17 @@ object Graph {
         }
         require(compressed,
           "boruvkaMsf: pointer compression did not converge in 22 batches")
-        tr(s"jump converged batches=$batches")
         comp = comp
           .join(ptr.select(col("c").as("comp"), col("p").as("__ms_new")),
             Seq("comp"), "left")
           .select(col("id"), coalesce(col("__ms_new"), col("comp")).as("comp"))
           .transform(org.apache.spark.sql.graft.CheckpointFresh.apply)
-        tr("comp ckpt done")
         // see the pruneEdges param doc: cross survivors only (labeled with
         // PRE-merge components — newly-intra edges drop next round; the
         // shrink is monotone either way)
         if (pruneEdges) {
           sym = org.apache.spark.sql.graft.CheckpointFresh(
             cross.select(col("u"), col("v"), col("w")))
-          tr("edge prune ckpt done")
         }
       }
     }

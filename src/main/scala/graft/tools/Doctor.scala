@@ -1,5 +1,9 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
+import scala.collection.immutable.VectorMap
+import scala.jdk.CollectionConverters._
+
 /** One-shot gate chain: compile → Verify+oracle → sbt test → ScaleProbe →
   * PlanLintSweep → Bench, each as a subprocess, with one JSON verdict at
   * the end (DOCTOR.json + a final stdout line). The round-close ritual is
@@ -15,22 +19,29 @@ package graft.tools
   */
 object Doctor {
 
-  private case class Step(name: String, ok: Boolean, seconds: Double, detail: String)
+  case class Step(name: String, ok: Boolean, seconds: Double, detail: String)
 
-  private def addOpens: Seq[String] =
-    Seq("java.lang", "java.lang.invoke", "java.io", "java.net", "java.nio",
-      "java.util", "java.util.concurrent", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED")
-
-  private def run(cmd: Seq[String], env: Map[String, String] = Map.empty,
-      logFile: String): Int = {
-    val pb = new ProcessBuilder(cmd: _*)
-    env.foreach { case (k, v) => pb.environment().put(k, v) }
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(new java.io.File(logFile))
-    pb.start().waitFor()
+  /** Runs `pb` to completion with stdout — and stderr, unless the caller
+    * redirected it — in `logFile`. */
+  private def run(pb: ProcessBuilder, logFile: String): Int = {
+    if (pb.redirectError() == ProcessBuilder.Redirect.PIPE) pb.redirectErrorStream(true)
+    pb.redirectOutput(new java.io.File(logFile)).start().waitFor()
   }
+  private def jvm(main: String, args: Seq[String], env: (String, String)*): ProcessBuilder =
+    Harness.childJvm(main, args, Map("SPARK_GRAFT_CPUS" -> "8") ++ env)
+
+  /** The bench runner parses the bench's last stdout line: it must be a JSON
+    * object that leads with "metric" (r19 verdict item 9). */
+  def benchLineOk(stdout: String): Boolean =
+    scala.util.Try(Harness.json.readTree(stdout.linesIterator.toSeq.last)).toOption
+      .exists(n => n.isObject && n.fieldNames().asScala.nextOption().contains("metric"))
+
+  /** DOCTOR.json's content; details carry raw log tails, so every string
+    * goes through Jackson's escaping. */
+  def render(pass: Boolean, sfDir: String, work: String, steps: Seq[Step]): String =
+    Harness.render(VectorMap("pass" -> pass, "sf" -> sfDir, "work" -> work,
+      "steps" -> steps.map(s => s.name -> VectorMap(
+        "ok" -> s.ok, "seconds" -> Harness.dec(s.seconds, 1), "detail" -> s.detail)).to(VectorMap)))
 
   private def timed(name: String)(f: => (Boolean, String)): Step = {
     val t0 = System.nanoTime()
@@ -46,15 +57,7 @@ object Doctor {
     val skip = argOf("--skip").map(_.split(",").toSet).getOrElse(Set.empty)
     val sfDir = argOf("--sf-dir").getOrElse("/root/testdata/sf0.01")
     val outFile = argOf("--out").getOrElse("DOCTOR.json")
-    val work = java.nio.file.Files.createTempDirectory("graft-doctor").toString
-    val classes = "target/scala-2.13/classes"
-    def cp: String = {
-      val jars = new java.io.File("/opt/spark/jars").listFiles()
-        .filter(_.getName.endsWith(".jar")).map(_.getPath).sorted
-      (classes +: jars).mkString(":")
-    }
-    def javaCmd(main: String, rest: Seq[String]): Seq[String] =
-      Seq("java", "-Xmx8g") ++ addOpens ++ Seq("-cp", cp, main) ++ rest
+    val work = Files.createTempDirectory("graft-doctor").toString
 
     val steps = scala.collection.mutable.ArrayBuffer.empty[Step]
     def record(name: String)(f: => (Boolean, String)): Boolean = {
@@ -65,64 +68,57 @@ object Doctor {
     }
 
     val compiled = record("compile") {
-      val rc = run(Seq("sbt", "-batch", "compile"), logFile = s"$work/compile.log")
+      val rc = run(new ProcessBuilder("sbt", "-batch", "compile"), s"$work/compile.log")
       (rc == 0, s"rc=$rc log=$work/compile.log")
     }
     if (compiled) {
       record("verify") {
         val vOut = s"$work/verify_out"
-        val rc = run(
-          javaCmd("graft.Verify", Seq(sfDir, vOut)),
-          Map("SPARK_GRAFT_CPUS" -> "8"), s"$work/verify.log")
+        val rc = run(jvm("graft.Verify", Seq(sfDir, vOut)), s"$work/verify.log")
         if (rc != 0) (false, s"Verify rc=$rc log=$work/verify.log")
         else {
-          val rc2 = run(
-            Seq("python3", "tools/check_oracle.py", sfDir, vOut, "--budget-seconds", "30"),
-            logFile = s"$work/oracle.log")
+          val rc2 = run(new ProcessBuilder(
+            "python3", "tools/check_oracle.py", sfDir, vOut, "--budget-seconds", "30"),
+            s"$work/oracle.log")
           val tail = scala.util.Try(
-            java.nio.file.Files.readAllLines(java.nio.file.Paths.get(s"$work/oracle.log"))
+            Files.readAllLines(Paths.get(s"$work/oracle.log"))
               .toArray.lastOption.map(_.toString).getOrElse("")).getOrElse("")
           (rc2 == 0, s"oracle rc=$rc2 $tail")
         }
       }
       record("test") {
-        val rc = run(Seq("sbt", "-batch", "test"), logFile = s"$work/test.log")
+        val rc = run(new ProcessBuilder("sbt", "-batch", "test"), s"$work/test.log")
         (rc == 0, s"rc=$rc log=$work/test.log")
       }
       record("scale") {
         val rc = run(
-          javaCmd("graft.tools.ScaleProbe",
+          jvm("graft.tools.ScaleProbe",
             Seq("/root/testdata/sf0.001", sfDir, s"$work/scale.json")),
-          Map("SPARK_GRAFT_CPUS" -> "8"), s"$work/scale.log")
+          s"$work/scale.log")
         (rc == 0, s"rc=$rc out=$work/scale.json")
       }
       record("planlint") {
         // writes the repo-root artifact (PLANLINT.json is part of the
         // round-close contract, like bench_detail.json from the bench step)
-        val rc = run(
-          javaCmd("graft.tools.PlanLintSweep", Seq(sfDir, "PLANLINT.json")),
-          Map("SPARK_GRAFT_CPUS" -> "8"), s"$work/planlint.log")
+        val rc = run(jvm("graft.tools.PlanLintSweep", Seq(sfDir, "PLANLINT.json")),
+          s"$work/planlint.log")
         (rc == 0, s"rc=$rc out=PLANLINT.json")
       }
       record("bench") {
-        val rc = run(
-          javaCmd("graft.Bench", Nil),
-          Map("SPARK_GRAFT_CPUS" -> "8", "SPARK_GRAFT_SF_DIR" -> sfDir),
-          s"$work/bench.log")
+        // stdout alone: the line check below reads its last line
+        val rc = run(jvm("graft.Bench", Nil, "SPARK_GRAFT_SF_DIR" -> sfDir)
+          .redirectError(new java.io.File(s"$work/bench.err.log")), s"$work/bench.log")
         val contended = scala.util.Try(
-          java.nio.file.Files.readString(java.nio.file.Paths.get("bench_detail.json"))
+          Files.readString(Paths.get("bench_detail.json"))
             .contains("\"contended\":true")).getOrElse(false)
-        (rc == 0, s"rc=$rc contended=$contended detail=bench_detail.json")
+        val lineOk = benchLineOk(
+          scala.util.Try(Files.readString(Paths.get(s"$work/bench.log"))).getOrElse(""))
+        (rc == 0 && lineOk, s"rc=$rc line_ok=$lineOk contended=$contended detail=bench_detail.json")
       }
     }
     val pass = steps.forall(_.ok)
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val body = steps.map(s =>
-      s"""${q(s.name)}:{"ok":${s.ok},"seconds":${fmt(s.seconds)},"detail":${q(s.detail)}}""")
-      .mkString("{", ",", "}")
-    val json = s"""{"pass":$pass,"sf":${q(sfDir)},"work":${q(work)},"steps":$body}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
+    val json = render(pass, sfDir, work, steps.toSeq)
+    Files.writeString(Paths.get(outFile), json + "\n")
     println(json)
     if (!pass) sys.exit(1)
   }

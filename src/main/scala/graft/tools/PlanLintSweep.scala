@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.VectorMap
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -69,18 +69,7 @@ object PlanLintSweep {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("PLANLINT.json")
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val rows = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
@@ -110,33 +99,27 @@ object PlanLintSweep {
             case e: Throwable =>
               Row(name, 0, 0, 0, 0, 0, allowlisted = false,
                 error = Some((s"${e.getClass.getSimpleName}: " +
-                  Option(e.getMessage).getOrElse(""))
-                  .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)))
+                  Option(e.getMessage).getOrElse("")).take(200)))
           }
         // a query under lint must not leak cached state into the next one
         // (the Bench/ScaleProbe hygiene)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        Harness.reset(spark)
         if (!row.pass || row.cartesian > 0)
           System.err.println(s"[planlint] ${row.name} " +
             s"cartesian=${row.cartesian} allow=${row.allowlisted} err=${row.error}")
         row
       }
     val allPass = rows.forall(_.pass)
-    val body = rows.map { r =>
-      s""""${r.name}":{"cartesian":${r.cartesian},"bnlj":${r.bnlj},""" +
-        s""""shuffles":${r.shuffles},"widest_scan":${r.widestScan},""" +
-        s""""unpruned_wide_scans":${r.unprunedWideScans},"pass":${r.pass}""" +
-        r.error.map(m => s""","error":"$m"""").getOrElse("") + "}"
-    }.mkString("{", ",", "}")
-    val allow = cartesianAllowlist.keys.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"sf":"$sfDir","n_queries":${rows.size},""" +
-      s""""allowlisted":$allow,"queries":$body,"pass":$allPass}"""
-    val outPath = if (only.isDefined) outFile + ".partial" else outFile
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")
+    val out = VectorMap("sf" -> sfDir, "n_queries" -> rows.size,
+      "allowlisted" -> cartesianAllowlist.keys.toSeq.sorted,
+      "queries" -> rows.map(r => r.name -> (VectorMap("cartesian" -> r.cartesian,
+        "bnlj" -> r.bnlj, "shuffles" -> r.shuffles, "widest_scan" -> r.widestScan,
+        "unpruned_wide_scans" -> r.unprunedWideScans, "pass" -> r.pass) ++
+        r.error.map("error" -> _))).to(VectorMap),
+      "pass" -> allPass)
+    Harness.writeArtifact(outFile, out, filtered = only.isDefined)
     spark.stop()
-    println(json)
+    println(Harness.render(out))
     if (!allPass) sys.exit(1)
   }
 }

@@ -1,328 +1,82 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.text.Dedup
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Scratch profiler for slow catalog queries — times each stage of a
-  * pipeline separately (dev tool, not part of the library surface).
-  * Mirrors q29's actual shared-shingle pipeline stage by stage. */
+/** Profiles one catalog query with Bench's session and run protocol: the
+  * untimed warm-up, then N runs into the noop sink, each printing its wall
+  * time and process CPU (on a machine with external load CPU seconds are
+  * the stable signal — removed work shrinks CPU even when wall is noise),
+  * and then the SQL metrics of every operator in the final AQE plan of the
+  * fastest run's noop write, captured by a QueryExecutionListener.
+  *
+  * Usage: `graft.tools.Profile <sfDir> --query <name> [runs]` (4 runs by
+  * default). Only the final write's plan is shown: an iterative query's
+  * earlier checkpoints are separate executions.
+  */
 object Profile {
-  def time[T](label: String)(f: => T): T = {
-    // process-CPU delta beside wall time: on a machine with external load
-    // (the r18 ±30% swings) CPU seconds are the stable signal — an
-    // optimization that removes work shrinks CPU even when wall is noise
-    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    val c0 = os.getProcessCpuTime
-    val t0 = System.nanoTime()
-    val r = f
-    val wall = (System.nanoTime() - t0) / 1e9
-    val cpu = (os.getProcessCpuTime - c0) / 1e9
-    println(f"[profile] $label: $wall%.2f s (cpu $cpu%.1f s)")
-    r
+  // tags each timed write so the listener can tell it from the warm-up's
+  // and the query builder's own executions (listener events arrive late)
+  private val RunKey = "graft.profile.run"
+
+  private def runOf(qe: QueryExecution): Option[Int] =
+    qe.logical.collectFirst { case w: OverwriteByExpression => w.writeOptions.get(RunKey) }
+      .flatten.map(_.toInt)
+
+  /** (depth, operator) of an executed plan, looking through AQE wrappers. */
+  def operators(plan: SparkPlan, depth: Int = 0): Seq[(Int, SparkPlan)] = plan match {
+    case a: AdaptiveSparkPlanExec => operators(a.executedPlan, depth)
+    case s: QueryStageExec => operators(s.plan, depth)
+    case p => (depth, p) +: p.children.flatMap(operators(_, depth + 1))
   }
 
-  /** q402's SQL-text LSH pipeline, one timed CACHE stage at a time. */
-  private def q402(dir: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("graft_q402_docs")
-    def mat(name: String, sel: String): Unit =
-      spark.sql(sel).localCheckpoint(eager = true).createOrReplaceTempView(name)
-    time("toks mat")(mat("graft_q402_toks", """
-      WITH corpus AS (
-        SELECT doc_id, text FROM graft_q402_docs
-        UNION ALL
-        SELECT doc_id + 1000000 AS doc_id,
-               array_join(slice(split(trim(text), '\\s+'), 1,
-                 size(split(trim(text), '\\s+')) - 1), ' ') AS text
-        FROM graft_q402_docs WHERE doc_id % 7 = 0)
-      SELECT doc_id,
-             filter(split(trim(regexp_replace(regexp_replace(lower(text),
-               '[^a-z0-9\\s]', ' '), '\\s+', ' ')), '\\s+'),
-               t -> length(t) > 0) AS toks
-      FROM corpus"""))
-    time("sh mat")(mat("graft_q402_sh", """
-      SELECT doc_id, array_distinct(xxhash64_array(
-        CASE WHEN size(toks) <= 3 THEN array(array_join(toks, ' '))
-             ELSE transform(sequence(0, size(toks) - 3),
-                    i -> concat_ws(' ', element_at(toks, i + 1),
-                           element_at(toks, i + 2), element_at(toks, i + 3)))
-        END)) AS sh
-      FROM graft_q402_toks"""))
-    time("sig mat")(mat("graft_q402_sig", """
-      SELECT doc_id, minhash_sig(sh, 64) AS sig
-      FROM graft_q402_sh WHERE size(sh) > 0"""))
-    time("buckets mat")(mat("graft_q402_buckets", """
-      SELECT doc_id, b.band,
-             CAST(hash(element_at(sig, b.band * 4 + 1), element_at(sig, b.band * 4 + 2),
-                       element_at(sig, b.band * 4 + 3), element_at(sig, b.band * 4 + 4))
-                  AS BIGINT) AS bucket
-      FROM graft_q402_sig LATERAL VIEW explode(sequence(0, 15)) b AS band"""))
-    time("bucket skew")(spark.sql("""
-      SELECT c, COUNT(*) AS n FROM (
-        SELECT band, bucket, COUNT(*) AS c FROM graft_q402_buckets GROUP BY 1, 2)
-      GROUP BY 1 ORDER BY c DESC LIMIT 8""").show())
-    time("sum d^2")(spark.sql("""
-      SELECT SUM(c * c) FROM (
-        SELECT band, bucket, COUNT(*) AS c FROM graft_q402_buckets GROUP BY 1, 2)""").show())
-    val cands = time("cands")(spark.sql("""
-      SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      FROM graft_q402_buckets a JOIN graft_q402_buckets b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id"""))
-    println(cands.queryExecution.executedPlan.toString.linesIterator
-      .filter(l => l.contains("Join") || l.contains("Exchange") || l.contains("InMemory"))
-      .mkString("\n"))
-    time("cands count")(println("  cands = " + cands.count()))
-    cands.createOrReplaceTempView("graft_q402_cands")
-    time("verify")(spark.sql("""
-      WITH j AS (
-        SELECT c.id1, c.id2,
-               size(array_intersect(s1.sh, s2.sh)) AS ic,
-               size(s1.sh) AS sz1, size(s2.sh) AS sz2
-        FROM graft_q402_cands c
-        JOIN graft_q402_sh s1 ON s1.doc_id = c.id1
-        JOIN graft_q402_sh s2 ON s2.doc_id = c.id2)
-      SELECT id1, id2,
-             ROUND(CAST(ic AS DOUBLE) / (sz1 + sz2 - ic), 4) AS jaccard
-      FROM j WHERE CAST(ic AS DOUBLE) / (sz1 + sz2 - ic) >= 0.8
-      ORDER BY id1, id2""").write.format("noop").mode("overwrite").save())
-    spark.stop()
-  }
+  private val units = Map("size" -> " B", "timing" -> " ms", "nsTiming" -> " ns")
 
   def main(args: Array[String]): Unit = {
-    if (args.contains("--q69")) { q69(args.head); return }
-    if (args.contains("--q90")) { q90(args.head); return }
-    if (args.contains("--apss")) { apss(args.head); return }
-    if (args.contains("--gramonly")) { gramOnly(args.head); return }
-    if (args.contains("--q402")) { q402(args.head); return }
-    if (args.contains("--boruvka")) { boruvka(args.head); return }
-    args.sliding(2).collectFirst { case Array("--query", name) => name } match {
-      case Some(name) => timeQuery(args.head, name); return
-      case None =>
+    val (dir, name, runs) = args match {
+      case Array(d, "--query", n) => (d, n, 4)
+      case Array(d, "--query", n, r) => (d, n, r.toInt)
+      case _ => sys.error("usage: Profile <sfDir> --query <name> [runs]")
     }
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val d = spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
-    val clipped = d.select(
-      (col("doc_id") + 1000000L).as("doc_id"),
-      array_join(slice(split(trim(col("text")), "\\s+"), lit(1), size(split(trim(col("text")), "\\s+")) - 1), " ")
-        .as("text"))
-    val corpus = d.unionByName(clipped)
-
-    // untimed warmup pass: JIT/codegen init otherwise lands on stage 1
-    Dedup.minhashNearDuplicates(corpus, "doc_id", "text", 16, 4, 3, 0.8)
-      .write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-
-    // q29's pipeline, stage by stage (minhashNearDuplicates shares the
-    // cached HASHED shingle frame between signatures and verify — keep
-    // this in lockstep with the production pipeline)
-    val shingles = Dedup.hashedShingleSets(corpus, "doc_id", "text", 3).cache()
-    time("shingles materialize")(println("  docs=" + shingles.count()))
-
-    val sig = Dedup.minhashSignaturesFromShingles(shingles, "doc_id", 64)
-    time("signatures (from cached shingles)")(sig.write.format("noop").mode("overwrite").save())
-
-    val buckets = Dedup.lshBucketsFromSignatures(sig, "doc_id", 16, 4).cache()
-    time("buckets materialize")(buckets.count())
-
-    val pairs = Dedup.candidatePairs(buckets, "doc_id")
-    time("candidate pairs")(println("  pairs=" + pairs.count()))
-
-    val out = Dedup.verifyJaccardOnShingles(shingles, pairs, "doc_id", 0.8)
-    time("verify jaccard")(println("  verified=" + out.count()))
-
-    spark.stop()
-  }
-
-  /** Repeated wall-clock timing of one catalog query (noop sink), for
-    * checking whether a bench delta is real or run-to-run noise. */
-  def timeQuery(dir: String, name: String, runs: Int = 4): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val q = graft.Queries.all.find(_.name == name)
+    val query = graft.Queries.all.find(_.name == name)
       .getOrElse(sys.error(s"no such query: $name"))
-    for (i <- 1 to runs) {
-      time(s"$name run $i")(q.run(spark, dir).write.format("noop").mode("overwrite").save())
-      // the r14 bench lesson, applied to this harness: localCheckpoint RDDs
-      // skip clearCache and accrue block-manager memory across runs —
-      // under pressure the NEXT run's cache evicts mid-query and every
-      // consumer recomputes its whole upstream (measured here as sporadic
-      // >10x CPU explosions on later runs); Bench unpersists between
-      // queries, so the per-run steady state must too
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val spark = Harness.session(logLevel = "ERROR")
+    val written = new LinkedBlockingQueue[(Int, QueryExecution)]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        runOf(qe).foreach(r => written.put(r -> qe))
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
+    Harness.warmUp(spark)
+    val samples = (1 to runs).map { i =>
+      val s =
+        try Harness.timed(query.run(spark, dir).write.format("noop").mode("overwrite")
+          .option(RunKey, i.toLong).save())
+        finally Harness.reset(spark)
+      println(f"[profile] $name run $i: ${s.wall}%.2f s (cpu ${s.cpu}%.1f s)")
+      i -> s
     }
-    spark.stop()
-  }
-
-  /** pruneEdges crossover measurement for Borůvka (r17 verdict item 1):
-    * q349's graph shape (ring + chords sized by the dir's orders count),
-    * timed with pruneEdges off and on, 2 runs each. At sf0.1 the r17
-    * experiment measured pruning SLOWER (13.3 → 17.5 s: the extra per-
-    * round checkpoint outweighs carrying fewer edges); at cluster scale
-    * carrying fewer edges wins — this mode measures WHERE the crossover
-    * actually sits as the synthesized dir grows. */
-  def boruvka(dir: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val m = spark.read.parquet(s"$dir/orders.parquet").count()
-    val ids = spark.range(m).select(col("id").as("i"))
-    val ring = ids.select(
-      col("i").as("u"),
-      pmod(col("i") + 1L, lit(m)).as("v"),
-      (lit(1000L) + pmod(col("i") * 48271L, lit(997L))).as("w"))
-    val chords = ids.filter(pmod(col("i"), lit(5L)) === 0L).select(
-      col("i").as("u"),
-      pmod(col("i") + 7L, lit(m)).as("v"),
-      (lit(10000L) + pmod(col("i") * 16807L, lit(9973L))).as("w"))
-    val edges = ring.unionByName(chords)
-    println(s"[profile] boruvka: n=$m nodes, ~${m + m / 5} edges ($dir)")
-    for (prune <- Seq(false, true); run <- 1 to 2) {
-      time(s"boruvka pruneEdges=$prune run $run") {
-        graft.operators.Graph.boruvkaMsf(edges, "u", "v", "w", pruneEdges = prune)
-          .agg(count(lit(1)), sum(col("w")))
-          .write.format("noop").mode("overwrite").save()
-      }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    val best = samples.minBy(_._2.wall)._1
+    // bounded wait: the event is posted on the listener bus after the write
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+    var plan = Option.empty[SparkPlan]
+    while (plan.isEmpty && System.nanoTime() < deadline)
+      Option(written.poll(1, TimeUnit.SECONDS)).collect { case (`best`, qe) => qe }
+        .foreach(qe => plan = Some(qe.executedPlan))
+    plan match {
+      case None => println(s"[profile] no plan captured for run $best")
+      case Some(p) =>
+        println(s"[profile] operators of run $best (final plan):")
+        operators(p).foreach { case (depth, op) =>
+          val ms = op.metrics.toSeq.sortBy(_._1).collect { case (k, m) if m.value > 0 =>
+            s"$k=${m.value}${units.getOrElse(m.metricType, "")}"
+          }
+          println("  " * (depth + 1) + op.nodeName + (if (ms.isEmpty) "" else ms.mkString(" [", ", ", "]")))
+        }
     }
-    spark.stop()
-  }
-
-  /** Stage timing for the q90 LM-surprisal pipeline. */
-  def q90(dir: String): Unit = {
-    import graft.text.TextFunctions
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    for (i <- 1 to 2) {
-      val lm = time(s"run $i: trainCharLm (half corpus)")(
-        TextFunctions.trainCharLm(d.filter(col("doc_id") % 2 === 0), "text"))
-      time(s"run $i: gram explode+count only") {
-        d.select(col("doc_id"), TextFunctions.normalize(col("text")).as("__graft_norm"))
-          .select(col("doc_id"), explode_outer(TextFunctions.charNgramsStrict(col("__graft_norm"), 3)).as("g"))
-          .groupBy("doc_id").agg(count(col("g")))
-          .write.format("noop").mode("overwrite").save()
-      }
-      time(s"run $i: full lmSurprisalScores")(
-        TextFunctions.lmSurprisalScores(d, "doc_id", "text", lm)
-          .write.format("noop").mode("overwrite").save())
-    }
-    spark.stop()
-  }
-
-  /** gramVectors-only timing (the stage the r18 fused kernel rewrote) —
-    * 3 warm noop runs. GRAFT_AB_EXTRA_REPART=1 appends the gram
-    * repartition the PRE-r18 cosinePairs added outside gramVectors, so an
-    * old-classes run times the same total work as a new-classes run. */
-  def gramOnly(dir: String): Unit = {
-    import graft.text.ApssJoin
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val extraRepart = sys.env.get("GRAFT_AB_EXTRA_REPART").contains("1")
-    for (i <- 1 to 3)
-      time(s"gramVectors run $i") {
-        val v = ApssJoin.gramVectors(docs, "doc_id", "text", 3, 1000L)
-        val out = if (extraRepart) v.repartition(32, col("gram")) else v
-        out.write.format("noop").mode("overwrite").save()
-      }
-    spark.stop()
-  }
-
-  /** Stage timing for the q128 APSS pipeline (prefix-filter diagnostics). */
-  def apss(dir: String): Unit = {
-    import graft.text.ApssJoin
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val vecs = time("gramVectors") {
-      // gramVectors repartitions by gram internally (r18)
-      val v = ApssJoin.gramVectors(docs, "doc_id", "text", 3, 1000L).cache()
-      println("  vec rows=" + v.count()); v
-    }
-    val idx = time("prefixIndex") {
-      val i = ApssJoin.prefixIndex(vecs, "doc_id", 4L, 5L).cache()
-      println("  idx rows=" + i.count()); i
-    }
-    val cands = time("candidates") {
-      val c = idx.select(col("gram"), col("doc_id").as("id_a"))
-        .join(vecs.select(col("gram"), col("doc_id").as("id_b")), Seq("gram"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct().cache()
-      println("  cands=" + c.count()); c
-    }
-    cands.unpersist(); idx.unpersist(); vecs.unpersist()
-    time("full cosinePairs")(println("  pairs=" +
-      ApssJoin.cosinePairs(docs, "doc_id", "text", 3, 4L, 5L, 1000L).count()))
-    spark.stop()
-  }
-
-  /** Stage timing for the q69 clustering pipeline. */
-  def q69(dir: String): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text")).filter(col("doc_id") < 2000)
-    def clip(n: Int, offset: Long) = d.select(
-      (col("doc_id") + offset).as("doc_id"),
-      array_join(slice(split(trim(col("text")), "\\s+"), lit(1), size(split(trim(col("text")), "\\s+")) - n), " ")
-        .as("text"))
-    val corpus = d.unionByName(clip(1, 1000000L)).unionByName(clip(2, 2000000L))
-    val pairs = Dedup
-      .minhashNearDuplicates(corpus, "doc_id", "text", 16, 4, 3, 0.8).cache()
-    time("pairs")(println("  pairs=" + pairs.count()))
-    val clusters = Dedup.duplicateClusters(pairs)
-    time("clusters")(println("  nodes=" + clusters.count()))
-    time("histogram")(
-      clusters.groupBy(col("root")).agg(count(lit(1)).as("csize"))
-        .groupBy(col("csize")).agg(count(lit(1))).collect().foreach(println))
     spark.stop()
   }
 }

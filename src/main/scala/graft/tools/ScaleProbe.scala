@@ -1,5 +1,6 @@
 package graft.tools
 
+import scala.collection.immutable.VectorMap
 import org.apache.spark.sql.SparkSession
 
 /** Scale-exponent stress gate: measures how the heaviest catalog operators
@@ -616,14 +617,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--synthesize")) {
       val Array(_, src, dst, k) = args.take(4)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString)
-      val s = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = Harness.session()
       synthesize(s, src, dst, k.toInt)
       s.stop()
       return
@@ -633,22 +627,9 @@ object ScaleProbe {
     val outFile = args.lift(2).getOrElse("SCALE.json")
     // growth factor between the two directories' data volumes; sf encodes it
     val factor = args.lift(3).map(_.toDouble).getOrElse(10.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup (JIT/codegen/parquet-reader init)
-    try graft.SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    val spark = Harness.session()
+    Harness.warmUp(spark)
     // untimed first-touch of EVERY table on BOTH sides: the big side is
     // typically a freshly synthesized directory, and without this the
     // first probe in the list pays its cold page-cache read inside its
@@ -660,29 +641,14 @@ object ScaleProbe {
       val tables = Option(d.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
       tables.foreach { t =>
-        try spark.read.parquet(t).write.format("noop").mode("overwrite").save()
+        try Harness.noop(spark.read.parquet(t))
         catch { case _: Throwable => () }
       }
     }
 
     val catalog = graft.SparkEntry.queries
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // min-of-N steady-state time, like Bench (cold runs measure JIT noise)
-    def timeOne(name: String, dir: String): Double = {
-      val fn = catalog.getOrElse(name, probeOnly(name))
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        // localCheckpoint RDDs created inside probed queries aren't covered
-        // by clearCache — without this they accrue block-manager memory
-        // across 21 probes × N runs and starve the late big-side probes
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        dt
-      }.min
-    }
+    def timeOne(name: String, dir: String): Double =
+      Harness.minWall(spark, runs)(catalog.getOrElse(name, probeOnly(name))(spark, dir))
 
     // dev iteration: 5th arg = comma-separated probe filter (the driver
     // and Doctor never pass it → full list)
@@ -692,7 +658,7 @@ object ScaleProbe {
       // a probe that THROWS (an overflow the big side exposes is itself a
       // scale finding — q323's rho_b BIGINT moments did exactly that) must
       // record a failed row, not kill the remaining probes and the artifact
-      try {
+      val (tSmall, tBig, exponent, pass, err) = try {
         val tSmall = timeOne(name, smallDir)
         val tBig = timeOne(name, bigDir)
         // subtract nothing, declare honestly: overhead at the small size can
@@ -702,29 +668,23 @@ object ScaleProbe {
         System.err.println(
           f"[scale] $name%-24s small=${tSmall}%6.2fs big=${tBig}%6.2fs " +
             f"exp=$exponent%5.2f bound=$bound%4.2f ${if (pass) "ok" else "FAIL"}")
-        (name, tSmall, tBig, exponent, bound, pass, None: Option[String])
+        (tSmall, tBig, exponent, pass, None)
       } catch {
         case e: Throwable =>
-          val msg = (s"${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("")).replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
+          val msg = (s"${e.getClass.getSimpleName}: " + Option(e.getMessage).getOrElse("")).take(200)
           System.err.println(f"[scale] $name%-24s ERROR $msg")
-          (name, 0.0, 0.0, 0.0, bound, false, Some(msg))
+          (0.0, 0.0, 0.0, false, Some(msg))
       }
+      (name, pass, VectorMap("t_small" -> Harness.dec(tSmall, 3), "t_big" -> Harness.dec(tBig, 3),
+        "exponent" -> Harness.dec(exponent, 3), "bound" -> bound, "pass" -> pass) ++
+        err.map("error" -> _))
     }
-    val allPass = results.forall(_._6)
-    val body = results.map { case (n, ts, tb, e, b, p, err) =>
-      s""""$n":{"t_small":${fmt(ts)},"t_big":${fmt(tb)},"exponent":${fmt(e)},""" +
-        s""""bound":$b,"pass":$p${err.map(m => s""","error":"$m"""").getOrElse("")}}"""
-    }.mkString("{", ",", "}")
-    val json =
-      s"""{"small":"$smallDir","big":"$bigDir","factor":$factor,"runs":$runs,""" +
-        s""""probes":$body,"pass":$allPass}"""
-    // a filtered dev run must never clobber the full-gate artifact
-    // (the bench_detail.json lesson) — partials land in a sidecar
-    val outPath = if (only.isDefined) outFile + ".partial" else outFile
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")
+    val allPass = results.forall(_._2)
+    val out = VectorMap("small" -> smallDir, "big" -> bigDir, "factor" -> factor, "runs" -> runs,
+      "probes" -> results.map(r => r._1 -> r._3).to(VectorMap), "pass" -> allPass)
+    Harness.writeArtifact(outFile, out, filtered = only.isDefined)
     spark.stop()
-    println(json)
+    println(Harness.render(out))
     if (!allPass) sys.exit(1)
   }
 }

@@ -7,21 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local session for all specs (one JVM-wide session keeps the suite
   * fast; specs only create tiny in-memory frames). */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = graft.tools.Harness.session(cores = 4, logLevel = "ERROR")
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
