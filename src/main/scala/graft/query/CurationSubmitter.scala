@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Aggregation, DimensionFilter}
+import graft.registry.Registry
+import graft.sources.Readers
 import graft.text.{Dedup, Sampling, TextFunctions}
 import CurationModels._
 
@@ -44,26 +46,11 @@ final class CurationSubmitter(
     * mtime) file listing — any rewrite of the input invalidates every
     * cache and checkpoint key derived from it (the same discipline as
     * `Registry.contentToken`; metadata-only, no data read). */
-  def inputToken(table: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(s"$dataDir/$table.parquet")
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) "missing"
-    else if (fs.getFileStatus(hp).isFile) {
-      val st = fs.getFileStatus(hp)
-      Models.contentHash(s"${st.getPath}|${st.getLen}|${st.getModificationTime}")
-    } else {
-      val it = fs.listFiles(hp, true)
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val st = it.next()
-        entries += s"${st.getPath}|${st.getLen}|${st.getModificationTime}"
-      }
-      Models.contentHash(entries.sorted.mkString("\n"))
-    }
-  }
+  def inputToken(table: String): String =
+    Registry.treeToken(spark, s"$dataDir/$table.parquet").getOrElse("missing")
 
   private def load(table: String): DataFrame =
-    spark.read.parquet(s"$dataDir/$table.parquet")
+    Readers.parquet(spark, s"$dataDir/$table.parquet")
 
   // ------------------------------------------------------------------
   // validation — fail fast, before any Spark job (the Submitter rule:

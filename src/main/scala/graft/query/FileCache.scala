@@ -1,6 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Readers
 
 /** Content-hash-keyed parquet result cache shared by the project-query and
   * curation submitters (ref: the reference's cached_tables layout,
@@ -25,7 +26,7 @@ private[query] object FileCache {
   def cached(spark: SparkSession, base: String, key: String)(build: => DataFrame): DataFrame = {
     val keyDir = s"$base/$key"
     val path = s"$keyDir/table.parquet"
-    if (exists(spark, path)) spark.read.parquet(path)
+    if (exists(spark, path)) Readers.parquet(spark, path)
     else {
       val tmpName = s".tmp_${key}_${java.util.UUID.randomUUID().toString.take(8)}"
       val tmp = s"$base/$tmpName"
@@ -38,7 +39,7 @@ private[query] object FileCache {
       if (!fs.rename(tmpPath, finalPath)) fs.delete(tmpPath, true)
       val nested = new org.apache.hadoop.fs.Path(finalPath, tmpName)
       if (fs.exists(nested)) fs.delete(nested, true)
-      spark.read.parquet(path)
+      Readers.parquet(spark, path)
     }
   }
 }

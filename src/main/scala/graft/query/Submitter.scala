@@ -7,6 +7,7 @@ import graft.core.Constants._
 import graft.operators.{Aggregation => AggOps, DatasetExpr, DimensionFilter, MappingKernel, PreFilter, Reshape}
 import graft.functions.Units
 import graft.registry.Registry
+import graft.sources.Readers
 import graft.time.TimeZones
 import Models._
 
@@ -420,7 +421,7 @@ final class Submitter(
     val dir = s"${registry.root}/composite_datasets/$id"
     val df = combine(datasets)
     df.write.mode("overwrite").parquet(s"$dir/table.parquet")
-    writeText(s"$dir/metadata.json", metadataJson(id, spark.read.parquet(s"$dir/table.parquet")))
+    writeText(s"$dir/metadata.json", metadataJson(id, Readers.parquet(spark, s"$dir/table.parquet")))
   }
 
   /** The metadata sidecar of a composite dataset, parsed. */
@@ -462,7 +463,7 @@ final class Submitter(
         s"(known: ${listCompositeDatasets().mkString(", ")})")
     validateResult(s"composite:$id", result)
     postProcess(
-      spark.read.parquet(s"${registry.root}/composite_datasets/$id/table.parquet"),
+      Readers.parquet(spark, s"${registry.root}/composite_datasets/$id/table.parquet"),
       result)
   }
 

@@ -30,16 +30,9 @@ object DerivedArtifacts {
     * (path, length, mtime) listing, hashed; any rewrite of the dataset
     * changes it (the per-dataset analogue of `Registry.contentToken`). */
   def datasetToken(reg: Registry, datasetId: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(s"${reg.root}/datasets/$datasetId")
-    val fs = hp.getFileSystem(reg.spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(hp), s"datasetToken: no such dataset '$datasetId'")
-    val it = fs.listFiles(hp, true)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      entries += s"${st.getPath}|${st.getLen}|${st.getModificationTime}"
-    }
-    graft.query.Models.contentHash(entries.sorted.mkString("\n"))
+    val token = Registry.treeToken(reg.spark, s"${reg.root}/datasets/$datasetId")
+    require(token.isDefined, s"datasetToken: no such dataset '$datasetId'")
+    token.get
   }
 
   /** (source_token, params_token) recorded when the artifact was built. */

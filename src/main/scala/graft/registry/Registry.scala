@@ -1,6 +1,7 @@
 package graft.registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Readers
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -26,7 +27,7 @@ final case class Registry(spark: SparkSession, root: String) {
   private def path(parts: String*): String = (root +: parts).mkString("/")
 
   def dimensionRecords(name: String): DataFrame =
-    spark.read.parquet(path("dimensions", name, "records.parquet"))
+    Readers.parquet(spark, path("dimensions", name, "records.parquet"))
 
   /** The dimension's category (base/subset/supplemental); absent metadata
     * means base (see Registry.registerDimension). */
@@ -41,7 +42,7 @@ final case class Registry(spark: SparkSession, root: String) {
   }
 
   def mapping(name: String): DataFrame =
-    spark.read.parquet(path("mappings", name, "table.parquet"))
+    Readers.parquet(spark, path("mappings", name, "table.parquet"))
 
   /** Declared (from_dimension, to_dimension) endpoints of a mapping — the
     * link the compatibility checkers walk (the reference declares these on
@@ -59,11 +60,11 @@ final case class Registry(spark: SparkSession, root: String) {
   }
 
   def loadData(datasetId: String): DataFrame =
-    spark.read.parquet(path("datasets", datasetId, "load_data.parquet"))
+    Readers.parquet(spark, path("datasets", datasetId, "load_data.parquet"))
 
   def lookup(datasetId: String): Option[DataFrame] = {
     val p = path("datasets", datasetId, "load_data_lookup.parquet")
-    if (hadoopExists(p)) Some(spark.read.parquet(p)) else None
+    if (hadoopExists(p)) Some(Readers.parquet(spark, p)) else None
   }
 
   /** Existence via the Hadoop FS API so the registry tree works on
@@ -113,21 +114,12 @@ final case class Registry(spark: SparkSession, root: String) {
     * the registry tree, folded into query cache keys so any registry
     * mutation invalidates cached results (the reference hashes project
     * version + dataset configs into its key, query_submitter.py:133-171).
-    * Driver-side metadata listing only — no data is read. */
-  def contentToken: String = {
-    val hp = new org.apache.hadoop.fs.Path(root)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) "empty"
-    else {
-      val it = fs.listFiles(hp, true)
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val st = it.next()
-        entries += s"${st.getPath}|${st.getLen}|${st.getModificationTime}"
-      }
-      graft.query.Models.contentHash(entries.sorted.mkString("\n"))
-    }
-  }
+    * Metadata listing only — no data is read. The walk uses
+    * `listStatus`, not `listFiles`, to avoid a `stat` fork per file (see
+    * [[Registry.treeToken]]); it lists the same entries, so the token
+    * string is unchanged and existing cache keys and recorded
+    * `registry_token`s stay valid. */
+  def contentToken: String = Registry.treeToken(spark, root).getOrElse("empty")
 
   def listDatasets(): Seq[String] = list("datasets")
   def listDimensions(): Seq[String] = list("dimensions")
@@ -154,6 +146,29 @@ final case class DatasetFormat(
   * the same checks against whatever context the caller supplies
   * (dimension records, a time spine), with an opt-out for raw writes. */
 object Registry {
+
+  /** Content token of the file or tree at `path`: the hash of its sorted
+    * `path|length|mtime` file entries; None when nothing is there. Any
+    * rewrite of a file under `path` changes it. Metadata only: one
+    * `listStatus` per directory. `FileSystem.listFiles` lists the same
+    * files but builds a `LocatedFileStatus` for each, which loads owner
+    * and permission — on the local filesystem without native Hadoop, one
+    * forked `stat` process per file. */
+  def treeToken(spark: SparkSession, path: String): Option[String] = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(hp)) None
+    else {
+      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
+      def walk(p: org.apache.hadoop.fs.Path): Unit =
+        fs.listStatus(p).foreach { st =>
+          if (st.isDirectory) walk(st.getPath)
+          else entries += s"${st.getPath}|${st.getLen}|${st.getModificationTime}"
+        }
+      walk(hp)
+      Some(graft.query.Models.contentHash(entries.sorted.mkString("\n")))
+    }
+  }
 
   /** Registration inputs: parquet by default, header+inferSchema CSV for
     * `.csv` paths — the ONE reader every registration surface (Scala API,

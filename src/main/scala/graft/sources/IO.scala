@@ -2,10 +2,17 @@ package graft.sources
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import graft.core.{Constants, FileSchema}
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Readers: suffix-dispatched scan with optional declared schema and
   * FileSchema renames/ignores
@@ -13,9 +20,56 @@ import scala.jdk.CollectionConverters._
   * dsgrid/config/file_schema.py:80-190). */
 object Readers {
 
-  /** Parquet scan — Catalyst handles pushdown/pruning; nothing manual. */
+  /** The engine's table opener. `spark.read.parquet` infers the schema
+    * with a one-task Spark job per open. A flat directory of Spark-written
+    * parquet already carries that schema in each data file's footer (the
+    * `org.apache.spark.sql.parquet.row.metadata` key), so it is read
+    * in-process from one footer and given to the reader: no job, and the same
+    * scan (pushdown and pruning stay Catalyst's). Relation resolution makes
+    * a given schema nullable just as it makes an inferred one, so the
+    * opened schema equals the inferred one. Everything else opens with
+    * `spark.read.parquet` unchanged: a missing path, a file or glob,
+    * subdirectories (Hive partitions), summary files, no data file, an
+    * unreadable footer, a footer without Spark's key, or
+    * `spark.sql.parquet.mergeSchema` on. */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The Spark schema in the footer of the directory's first data file, or
+    * None where [[parquet]] falls back. Files are classed as Spark's file
+    * index classes them: names starting with `_` or `.` are not data, but
+    * summary files (`_metadata`, `_common_metadata`) would be read for the
+    * schema, so they force the fallback. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val hp = new HPath(path)
+      val fs = hp.getFileSystem(conf)
+      val mergeSchema = spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean
+      if (mergeSchema || path.exists("{}[]*?\\".contains(_)) || !fs.getFileStatus(hp).isDirectory) None
+      else {
+        val entries = fs.listStatus(hp).toSeq
+        val data = entries.filterNot(st => hiddenFromSpark(st.getPath.getName))
+        val summary = entries.map(_.getPath.getName)
+          .exists(n => n.startsWith("_metadata") || n.startsWith("_common_metadata"))
+        if (summary || data.isEmpty || entries.exists(_.isDirectory)) None
+        else {
+          val reader = ParquetFileReader.open(
+            HadoopInputFile.fromStatus(data.minBy(_.getPath.getName), conf),
+            ParquetReadOptions.builder().withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+          val json = try reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey) finally reader.close()
+          Option(json).map(DataType.fromJson).collect { case st: StructType => st }
+        }
+      }
+    } catch { case NonFatal(_) => None }
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def hiddenFromSpark(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")
 
   /** Header CSV with optional declared schema (infer when absent). */
   def csv(spark: SparkSession, path: String, schema: Option[FileSchema] = None): DataFrame = {
@@ -175,7 +229,7 @@ object Writers {
     val desired = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     val actual = files.length
     if (math.abs(actual - desired).toDouble / desired * 100 >= rtolPct) {
-      val base = spark.read.parquet(path)
+      val base = Readers.parquet(spark, path)
       val rewritten =
         if (actual > desired) base.coalesce(desired)
         else if (columns.nonEmpty) base.repartition(desired, columns.map(org.apache.spark.sql.functions.col): _*)
@@ -307,7 +361,7 @@ object Writers {
     parquet(df, tmp)
     deleteRecursively(Paths.get(path))
     Files.move(Paths.get(tmp), Paths.get(path))
-    spark.read.parquet(path)
+    Readers.parquet(spark, path)
   }
 
   /** Materialize an intermediate to scratch parquet and read it back — cuts
@@ -329,10 +383,10 @@ object Writers {
       // and must be recomputed, not read half-finished
       val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
       val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(marker)) return spark.read.parquet(path)
+      if (fs.exists(marker)) return Readers.parquet(spark, path)
     }
     parquet(df, path)
-    spark.read.parquet(path)
+    Readers.parquet(spark, path)
   }
 
   /** Small-file compaction — the table-maintenance pass every long-lived
@@ -358,7 +412,7 @@ object Writers {
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(hp).getLength
     val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    overwriteInPlace(spark, spark.read.parquet(path).repartition(n), path)
+    overwriteInPlace(spark, Readers.parquet(spark, path).repartition(n), path)
   }
 
   private def listFiles(dir: Path, suffix: String): Seq[Path] =

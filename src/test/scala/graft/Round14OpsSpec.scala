@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Agreement, Drift, GlobalOrder, Graph, RankStats, Survival}
@@ -12,32 +11,6 @@ import graft.operators.{Agreement, Drift, GlobalOrder, Graph, RankStats, Surviva
   * loops against their pre-rewire semantics. */
 class Round14OpsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Count Spark jobs started while `body` runs. Job-start events post
-    * asynchronously, but the timed actions are blocking, so after `body`
-    * returns we only need to wait for the bus to drain: poll until the
-    * counter is stable. */
-  private def countJobs(body: => Unit): Long = {
-    val counter = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1L
-      var stable = 0
-      var spins = 0
-      while (stable < 3 && spins < 50) {
-        val c = counter.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-        Thread.sleep(100)
-        spins += 1
-      }
-      counter.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   test("CheckpointFresh.withCount: one job where checkpoint-then-count was two") {
     val df = viaParquet(Seq.tabulate(100)(i => (i.toLong, i % 7)).toDF("id", "g"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.query.{CurationJson, CurationModels, CurationSubmitter}
@@ -14,30 +13,6 @@ import graft.registry.Registry
   * contract pieces that don't need HTTP (see ApiSpec for the route). */
 class Round17OpsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Count Spark jobs started while `body` runs (the Round14OpsSpec
-    * pattern: events post asynchronously, so poll until stable). */
-  private def countJobs(body: => Unit): Long = {
-    val counter = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1L
-      var stable = 0
-      var spins = 0
-      while (stable < 3 && spins < 50) {
-        val c = counter.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-        Thread.sleep(100)
-        spins += 1
-      }
-      counter.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   /** Tiny corpus with one planted near-dup pair (doc 1 ≈ doc 101: last
     * word dropped from a 12-token text) and unrelated singletons. */

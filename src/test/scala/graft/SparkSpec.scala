@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -41,4 +42,41 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     rows(df).sortBy(_.mkString("|"))
+
+  /** Count the Spark jobs `body` starts. The calling thread carries a
+    * fresh job tag while `body` runs (threads it starts inherit it), and
+    * only jobs with that tag count, so jobs that suites running in
+    * parallel start on the shared context never leak in. Job-start events
+    * post asynchronously, but the timed actions are blocking, so after
+    * `body` returns we only need to wait for the bus to drain: poll until
+    * the counter is stable. */
+  def countJobs(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val tag = s"count-jobs-${java.util.UUID.randomUUID()}"
+    val counter = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(',').contains(tag)))
+          counter.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      body
+      var last = -1L
+      var stable = 0
+      var spins = 0
+      while (stable < 3 && spins < 50) {
+        val c = counter.get()
+        if (c == last) stable += 1 else { stable = 0; last = c }
+        Thread.sleep(100)
+        spins += 1
+      }
+      counter.get()
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
