@@ -3,6 +3,7 @@ package graft
 import graft.core.GraftSession
 import graft.query.{Json, Submitter}
 import graft.registry.Registry
+import graft.sources.HadoopFs
 
 /** Command-line entry point mirroring the reference's CLI surface
   * (ref: dsgrid/cli/query.py — `dsgrid query project run`, registry
@@ -90,8 +91,7 @@ object Cli {
     * tests and multi-registry users stay isolated. */
   private def resolveRoot(root: String): String =
     if (root.startsWith("@")) {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(readFile(root.drop(1)))
+      val node = Json.mapper.readTree(readFile(root.drop(1)))
       val v = node.get("registry_root")
       if (v == null || !v.isTextual)
         throw new IllegalArgumentException(
@@ -158,9 +158,7 @@ object Cli {
             graft.sources.Writers.csv(result, s"$outDir/${plan.name}.csv", singleFile = true)
           else
             graft.sources.Writers.parquetAutoPartition(spark, result, s"$outDir/${plan.name}.parquet")
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/plan.json"), planText)
+          HadoopFs.writeText(spark, s"$outDir/plan.json", planText)
           println(s"wrote $outDir/${plan.name}")
         }
       }
@@ -194,8 +192,7 @@ object Cli {
       val spark = GraftSession.get()
       val reg = Registry(spark, registryRoot)
       val cacheDir = rest.dropWhile(_ != "--cache").drop(1).headOption
-      val queryText = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(queryFile)), "UTF-8")
+      val queryText = readFile(queryFile)
       val submitter = new Submitter(reg, cacheDir)
       val (name, result) =
         if (kind == "project") {
@@ -208,9 +205,7 @@ object Cli {
       else
         graft.sources.Writers.parquetAutoPartition(spark, result, s"$outDir/$name.parquet")
       // query sidecar, as the reference writes beside results
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/query.json"), queryText)
+      HadoopFs.writeText(spark, s"$outDir/query.json", queryText)
       println(s"wrote $outDir/$name")
       0
 
@@ -270,8 +265,7 @@ object Cli {
 
     case "registry" :: "register-bulk" :: registryRoot :: manifestPath :: rest =>
       val spark = GraftSession.get()
-      val manifest = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(manifestPath)), "UTF-8")
+      val manifest = readFile(manifestPath)
       val journal = flagValue(rest, "--journal")
         .getOrElse(manifestPath + ".journal.json")
       val base = java.nio.file.Paths.get(manifestPath).toAbsolutePath.getParent.toString
@@ -348,9 +342,7 @@ object Cli {
         val timeCols = flagValue(rest, "--time-cols")
           .map(_.split(",").toSet.filter(_.nonEmpty)).getOrElse(Set("timestamp"))
         val gen = graft.registry.ConfigGen.generateDatasetConfig(reg, datasetId, data, timeCols)
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outDir/dimensions"))
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/dataset.json"), graft.registry.ConfigGen.toJson(gen))
+        HadoopFs.writeText(spark, s"$outDir/dataset.json", graft.registry.ConfigGen.toJson(gen))
         gen.newRecords.foreach { case (c, recs) =>
           graft.sources.Writers.csv(recs, s"$outDir/dimensions/$c.csv", singleFile = true)
         }

@@ -7,6 +7,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.DataFrame
 import graft.query.{Json, Submitter}
 import graft.registry.Registry
+import graft.sources.HadoopFs
 
 /** Read-only HTTP surface over a registry + async-style query submission —
   * the ancillary API the reference exposes via FastAPI
@@ -101,7 +102,7 @@ final class Api(
     val finished = new scala.collection.mutable.ArrayBuffer[(String, Long)]()
     def drop(id: String): Unit = {
       jobs.remove(id) match {
-        case DoneFile(p, _) => deleteRecursively(new java.io.File(p).getParentFile)
+        case DoneFile(p, _) => HadoopFs.delete(registry.spark, new java.io.File(p).getParent)
         case _ =>
       }
     }
@@ -115,11 +116,6 @@ final class Api(
     }
     if (finished.size > maxCompletedJobs)
       finished.sortBy(_._2).dropRight(maxCompletedJobs).foreach { case (id, _) => drop(id) }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = if (f != null && f.exists()) {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
   }
 
   def start(port: Int = 0): Int = {
@@ -188,9 +184,9 @@ final class Api(
             respond(ex, 404, s"""{"error": ${quote(s"unknown dataset: $id")}}""")
           else {
             val p = s"${registry.root}/datasets/$id/provenance.json"
-            if (!registry.hadoopExists(p))
+            if (!HadoopFs.exists(registry.spark, p))
               respond(ex, 404, s"""{"error": ${quote(s"dataset '$id' has no provenance sidecar")}}""")
-            else respond(ex, 200, graft.sources.HadoopText.read(registry.spark, p))
+            else respond(ex, 200, HadoopFs.readText(registry.spark, p))
           }
         }
         else if (rest.endsWith("/card")) {
@@ -391,7 +387,7 @@ final class Api(
   private def respondFile(ex: HttpExchange, path: String): Unit = {
     val f = new java.io.File(path)
     // Open the descriptor BEFORE any header write: TTL eviction runs on
-    // every async submit and may deleteRecursively this spool directory
+    // every async submit and may delete this spool directory
     // mid-request — an open fd survives the unlink (POSIX), while a
     // path-based Files.copy would throw AFTER headers were sent,
     // truncating the download (r16 ADVICE item 3). Length comes from the
@@ -442,12 +438,11 @@ final class Api(
       }
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       try {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
-        val dataDir = Option(root.get("data_dir")).filterNot(_.isNull).map(_.asText())
-          .getOrElse(throw new IllegalArgumentException("missing required field: data_dir"))
+        val root = Json.mapper.readTree(body)
+        val dataDir = Json.str(root, "data_dir")
         val planNode = Option(root.get("plan")).filterNot(_.isNull)
           .getOrElse(throw new IllegalArgumentException("missing required field: plan"))
-        val cacheDir = Option(root.get("cache_dir")).filterNot(_.isNull).map(_.asText())
+        val cacheDir = Json.optStr(root, "cache_dir")
         val plan = graft.query.CurationJson.parse(planNode.toString)
         val sub = new graft.query.CurationSubmitter(registry.spark, dataDir, cacheDir)
         // "validate_only": true → the dry-run schema walk (per-stage

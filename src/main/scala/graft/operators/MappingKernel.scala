@@ -111,19 +111,6 @@ object MappingKernel {
   def joinLookup(loadData: DataFrame, lookup: DataFrame, idColumn: String = "id"): DataFrame =
     loadData.join(broadcast(lookup), Seq(idColumn), "inner").drop(idColumn)
 
-  /** Add a column from dimension records by id — e.g. geography time_zone or
-    * display name (ref: dsgrid/utils/dataset.py:83-120). */
-  def addRecordAttribute(
-      df: DataFrame,
-      dimColumn: String,
-      records: DataFrame,
-      attribute: String,
-      as: Option[String] = None): DataFrame = {
-    val out = as.getOrElse(attribute)
-    val rec = broadcast(records.select(col("id").as("__graft_rec_id"), col(attribute).as(out)))
-    df.join(rec, df(dimColumn) === col("__graft_rec_id"), "left").drop("__graft_rec_id")
-  }
-
   /** Replace dimension ids with display names (ref:
     * table_format_handler_base.py:163-179). */
   def idsToNames(df: DataFrame, dimColumn: String, records: DataFrame): DataFrame = {

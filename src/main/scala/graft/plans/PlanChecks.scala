@@ -74,11 +74,4 @@ object PlanChecks {
     flatten(df).collect { case s: FileSourceScanExec =>
       s.partitionFilters.map(_.sql)
     }.flatten
-
-  /** Each parquet scan's "number of files read" metric — call AFTER an
-    * action has run the plan. This is the MEASURED side of dynamic
-    * partition pruning: the planned DynamicPruningSubquery is a shape
-    * claim, the shrunken file count is the effect. */
-  def scanFileCounts(df: DataFrame): Seq[Long] =
-    flatten(df).collect { case s: FileSourceScanExec => s.metrics("numFiles").value }
 }

@@ -592,7 +592,7 @@ private[graft] object Catalog7 {
       val raw = s.read.parquet(s"$dir/events.parquet")
       val scratch = s.conf.get("spark.local.dir", "/tmp") +
         "/graft_q190_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      graft.sources.Writers.deleteRecursively(java.nio.file.Paths.get(scratch))
+      graft.sources.HadoopFs.delete(s, scratch)
       val srcDir = s"$scratch/src"
       raw.repartition(4, col("event_id")).write.parquet(srcDir)
       val stream = s.readStream.schema(raw.schema)
@@ -750,7 +750,7 @@ private[graft] object Catalog7 {
       import graft.sources.Skipping
       val scratch = s.conf.get("spark.local.dir", "/tmp") +
         "/graft_q194_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      graft.sources.Writers.deleteRecursively(java.nio.file.Paths.get(scratch))
+      graft.sources.HadoopFs.delete(s, scratch)
       t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
         .repartitionByRange(8, col("o_totalprice"))

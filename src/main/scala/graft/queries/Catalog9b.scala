@@ -1041,7 +1041,7 @@ private[graft] object Catalog9b {
       val raw = s.read.parquet(s"$dir/events.parquet")
       val scratch = s.conf.get("spark.local.dir", "/tmp") +
         "/graft_q267_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      graft.sources.Writers.deleteRecursively(java.nio.file.Paths.get(scratch))
+      graft.sources.HadoopFs.delete(s, scratch)
       val srcDir = s"$scratch/src"
       raw.select(col("event_id"), col("user_id")).repartition(4, col("event_id"))
         .write.parquet(srcDir)

@@ -1,12 +1,11 @@
 package graft.query
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
-import scala.jdk.CollectionConverters._
 
 import CurationModels._
 
-/** JSON codec for curation plans — same dialect discipline as [[Json]]
+/** JSON codec for curation plans — [[Json]]'s mapper and dialect
   * (JSON5 comments/trailing commas accepted on parse; render emits plain
   * JSON the parser round-trips), with `stage_type` as the stage
   * discriminator, mirroring the reference's discriminated unions
@@ -15,12 +14,7 @@ import CurationModels._
   * project-query and curation surfaces. */
 object CurationJson {
 
-  private val mapper = {
-    val m = new ObjectMapper()
-    m.enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_COMMENTS)
-    m.enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_TRAILING_COMMA.mappedFeature())
-    m
-  }
+  import Json.{arr, mapper, optStr, str}
 
   def parse(json: String): CurationPlan = {
     val n = mapper.readTree(json)
@@ -302,16 +296,4 @@ object CurationJson {
 
   private def optDouble(n: JsonNode, field: String): Option[Double] =
     Option(n.get(field)).filterNot(_.isNull).map(_.asDouble())
-
-  private def str(n: JsonNode, field: String): String = {
-    val v = n.get(field)
-    require(v != null && !v.isNull, s"missing required field: $field")
-    v.asText()
-  }
-
-  private def optStr(n: JsonNode, field: String): Option[String] =
-    Option(n.get(field)).filterNot(_.isNull).map(_.asText())
-
-  private def arr(n: JsonNode, field: String): Seq[JsonNode] =
-    Option(n.get(field)).filterNot(_.isNull).map(_.elements().asScala.toSeq).getOrElse(Nil)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Aggregation, DimensionFilter}
 import graft.registry.Registry
-import graft.sources.Readers
+import graft.sources.{HadoopFs, Readers}
 import graft.text.{Dedup, Sampling, TextFunctions}
 import CurationModels._
 
@@ -69,7 +69,7 @@ final class CurationSubmitter(
     * CLI's `--dry-run` and the API's `"validate_only"` surface this. */
   def explain(plan: CurationPlan): Seq[(String, Seq[String], Boolean)] = {
     require(plan.stages.nonEmpty, s"plan '${plan.name}': no stages")
-    require(FileCache.exists(spark, s"$dataDir/${plan.input}.parquet"),
+    require(HadoopFs.exists(spark, s"$dataDir/${plan.input}.parquet"),
       s"plan '${plan.name}': input table '${plan.input}' not found under $dataDir")
     var cols = load(plan.input).columns.toSet
     def need(c: String, what: String): Unit =
@@ -128,7 +128,7 @@ final class CurationSubmitter(
         need(st.idColumn, "id"); need(st.textColumn, "text")
         require(st.ngram >= 1, s"plan '${plan.name}': decontaminate ngram must be >= 1")
         require(st.minHits >= 1, s"plan '${plan.name}': decontaminate min_hits must be >= 1")
-        require(FileCache.exists(spark, s"$dataDir/${st.benchmarkInput}.parquet"),
+        require(HadoopFs.exists(spark, s"$dataDir/${st.benchmarkInput}.parquet"),
           s"plan '${plan.name}': benchmark table '${st.benchmarkInput}' not found under $dataDir")
         val benchCols = load(st.benchmarkInput).columns.toSet
         for (c <- Seq(st.idColumn, st.textColumn))
@@ -164,7 +164,7 @@ final class CurationSubmitter(
           s"plan '${plan.name}': semantic_dedup threshold in (0,1]: ${st.threshold}")
         require(st.rowsPerCentroid >= 1,
           s"plan '${plan.name}': semantic_dedup rows_per_centroid must be >= 1")
-        require(FileCache.exists(spark, s"$dataDir/${st.embeddingInput}.parquet"),
+        require(HadoopFs.exists(spark, s"$dataDir/${st.embeddingInput}.parquet"),
           s"plan '${plan.name}': embedding table '${st.embeddingInput}' not found under $dataDir")
         val embCols = load(st.embeddingInput).columns.toSet
         for (c <- Seq(st.embeddingIdColumn, st.embeddingColumn))
@@ -425,15 +425,11 @@ final class CurationSubmitter(
       reg: graft.registry.Registry, datasetId: String, plan: CurationPlan): DataFrame = {
     val result = submit(plan)
     graft.registry.Registry.registerDataset(reg, datasetId, result, validate = false)
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val n = m.createObjectNode()
-    n.put("dataset_id", datasetId)
-    n.put("input_token", inputToken(plan.input))
-    n.set[com.fasterxml.jackson.databind.JsonNode]("plan",
-      m.readTree(CurationJson.render(plan)))
-    graft.sources.HadoopText.write(spark,
-      s"${reg.root}/datasets/$datasetId/curation.json",
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(n))
+    HadoopFs.writeJson(spark, s"${reg.root}/datasets/$datasetId/curation.json") { n =>
+      n.put("dataset_id", datasetId)
+      n.put("input_token", inputToken(plan.input))
+      n.set[com.fasterxml.jackson.databind.JsonNode]("plan", Json.mapper.readTree(CurationJson.render(plan)))
+    }
     reg.loadData(datasetId)
   }
 
@@ -445,19 +441,17 @@ final class CurationSubmitter(
 
   private def writeSidecars(
       keyDir: String, plan: CurationPlan, token: String, df: DataFrame): Unit =
-    if (!FileCache.exists(spark, s"$keyDir/plan.json")) {
-      graft.sources.HadoopText.write(spark, s"$keyDir/plan.json", CurationJson.render(plan))
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val n = m.createObjectNode()
-      n.put("name", plan.name)
-      n.put("input", plan.input)
-      // provenance: which input state produced this result (the cache key
-      // is a one-way hash — without this the entry is unattributable
-      // after the input changes)
-      n.put("input_token", token)
-      val cols = n.putArray("columns")
-      df.columns.foreach(cols.add)
-      graft.sources.HadoopText.write(spark, s"$keyDir/metadata.json",
-        m.writerWithDefaultPrettyPrinter().writeValueAsString(n))
+    if (!HadoopFs.exists(spark, s"$keyDir/plan.json")) {
+      HadoopFs.writeText(spark, s"$keyDir/plan.json", CurationJson.render(plan))
+      HadoopFs.writeJson(spark, s"$keyDir/metadata.json") { n =>
+        n.put("name", plan.name)
+        n.put("input", plan.input)
+        // provenance: which input state produced this result (the cache key
+        // is a one-way hash — without this the entry is unattributable
+        // after the input changes)
+        n.put("input_token", token)
+        val cols = n.putArray("columns")
+        df.columns.foreach(cols.add)
+      }
     }
 }

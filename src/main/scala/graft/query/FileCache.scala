@@ -1,7 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.Readers
+import graft.sources.{HadoopFs, Readers}
 
 /** Content-hash-keyed parquet result cache shared by the project-query and
   * curation submitters (ref: the reference's cached_tables layout,
@@ -12,11 +12,6 @@ import graft.sources.Readers
   * same as local disk. */
 private[query] object FileCache {
 
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Read `<base>/<key>/table.parquet` if present, else build + publish.
     * Losing the rename race to a concurrent submitter is fine — read
     * theirs. Careful: Hadoop rename into an EXISTING directory nests the
@@ -26,19 +21,14 @@ private[query] object FileCache {
   def cached(spark: SparkSession, base: String, key: String)(build: => DataFrame): DataFrame = {
     val keyDir = s"$base/$key"
     val path = s"$keyDir/table.parquet"
-    if (exists(spark, path)) Readers.parquet(spark, path)
+    if (HadoopFs.exists(spark, path)) Readers.parquet(spark, path)
     else {
       val tmpName = s".tmp_${key}_${java.util.UUID.randomUUID().toString.take(8)}"
+      // the tmp dir sits beside the entry, so the rename's parent exists
       val tmp = s"$base/$tmpName"
       build.write.mode("overwrite").parquet(s"$tmp/table.parquet")
-      val conf = spark.sparkContext.hadoopConfiguration
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      val finalPath = new org.apache.hadoop.fs.Path(keyDir)
-      val fs = finalPath.getFileSystem(conf)
-      fs.mkdirs(finalPath.getParent)
-      if (!fs.rename(tmpPath, finalPath)) fs.delete(tmpPath, true)
-      val nested = new org.apache.hadoop.fs.Path(finalPath, tmpName)
-      if (fs.exists(nested)) fs.delete(nested, true)
+      if (!HadoopFs.rename(spark, tmp, keyDir)) HadoopFs.delete(spark, tmp)
+      HadoopFs.delete(spark, s"$keyDir/$tmpName")
       Readers.parquet(spark, path)
     }
   }

@@ -16,7 +16,9 @@ object Json {
   // Accept the JSON5 conveniences the reference's query files actually use
   // (ref: .json5 query documents): // and /* */ comments, trailing commas.
   // Full JSON5 (unquoted keys, single quotes) is not needed by the corpus.
-  private val mapper = {
+  // The engine's one mapper: curation plans, bulk manifests, API bodies and
+  // every sidecar (via graft.sources.HadoopFs) parse and render through it.
+  private[graft] val mapper = {
     val m = new ObjectMapper()
     m.enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_COMMENTS)
     m.enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_TRAILING_COMMA.mappedFeature())
@@ -328,15 +330,15 @@ object Json {
     else if (n.isBoolean) n.asBoolean()
     else n.asText()
 
-  private def str(n: JsonNode, field: String): String = {
+  private[graft] def str(n: JsonNode, field: String): String = {
     val v = n.get(field)
     require(v != null && !v.isNull, s"missing required field: $field")
     v.asText()
   }
 
-  private def optStr(n: JsonNode, field: String): Option[String] =
+  private[graft] def optStr(n: JsonNode, field: String): Option[String] =
     Option(n.get(field)).filterNot(_.isNull).map(_.asText())
 
-  private def arr(n: JsonNode, field: String): Seq[JsonNode] =
+  private[graft] def arr(n: JsonNode, field: String): Seq[JsonNode] =
     Option(n.get(field)).filterNot(_.isNull).map(_.elements().asScala.toSeq).getOrElse(Nil)
 }

@@ -7,7 +7,7 @@ import graft.core.Constants._
 import graft.operators.{Aggregation => AggOps, DatasetExpr, DimensionFilter, MappingKernel, PreFilter, Reshape}
 import graft.functions.Units
 import graft.registry.Registry
-import graft.sources.Readers
+import graft.sources.{HadoopFs, Readers}
 import graft.time.TimeZones
 import Models._
 
@@ -421,19 +421,17 @@ final class Submitter(
     val dir = s"${registry.root}/composite_datasets/$id"
     val df = combine(datasets)
     df.write.mode("overwrite").parquet(s"$dir/table.parquet")
-    writeText(s"$dir/metadata.json", metadataJson(id, Readers.parquet(spark, s"$dir/table.parquet")))
+    HadoopFs.writeJson(spark, s"$dir/metadata.json")(metadata(id, Readers.parquet(spark, s"$dir/table.parquet")))
   }
 
   /** The metadata sidecar of a composite dataset, parsed. */
   def compositeMetadata(id: String): Map[String, Any] = {
-    val text = readText(s"${registry.root}/composite_datasets/$id/metadata.json")
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-    import scala.jdk.CollectionConverters._
+    val n = Json.mapper.readTree(HadoopFs.readText(spark, s"${registry.root}/composite_datasets/$id/metadata.json"))
     Map(
-      "name" -> n.get("name").asText(),
-      "value_column" -> n.get("value_column").asText(),
-      "dimension_columns" -> n.get("dimension_columns").elements().asScala.map(_.asText()).toSeq,
-      "columns" -> n.get("columns").elements().asScala.map(_.asText()).toSeq)
+      "name" -> Json.str(n, "name"),
+      "value_column" -> Json.str(n, "value_column"),
+      "dimension_columns" -> Json.arr(n, "dimension_columns").map(_.asText()),
+      "columns" -> Json.arr(n, "columns").map(_.asText()))
   }
 
   /** Promote a query result to a registered derived dataset other queries
@@ -450,15 +448,11 @@ final class Submitter(
   }
 
   /** Registered composite-dataset ids (directories with a table). */
-  def listCompositeDatasets(): Seq[String] = {
-    val hp = new org.apache.hadoop.fs.Path(s"${registry.root}/composite_datasets")
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) Nil
-    else fs.listStatus(hp).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
-  }
+  def listCompositeDatasets(): Seq[String] =
+    HadoopFs.subdirs(spark, s"${registry.root}/composite_datasets")
 
   def submitComposite(id: String, result: ResultSection): DataFrame = {
-    require(registry.hadoopExists(s"${registry.root}/composite_datasets/$id/table.parquet"),
+    require(HadoopFs.exists(spark, s"${registry.root}/composite_datasets/$id/table.parquet"),
       s"submitComposite('$id'): no such composite dataset " +
         s"(known: ${listCompositeDatasets().mkString(", ")})")
     validateResult(s"composite:$id", result)
@@ -494,18 +488,16 @@ final class Submitter(
       reports: Seq[(String, DataFrame)]): Unit =
     for (dir <- cacheDir) {
       val keyDir = s"$dir/cached_tables/$key"
-      if (!registry.hadoopExists(s"$keyDir/query.json")) {
-        writeText(s"$keyDir/query.json", renderedQuery)
-        writeText(s"$keyDir/metadata.json", metadataJson(name, df))
+      if (!HadoopFs.exists(spark, s"$keyDir/query.json")) {
+        HadoopFs.writeText(spark, s"$keyDir/query.json", renderedQuery)
+        HadoopFs.writeJson(spark, s"$keyDir/metadata.json")(metadata(name, df))
       }
       for ((rname, rdf) <- reports)
-        if (!registry.hadoopExists(s"$keyDir/reports/$rname.parquet"))
+        if (!HadoopFs.exists(spark, s"$keyDir/reports/$rname.parquet"))
           rdf.write.mode("overwrite").parquet(s"$keyDir/reports/$rname.parquet")
     }
 
-  private def metadataJson(name: String, df: DataFrame): String = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val n = m.createObjectNode()
+  private def metadata(name: String, df: DataFrame)(n: com.fasterxml.jackson.databind.node.ObjectNode): Unit = {
     n.put("name", name)
     // provenance: which registry state produced this result (the cache key
     // is a one-way hash, so without this the entry is unattributable after
@@ -522,12 +514,5 @@ final class Submitter(
       .foreach(dims.add)
     val cols = n.putArray("columns")
     df.columns.foreach(cols.add)
-    m.writerWithDefaultPrettyPrinter().writeValueAsString(n)
   }
-
-  private def writeText(path: String, text: String): Unit =
-    graft.sources.HadoopText.write(spark, path, text)
-
-  private def readText(path: String): String =
-    graft.sources.HadoopText.read(spark, path)
 }

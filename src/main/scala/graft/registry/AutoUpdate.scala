@@ -115,7 +115,7 @@ object AutoUpdate {
       ids: DataFrame,
       dimensionName: String,
       path: String): Boolean = {
-    if (!reg.hadoopExists(path)) return false
+    if (!graft.sources.HadoopFs.exists(reg.spark, path)) return false
     val table = reg.spark.read.parquet(path)
     if (!table.columns.contains(dimensionName)) return false
     val pruned = table.join(

@@ -3,6 +3,7 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import com.fasterxml.jackson.databind.JsonNode
 import scala.jdk.CollectionConverters._
+import graft.query.Json.{arr, mapper, optStr}
 
 /** One-shot registration of many dimensions / mappings / datasets from a
   * JSON manifest (ref: registry/bulk_register.py + its RegistrationModel),
@@ -32,13 +33,6 @@ object BulkRegister {
 
   final case class Result(registered: Seq[String], skipped: Seq[String])
 
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_COMMENTS)
-    m.enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_TRAILING_COMMA.mappedFeature())
-    m
-  }
-
   private def readTable(spark: SparkSession, path: String): DataFrame =
     Registry.readRegistrationTable(spark, path)
 
@@ -50,15 +44,12 @@ object BulkRegister {
     val n = mapper.readTree(manifestText)
     def resolve(p: String): String =
       baseDir.filter(_ => !p.startsWith("/") && !p.contains("://")).map(b => s"$b/$p").getOrElse(p)
-    def arr(key: String): Seq[JsonNode] =
-      Option(n.get(key)).map(_.elements().asScala.toSeq).getOrElse(Nil)
-    def optStr(e: JsonNode, key: String): Option[String] = Option(e.get(key)).map(_.asText())
 
     val journal = scala.collection.mutable.LinkedHashSet.empty[String]
     journalPath.filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p))).foreach { p =>
       val j = mapper.readTree(new String(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8"))
-      Option(j.get("completed")).foreach(_.elements().asScala.foreach(e => journal += e.asText()))
+      arr(j, "completed").foreach(e => journal += e.asText())
     }
     val preCompleted = journal.toSet
     def persistJournal(): Unit = journalPath.foreach { p =>
@@ -75,7 +66,7 @@ object BulkRegister {
     // IllegalArgumentException (so the CLI reports it, not a stack trace) —
     // a bare NPE while building the step key would skip both
     def reqStr(e: JsonNode, key: String, ctx: String): String =
-      Option(e.get(key)).map(_.asText()).getOrElse {
+      optStr(e, key).getOrElse {
         persistJournal()
         throw new IllegalArgumentException(
           s"bulk registration: $ctx entry missing required key '$key'" +
@@ -97,7 +88,7 @@ object BulkRegister {
         registered += key
       }
 
-    for (d <- arr("dimensions")) {
+    for (d <- arr(n, "dimensions")) {
       val name = reqStr(d, "name", "dimension")
       step(s"dimension/$name") {
         Registry.registerDimension(
@@ -106,7 +97,7 @@ object BulkRegister {
           category = optStr(d, "category").getOrElse("base"))
       }
     }
-    for (m <- arr("mappings")) {
+    for (m <- arr(n, "mappings")) {
       val name = reqStr(m, "name", "mapping")
       step(s"mapping/$name") {
         Registry.registerMapping(
@@ -117,7 +108,7 @@ object BulkRegister {
           toDimension = optStr(m, "to_dimension"))
       }
     }
-    for (ds <- arr("datasets")) {
+    for (ds <- arr(n, "datasets")) {
       val id = reqStr(ds, "id", "dataset")
       step(s"dataset/$id") {
         val dims = Option(ds.get("dimensions"))

@@ -3,6 +3,7 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.query.Json.mapper
 
 /** Config generators — bootstrap registration from the data itself (ref:
   * dsgrid/registry/dataset_config_generator.py:1-158,
@@ -103,8 +104,7 @@ object ConfigGen {
   /** The generated config as JSON — what the CLI verb writes beside the
     * extracted record files for hand-editing before registration. */
   def toJson(gen: GeneratedDatasetConfig): String = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = m.createObjectNode()
+    val node = mapper.createObjectNode()
     node.put("dataset_id", gen.datasetId)
     def arr(name: String, xs: Seq[String]): Unit = {
       val a = node.putArray(name); xs.foreach(a.add)
@@ -115,7 +115,7 @@ object ConfigGen {
     val matched = node.putObject("matched_dimensions")
     gen.matchedDimensions.toSeq.sortBy(_._1).foreach { case (c, d) => matched.put(c, d) }
     arr("new_dimensions", gen.newRecords.keys.toSeq.sorted)
-    m.writerWithDefaultPrettyPrinter().writeValueAsString(node)
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)
   }
 
   /** Project bootstrap (ref: project_config_generator.py) — graft projects
@@ -133,8 +133,7 @@ object ConfigGen {
     val shared = datasetIds
       .map(d => reg.dataset(d).columns.toSet - graft.core.Constants.ValueColumn)
       .reduce(_ intersect _)
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = m.createObjectNode()
+    val node = mapper.createObjectNode()
     node.put("name", name)
     val ds = node.putObject("datasets")
     val refs = ds.putArray("datasets")
@@ -151,6 +150,6 @@ object ConfigGen {
     a.put("fn", "sum")
     val sort = res.putArray("sort_by")
     shared.toSeq.sorted.foreach(sort.add)
-    m.writerWithDefaultPrettyPrinter().writeValueAsString(node)
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)
   }
 }

@@ -3,6 +3,8 @@ package graft.registry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.query.Json
+import graft.sources.HadoopFs
 import graft.text.Dedup
 
 /** Registry lifecycle for ENGINE-DERIVED datasets — the vector artifacts
@@ -36,15 +38,9 @@ object DerivedArtifacts {
   }
 
   /** (source_token, params_token) recorded when the artifact was built. */
-  def provenance(reg: Registry, artifactId: String): Option[(String, String)] = {
-    val p = s"${reg.root}/datasets/$artifactId/provenance.json"
-    if (!reg.hadoopExists(p)) None
-    else {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(graft.sources.HadoopText.read(reg.spark, p))
-      Some((n.get("source_token").asText(), n.get("params_token").asText()))
-    }
-  }
+  def provenance(reg: Registry, artifactId: String): Option[(String, String)] =
+    HadoopFs.readJson(reg.spark, s"${reg.root}/datasets/$artifactId/provenance.json")
+      .map(n => (Json.str(n, "source_token"), Json.str(n, "params_token")))
 
   /** Resolve-or-build: return the registered artifact when its provenance
     * matches the source dataset's current content token (and the build
@@ -70,14 +66,11 @@ object DerivedArtifacts {
       paramsToken: String)(build: => DataFrame): DataFrame = {
     if (!provenance(reg, artifactId).contains((sourceToken, paramsToken))) {
       Registry.registerDataset(reg, artifactId, build, validate = false)
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val n = m.createObjectNode()
-      n.put("source_dataset", sourceDesc)
-      n.put("source_token", sourceToken)
-      n.put("params_token", paramsToken)
-      graft.sources.HadoopText.write(reg.spark,
-        s"${reg.root}/datasets/$artifactId/provenance.json",
-        m.writerWithDefaultPrettyPrinter().writeValueAsString(n))
+      HadoopFs.writeJson(reg.spark, s"${reg.root}/datasets/$artifactId/provenance.json") { n =>
+        n.put("source_dataset", sourceDesc)
+        n.put("source_token", sourceToken)
+        n.put("params_token", paramsToken)
+      }
     }
     reg.loadData(artifactId)
   }

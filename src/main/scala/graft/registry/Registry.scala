@@ -1,9 +1,8 @@
 package graft.registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.Readers
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import graft.query.Json
+import graft.sources.{HadoopFs, Readers}
 
 /** Filesystem-convention registry — the minimal versioned store the engine
   * needs to resolve dimensions, mappings and datasets (the reference keeps
@@ -31,15 +30,9 @@ final case class Registry(spark: SparkSession, root: String) {
 
   /** The dimension's category (base/subset/supplemental); absent metadata
     * means base (see Registry.registerDimension). */
-  def dimensionCategory(name: String): String = {
-    val p = path("dimensions", name, "meta.json")
-    if (!hadoopExists(p)) "base"
-    else {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(graft.sources.HadoopText.read(spark, p))
-      Option(n.get("category")).map(_.asText()).getOrElse("base")
-    }
-  }
+  def dimensionCategory(name: String): String =
+    HadoopFs.readJson(spark, path("dimensions", name, "meta.json"))
+      .flatMap(Json.optStr(_, "category")).getOrElse("base")
 
   def mapping(name: String): DataFrame =
     Readers.parquet(spark, path("mappings", name, "table.parquet"))
@@ -49,14 +42,8 @@ final case class Registry(spark: SparkSession, root: String) {
     * every mapping config, dimension_mapping_base.py). Absent sidecar (or
     * side) = undeclared: the mapping is then exempt from reference checks. */
   def mappingEndpoints(name: String): (Option[String], Option[String]) = {
-    val p = path("mappings", name, "meta.json")
-    if (!hadoopExists(p)) (None, None)
-    else {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(graft.sources.HadoopText.read(spark, p))
-      (Option(n.get("from_dimension")).map(_.asText()),
-        Option(n.get("to_dimension")).map(_.asText()))
-    }
+    val n = HadoopFs.readJson(spark, path("mappings", name, "meta.json"))
+    (n.flatMap(Json.optStr(_, "from_dimension")), n.flatMap(Json.optStr(_, "to_dimension")))
   }
 
   def loadData(datasetId: String): DataFrame =
@@ -64,14 +51,7 @@ final case class Registry(spark: SparkSession, root: String) {
 
   def lookup(datasetId: String): Option[DataFrame] = {
     val p = path("datasets", datasetId, "load_data_lookup.parquet")
-    if (hadoopExists(p)) Some(Readers.parquet(spark, p)) else None
-  }
-
-  /** Existence via the Hadoop FS API so the registry tree works on
-    * HDFS/S3/local alike. */
-  def hadoopExists(p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
+    if (HadoopFs.exists(spark, p)) Some(Readers.parquet(spark, p)) else None
   }
 
   /** The dataset's fact table, normalized to the engine's stacked internal
@@ -96,19 +76,13 @@ final case class Registry(spark: SparkSession, root: String) {
   }
 
   /** Value-format metadata (a small JSON sidecar; absent → stacked). */
-  def datasetFormat(datasetId: String): Option[DatasetFormat] = {
-    val p = path("datasets", datasetId, "format.json")
-    if (!hadoopExists(p)) None
-    else {
-      val text = graft.sources.HadoopText.read(spark, p)
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-      Some(DatasetFormat(
-        valueFormat = n.get("value_format").asText(),
-        pivotedColumns = Option(n.get("pivoted_columns"))
-          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
-        variableColumn = Option(n.get("variable_column")).map(_.asText()).getOrElse("metric")))
+  def datasetFormat(datasetId: String): Option[DatasetFormat] =
+    HadoopFs.readJson(spark, path("datasets", datasetId, "format.json")).map { n =>
+      DatasetFormat(
+        valueFormat = Json.str(n, "value_format"),
+        pivotedColumns = Json.arr(n, "pivoted_columns").map(_.asText()),
+        variableColumn = Json.optStr(n, "variable_column").getOrElse("metric"))
     }
-  }
 
   /** Content token: hash over the recursive (path, length, mtime) listing of
     * the registry tree, folded into query cache keys so any registry
@@ -121,16 +95,9 @@ final case class Registry(spark: SparkSession, root: String) {
     * `registry_token`s stay valid. */
   def contentToken: String = Registry.treeToken(spark, root).getOrElse("empty")
 
-  def listDatasets(): Seq[String] = list("datasets")
-  def listDimensions(): Seq[String] = list("dimensions")
-  def listMappings(): Seq[String] = list("mappings")
-
-  private def list(kind: String): Seq[String] = {
-    val hp = new org.apache.hadoop.fs.Path(path(kind))
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) Nil
-    else fs.listStatus(hp).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
-  }
+  def listDatasets(): Seq[String] = HadoopFs.subdirs(spark, path("datasets"))
+  def listDimensions(): Seq[String] = HadoopFs.subdirs(spark, path("dimensions"))
+  def listMappings(): Seq[String] = HadoopFs.subdirs(spark, path("mappings"))
 }
 
 /** PIVOTED-format declaration: one column per record of `variableColumn`'s
@@ -156,7 +123,7 @@ object Registry {
     * forked `stat` process per file. */
   def treeToken(spark: SparkSession, path: String): Option[String] = {
     val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = HadoopFs.fs(spark, hp)
     if (!fs.exists(hp)) None
     else {
       val entries = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -185,19 +152,11 @@ object Registry {
   private val VersionDir = """v(\d+)\.(\d+)\.(\d+)""".r
 
   /** Version directories under a root, semver-ordered ascending. */
-  def versions(spark: SparkSession, root: String): Seq[String] = {
-    val hp = new org.apache.hadoop.fs.Path(root)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) Nil
-    else
-      fs.listStatus(hp)
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .collect { case n @ VersionDir(a, b, c) => (a.toInt, b.toInt, c.toInt, n) }
-        .sortBy(t => (t._1, t._2, t._3))
-        .map(_._4)
-        .toSeq
-  }
+  def versions(spark: SparkSession, root: String): Seq[String] =
+    HadoopFs.subdirs(spark, root)
+      .collect { case n @ VersionDir(a, b, c) => (a.toInt, b.toInt, c.toInt, n) }
+      .sortBy(t => (t._1, t._2, t._3))
+      .map(_._4)
 
   /** A registry pinned to one version subtree. */
   def atVersion(spark: SparkSession, root: String, version: String): Registry =
@@ -216,13 +175,9 @@ object Registry {
     * Hadoop FS copy so the tree works on HDFS/S3/local alike. */
   def newVersion(spark: SparkSession, root: String, fromVersion: String, toVersion: String): Registry = {
     require(VersionDir.matches(toVersion), s"not a v<major>.<minor>.<patch> version: $toVersion")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(s"$root/$fromVersion")
-    val dst = new org.apache.hadoop.fs.Path(s"$root/$toVersion")
-    val fs = src.getFileSystem(conf)
-    require(fs.exists(src), s"no such version: $root/$fromVersion")
-    require(!fs.exists(dst), s"version already exists: $root/$toVersion")
-    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
+    require(HadoopFs.exists(spark, s"$root/$fromVersion"), s"no such version: $root/$fromVersion")
+    require(!HadoopFs.exists(spark, s"$root/$toVersion"), s"version already exists: $root/$toVersion")
+    HadoopFs.copy(spark, s"$root/$fromVersion", s"$root/$toVersion")
     atVersion(spark, root, toVersion)
   }
 
@@ -233,8 +188,7 @@ object Registry {
   def deleteVersion(spark: SparkSession, root: String, version: String): Unit = {
     require(VersionDir.matches(version), s"not a v<major>.<minor>.<patch> version: $version")
     require(versions(spark, root).contains(version), s"no such version: $root/$version")
-    val hp = new org.apache.hadoop.fs.Path(s"$root/$version")
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
+    HadoopFs.delete(spark, s"$root/$version")
   }
 
   /** Filtered-registry export (ref: registry/filter_registry_manager.py —
@@ -250,7 +204,6 @@ object Registry {
       datasets: Seq[String] = Nil,
       dimensions: Seq[String] = Nil,
       mappings: Seq[String] = Nil): Registry = {
-    val conf = reg.spark.sparkContext.hadoopConfiguration
     // validate EVERY selection before the first copy — a refused export
     // must not leave a partially-copied tree at destRoot
     def checkKnown(kind: String, names: Seq[String], existing: Seq[String]): Unit = {
@@ -269,10 +222,7 @@ object Registry {
       import scala.concurrent.ExecutionContext.Implicits.global
       Await.result(
         Future.traverse(names) { n => Future {
-          val src = new org.apache.hadoop.fs.Path(s"${reg.root}/$kind/$n")
-          val dst = new org.apache.hadoop.fs.Path(s"$destRoot/$kind/$n")
-          org.apache.hadoop.fs.FileUtil.copy(
-            src.getFileSystem(conf), src, dst.getFileSystem(conf), dst, false, conf)
+          HadoopFs.copy(reg.spark, s"${reg.root}/$kind/$n", s"$destRoot/$kind/$n")
         } },
         Duration.Inf)
       ()
@@ -284,8 +234,7 @@ object Registry {
     val broken = checkIntegrity(out)
     if (broken.nonEmpty) {
       // an integrity-refused export removes its own debris
-      val dst = new org.apache.hadoop.fs.Path(destRoot)
-      dst.getFileSystem(conf).delete(dst, true)
+      HadoopFs.delete(reg.spark, destRoot)
       throw new IllegalArgumentException(
         s"filterTo: exported registry is inconsistent — ${broken.mkString("; ")}")
     }
@@ -305,25 +254,20 @@ object Registry {
     }
     require(dependents.isEmpty,
       s"removeDimension($name): declared endpoint of mapping(s) ${dependents.mkString(", ")} — remove those first")
-    deleteTree(reg, s"${reg.root}/dimensions/$name")
+    HadoopFs.delete(reg.spark, s"${reg.root}/dimensions/$name")
   }
 
   /** Remove a registered mapping. Nothing in the registry depends on a
     * mapping, so no dependency check applies. */
   def removeMapping(reg: Registry, name: String): Unit = {
     require(reg.listMappings().contains(name), s"removeMapping: no such mapping '$name'")
-    deleteTree(reg, s"${reg.root}/mappings/$name")
+    HadoopFs.delete(reg.spark, s"${reg.root}/mappings/$name")
   }
 
   /** Remove a registered dataset (fact table + lookup + format sidecar). */
   def removeDataset(reg: Registry, datasetId: String): Unit = {
     require(reg.listDatasets().contains(datasetId), s"removeDataset: no such dataset '$datasetId'")
-    deleteTree(reg, s"${reg.root}/datasets/$datasetId")
-  }
-
-  private def deleteTree(reg: Registry, p: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(reg.spark.sparkContext.hadoopConfiguration).delete(hp, true)
+    HadoopFs.delete(reg.spark, s"${reg.root}/datasets/$datasetId")
   }
 
   /** Export a dimension's records (ref: cli/registry.py:223
@@ -351,15 +295,14 @@ object Registry {
     // endpoint resolvable — checked BEFORE the overwrite so a bad update
     // never lands. Runs only when the dimension already exists (fresh
     // registration has no dependents yet).
-    if (reg.hadoopExists(s"${reg.root}/dimensions/$name/records.parquet")) {
+    if (HadoopFs.exists(reg.spark, s"${reg.root}/dimensions/$name/records.parquet")) {
       val broken = dimensionUpdateViolations(reg, name, records)
       require(broken.isEmpty,
         s"registerDimension($name): incompatible update — ${broken.mkString("; ")}")
     }
     records.write.mode("overwrite").parquet(s"${reg.root}/dimensions/$name/records.parquet")
     if (category != "base")
-      graft.sources.HadoopText.write(
-        reg.spark, s"${reg.root}/dimensions/$name/meta.json", s"""{"category": "$category"}""")
+      HadoopFs.writeJson(reg.spark, s"${reg.root}/dimensions/$name/meta.json")(_.put("category", category))
   }
 
   /** Mapping references the new `records` of dimension `name` would break:
@@ -408,7 +351,7 @@ object Registry {
         to.map(d => (m, graft.core.Constants.ToIdColumn, d))).flatten
     }
     val (dangling, resolved) = refs.partition { case (_, _, dim) =>
-      !reg.hadoopExists(s"${reg.root}/dimensions/$dim/records.parquet")
+      !HadoopFs.exists(reg.spark, s"${reg.root}/dimensions/$dim/records.parquet")
     }
     val broken = scala.collection.mutable.Map.empty[(String, String), Seq[Any]]
     resolved.groupBy(_._3).foreach { case (dim, group) =>
@@ -466,7 +409,7 @@ object Registry {
       for ((dim, side) <- Seq(
           fromDimension.map((_, graft.core.Constants.FromIdColumn)),
           toDimension.map((_, graft.core.Constants.ToIdColumn))).flatten
-          if reg.hadoopExists(s"${reg.root}/dimensions/$dim/records.parquet")) {
+          if HadoopFs.exists(reg.spark, s"${reg.root}/dimensions/$dim/records.parquet")) {
         val ids = reg.dimensionRecords(dim).select(col("id")).distinct()
         val missing = table.select(col(side).as("id")).distinct()
           .join(ids, Seq("id"), "left_anti")
@@ -477,19 +420,16 @@ object Registry {
     }
     table.write.mode("overwrite").parquet(s"${reg.root}/mappings/$name/table.parquet")
     val metaPath = s"${reg.root}/mappings/$name/meta.json"
-    if (fromDimension.nonEmpty || toDimension.nonEmpty) {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = m.createObjectNode()
-      fromDimension.foreach(node.put("from_dimension", _))
-      toDimension.foreach(node.put("to_dimension", _))
-      graft.sources.HadoopText.write(reg.spark, metaPath, m.writeValueAsString(node))
-    } else if (reg.hadoopExists(metaPath)) {
+    if (fromDimension.nonEmpty || toDimension.nonEmpty)
+      HadoopFs.writeJson(reg.spark, metaPath) { n =>
+        fromDimension.foreach(n.put("from_dimension", _))
+        toDimension.foreach(n.put("to_dimension", _))
+      }
+    else
       // re-registration without endpoints DETACHES the mapping: a stale
       // sidecar would otherwise keep blocking dimension removals/updates
       // against a declaration the caller no longer makes
-      val hp = new org.apache.hadoop.fs.Path(metaPath)
-      hp.getFileSystem(reg.spark.sparkContext.hadoopConfiguration).delete(hp, false)
-    }
+      HadoopFs.delete(reg.spark, metaPath)
   }
 
   def registerDataset(
@@ -519,16 +459,12 @@ object Registry {
     loadData.write.mode("overwrite").parquet(s"${reg.root}/datasets/$datasetId/load_data.parquet")
     lookup.foreach(_.write.mode("overwrite").parquet(s"${reg.root}/datasets/$datasetId/load_data_lookup.parquet"))
     format.foreach { f =>
-      // Jackson handles escaping — pivoted column names may contain quotes.
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = m.createObjectNode()
-      node.put("value_format", f.valueFormat)
-      val cols = node.putArray("pivoted_columns")
-      f.pivotedColumns.foreach(cols.add)
-      node.put("variable_column", f.variableColumn)
-      val json = m.writerWithDefaultPrettyPrinter().writeValueAsString(node)
-      graft.sources.HadoopText.write(
-        reg.spark, s"${reg.root}/datasets/$datasetId/format.json", json)
+      HadoopFs.writeJson(reg.spark, s"${reg.root}/datasets/$datasetId/format.json") { n =>
+        n.put("value_format", f.valueFormat)
+        val cols = n.putArray("pivoted_columns")
+        f.pivotedColumns.foreach(cols.add)
+        n.put("variable_column", f.variableColumn)
+      }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.registry
 
 import org.apache.spark.sql.SparkSession
+import graft.sources.HadoopFs
 
 /** Remote-registry synchronization (ref: dsgrid/cloud/s3_storage_interface
   * .py — pull/push a registry tree to shared storage under a lock file;
@@ -43,12 +44,9 @@ final class HadoopStorage(
     pollMs: Long = 100L,
     verifyDelayMs: Long = 50L) extends StorageInterface {
 
-  private def conf = spark.sparkContext.hadoopConfiguration
-  private def fs(p: org.apache.hadoop.fs.Path) = p.getFileSystem(conf)
-
   override def withLock[T](lockPath: String)(f: => T): T = {
     val lp = new org.apache.hadoop.fs.Path(lockPath)
-    val filesystem = fs(lp)
+    val filesystem = HadoopFs.fs(spark, lp)
     val token =
       s"${java.net.InetAddress.getLocalHost.getHostName}|${ProcessHandle.current().pid()}|${java.util.UUID.randomUUID()}"
     val deadline = System.nanoTime() + timeoutMs * 1000000L
@@ -68,27 +66,18 @@ final class HadoopStorage(
         finally out.close()
         // let a racing writer's create+write land before verifying ownership
         Thread.sleep(verifyDelayMs)
-        try readLockInfo(lp) == token
+        try HadoopFs.readText(spark, lockPath) == token
         catch { case _: java.io.IOException => false }
       }
     while (!tryAcquire()) {
       if (System.nanoTime() > deadline)
         throw new IllegalStateException(
           s"could not acquire registry lock $lockPath within ${timeoutMs} ms " +
-            s"(holder: ${try readLockInfo(lp) catch { case _: Exception => "unknown" }})")
+            s"(holder: ${try HadoopFs.readText(spark, lockPath) catch { case _: Exception => "unknown" }})")
       Thread.sleep(pollMs)
     }
     try f
     finally filesystem.delete(lp, false)
-  }
-
-  private def readLockInfo(lp: org.apache.hadoop.fs.Path): String = {
-    val in = fs(lp).open(lp)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-      new String(bos.toByteArray, "UTF-8")
-    } finally in.close()
   }
 
   override def pull(remoteRoot: String, localRoot: String): Unit =
@@ -101,10 +90,7 @@ final class HadoopStorage(
     * absent from the source are left in place — version subtrees are
     * immutable by convention, so sync only ever adds). */
   private def copyTree(srcRoot: String, dstRoot: String): Unit = {
-    val src = new org.apache.hadoop.fs.Path(srcRoot)
-    val dst = new org.apache.hadoop.fs.Path(dstRoot)
-    val sfs = fs(src)
-    require(sfs.exists(src), s"sync source does not exist: $srcRoot")
-    org.apache.hadoop.fs.FileUtil.copy(sfs, src, fs(dst), dst, false, true, conf)
+    require(HadoopFs.exists(spark, srcRoot), s"sync source does not exist: $srcRoot")
+    HadoopFs.copy(spark, srcRoot, dstRoot)
   }
 }

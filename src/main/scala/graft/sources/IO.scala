@@ -3,12 +3,15 @@ package graft.sources
 import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path => HPath}
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import graft.core.{Constants, FileSchema}
+import graft.query.Json
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -47,7 +50,7 @@ object Readers {
     try {
       val conf = spark.sparkContext.hadoopConfiguration
       val hp = new HPath(path)
-      val fs = hp.getFileSystem(conf)
+      val fs = HadoopFs.fs(spark, hp)
       val mergeSchema = spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean
       if (mergeSchema || path.exists("{}[]*?\\".contains(_)) || !fs.getFileStatus(hp).isDirectory) None
       else {
@@ -175,25 +178,82 @@ object Readers {
   }
 }
 
-/** Small text files via the Hadoop FS API (sidecars, format metadata) —
-  * one implementation shared by the registry and the Submitter so the
-  * tree works on HDFS/S3/local alike. */
-object HadoopText {
+/** The engine's one storage accessor and the only place a path becomes a
+  * Hadoop `FileSystem`. The decision it owns: every engine path — registry
+  * roots, cache directories, JSON sidecars, written results and the
+  * `Writers`' own list/delete/rename steps — is a Hadoop path, so a plain
+  * local path, a `file:` URI, HDFS and object stores all behave the same.
+  * The local-only exceptions are `Readers.readWithRecovery`, `TxnLog`,
+  * `FixedWidth` and the NIO lock path of `HadoopStorage`. Sidecars parse
+  * and render with [[Json]]'s lenient mapper. */
+object HadoopFs {
 
-  def write(spark: SparkSession, path: String, text: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(hp, true)
+  private[graft] def fs(spark: SparkSession, path: HPath): FileSystem =
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val hp = new HPath(path)
+    fs(spark, hp).exists(hp)
+  }
+
+  /** The entries directly under `path`, one `listStatus`; Nil when it is
+    * missing. */
+  def list(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val hp = new HPath(path)
+    val f = fs(spark, hp)
+    if (f.exists(hp)) f.listStatus(hp).toSeq else Nil
+  }
+
+  /** Sorted names of the directories directly under `path`; Nil when it
+    * is missing. */
+  def subdirs(spark: SparkSession, path: String): Seq[String] =
+    list(spark, path).filter(_.isDirectory).map(_.getPath.getName).sorted
+
+  /** Delete `path` and everything under it; false when nothing was there. */
+  def delete(spark: SparkSession, path: String): Boolean = {
+    val hp = new HPath(path)
+    fs(spark, hp).delete(hp, true)
+  }
+
+  /** Hadoop rename; false when it fails. Careful: renaming onto an
+    * EXISTING directory moves the source inside it and returns true. */
+  def rename(spark: SparkSession, from: String, to: String): Boolean = {
+    val src = new HPath(from)
+    fs(spark, src).rename(src, new HPath(to))
+  }
+
+  /** Recursive copy, across any two filesystems (`FileUtil.copy` with
+    * overwrite on). */
+  def copy(spark: SparkSession, from: String, to: String): Unit = {
+    val src = new HPath(from)
+    val dst = new HPath(to)
+    FileUtil.copy(fs(spark, src), src, fs(spark, dst), dst, false, true, spark.sparkContext.hadoopConfiguration)
+  }
+
+  def writeText(spark: SparkSession, path: String, text: String): Unit = {
+    val hp = new HPath(path)
+    val out = fs(spark, hp).create(hp, true)
     try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  def read(spark: SparkSession, path: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(hp)
+  def readText(spark: SparkSession, path: String): String = {
+    val hp = new HPath(path)
+    val in = fs(spark, hp).open(hp)
     try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
     finally in.close()
+  }
+
+  /** A JSON sidecar, parsed; None when the file is missing. */
+  def readJson(spark: SparkSession, path: String): Option[JsonNode] =
+    if (exists(spark, path)) Some(Json.mapper.readTree(readText(spark, path))) else None
+
+  /** Write a pretty-printed JSON object whose fields `fill` sets. Jackson
+    * does the escaping, so values may contain quotes. */
+  def writeJson(spark: SparkSession, path: String)(fill: ObjectNode => Unit): Unit = {
+    val n = Json.mapper.createObjectNode()
+    fill(n)
+    writeText(spark, path, Json.mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n))
   }
 }
 
@@ -222,9 +282,9 @@ object Writers {
       minNumPartitions: Int = Constants.MinWritePartitions,
       columns: Seq[String] = Nil): Unit = {
     parquet(df, path)
-    val files = listFiles(Paths.get(path), ".parquet")
+    val files = HadoopFs.list(spark, path).filter(_.getPath.getName.endsWith(".parquet"))
     if (files.isEmpty || files.length < minNumPartitions) return
-    val totalBytes = files.map(f => Files.size(f)).sum
+    val totalBytes = files.map(_.getLen).sum
     val targetBytes = targetMb.toLong * 1024 * 1024
     val desired = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     val actual = files.length
@@ -236,8 +296,7 @@ object Writers {
         else base.repartition(desired)
       val tmp = path + ".graft-tmp"
       parquet(rewritten, tmp)
-      deleteRecursively(Paths.get(path))
-      Files.move(Paths.get(tmp), Paths.get(path))
+      replaceWith(spark, tmp, path)
     }
   }
 
@@ -349,9 +408,7 @@ object Writers {
     val quoted = db.map(d => s"`$d`.`$tbl`").getOrElse(s"`$tbl`")
     spark.sql(s"DROP TABLE IF EXISTS $quoted")
     val relative = db.map(d => s"${d.toLowerCase}.db/${tbl.toLowerCase}").getOrElse(tbl.toLowerCase)
-    val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), relative)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    HadoopFs.delete(spark, new HPath(spark.conf.get("spark.sql.warehouse.dir"), relative).toString)
   }
 
   /** Spark can't overwrite an input path in place: write tmp, swap, re-read
@@ -359,9 +416,15 @@ object Writers {
   def overwriteInPlace(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
     val tmp = path + ".graft-tmp"
     parquet(df, tmp)
-    deleteRecursively(Paths.get(path))
-    Files.move(Paths.get(tmp), Paths.get(path))
+    replaceWith(spark, tmp, path)
     Readers.parquet(spark, path)
+  }
+
+  /** Swap a freshly written `tmp` table in for `path`. */
+  private def replaceWith(spark: SparkSession, tmp: String, path: String): Unit = {
+    HadoopFs.delete(spark, path)
+    if (!HadoopFs.rename(spark, tmp, path))
+      throw new java.io.IOException(s"could not rename $tmp to $path")
   }
 
   /** Materialize an intermediate to scratch parquet and read it back — cuts
@@ -381,9 +444,7 @@ object Writers {
       // _SUCCESS, not mere existence: an interrupted previous write — the
       // exact scenario resume exists for — leaves a dir without the marker
       // and must be recomputed, not read half-finished
-      val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(marker)) return Readers.parquet(spark, path)
+      if (HadoopFs.exists(spark, s"$path/_SUCCESS")) return Readers.parquet(spark, path)
     }
     parquet(df, path)
     Readers.parquet(spark, path)
@@ -408,20 +469,9 @@ object Writers {
       path: String,
       targetFileBytes: Long): DataFrame = {
     require(targetFileBytes > 0, "compactFiles: targetFileBytes must be positive")
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(hp).getLength
+    val hp = new HPath(path)
+    val bytes = HadoopFs.fs(spark, hp).getContentSummary(hp).getLength
     val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     overwriteInPlace(spark, Readers.parquet(spark, path).repartition(n), path)
   }
-
-  private def listFiles(dir: Path, suffix: String): Seq[Path] =
-    if (!Files.isDirectory(dir)) Nil
-    else Files.walk(dir).iterator().asScala.filter(p => p.toString.endsWith(suffix)).toSeq
-
-  private[graft] def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(Files.delete)
-    }
 }

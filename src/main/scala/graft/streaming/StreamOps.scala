@@ -227,16 +227,6 @@ object StreamOps {
         right.columns.filterNot(keyColumns.contains).map(c => col(c + rightSuffix)): _*)
   }
 
-  /** Convenience writer: append stream to parquet with a checkpoint — the
-    * standard durable sink layout. */
-  def toParquet(df: DataFrame, path: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .start()
-
   /** Idempotent streaming upsert into a parquet "serving table" — the
     * exactly-once-sink pattern for engines without transactional MERGE:
     * an UPDATE-mode aggregation feeds `foreachBatch`, and each batch's

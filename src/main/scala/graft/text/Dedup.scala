@@ -148,20 +148,6 @@ object Dedup {
     exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH banding: split the signature into `bands` bands of `rowsPerBand`,
-    * hash each band to a bucket key, explode → (band, bucket, id). Documents
-    * sharing any (band, bucket) are candidate near-duplicates. */
-  def lshBuckets(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      bands: Int,
-      rowsPerBand: Int,
-      shingleSize: Int = 3): DataFrame =
-    lshBucketsFromSignatures(
-      minhashSignatures(df, idCol, textCol, bands * rowsPerBand, shingleSize),
-      idCol, bands, rowsPerBand)
-
   /** Banding over a precomputed signature frame (see `minhashSignatures`). */
   def lshBucketsFromSignatures(
       sig: DataFrame,
@@ -187,18 +173,6 @@ object Dedup {
       .select("id1", "id2")
       .distinct()
   }
-
-  /** Exact Jaccard similarity of word-shingle sets for given id pairs —
-    * the verification step after LSH candidate generation. */
-  def verifyJaccard(
-      docs: DataFrame,
-      pairs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int = 3,
-      threshold: Double = 0.8): DataFrame =
-    verifyJaccardOnShingles(
-      shingleSets(docs, idCol, textCol, shingleSize).cache(), pairs, idCol, threshold)
 
   /** Verification against precomputed (ideally cached) shingle sets — the
     * two-sided join otherwise recomputes the shingle pipeline per side. */

@@ -27,6 +27,19 @@ class CliSpec extends SparkSpec {
     assert(Files.exists(java.nio.file.Paths.get(s"$outDir/query.json")))
   }
 
+  test("query with a file: URI outDir writes query.json beside the result") {
+    val root = Files.createTempDirectory("graft-cli-uri-reg").toString
+    Registry.registerDataset(Registry(spark, root), "ds", Seq(("a", 1.0)).toDF("geography", ValueColumn))
+    val queryFile = Files.createTempFile("graft-cli-uri", ".json")
+    Files.writeString(queryFile, """{"name": "uri_q", "datasets": {"datasets": [{"dataset_id": "ds"}]}}""")
+    val outDir = Files.createTempDirectory("graft-cli-uri-out").toString
+    assert(Cli.run(Array("query", "project", root, queryFile.toString, s"file:$outDir")) == 0)
+    assert(spark.read.parquet(s"$outDir/uri_q.parquet").count() == 1)
+    assert(Files.readString(java.nio.file.Paths.get(s"$outDir/query.json")).contains("uri_q"))
+    assert(!Files.exists(java.nio.file.Paths.get(s"file:$outDir")),
+      "the sidecar must not land under a relative file: directory")
+  }
+
   test("config create stores the registry root; @config resolves in any verb; bad config exits 1") {
     val root = Files.createTempDirectory("graft-cli-cfgreg").toString
     val reg = Registry(spark, root)
@@ -149,7 +162,7 @@ class CliSpec extends SparkSpec {
     val dest = Files.createTempDirectory("graft-cli-reg6f").toString + "/partial"
     assertThrows[IllegalArgumentException](
       Registry.filterTo(reg, dest, datasets = Seq("d1"), dimensions = Seq("nope")))
-    assert(!reg.hadoopExists(s"$dest/datasets/d1"),
+    assert(!graft.sources.HadoopFs.exists(spark, s"$dest/datasets/d1"),
       "refused filterTo must not copy anything before validating selections")
   }
 
@@ -460,7 +473,7 @@ class RegistryOpsSpec extends SparkSpec {
     storage.pull(remote, pulled)
     assert(Registry(spark, pulled).dimensionRecords("geo").count() == 1)
     // the lock file is gone after a successful push
-    assert(!reg.hadoopExists(s"$remote.lock"))
+    assert(!graft.sources.HadoopFs.exists(spark, s"$remote.lock"))
 
     // serialization: only one holder may be inside the critical section
     val inside = new java.util.concurrent.atomic.AtomicInteger(0)
