@@ -267,7 +267,7 @@ final class Api(
             }
             respond(ex, 200, s"""{"dimensions": ${dims.mkString("[", ",", "]")}}""")
           case _ =>
-            respond(ex, 404, s"""{"error": "unknown project path: $path"}""")
+            respond(ex, 404, s"""{"error": ${quote(s"unknown project path: $path")}}""")
         }
       } catch {
         case e: Exception =>

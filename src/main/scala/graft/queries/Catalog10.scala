@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDsl._
+import graft.sources.TxnLog
 
 /** Catalog chunk q272+ — the round-10 continuation: table-management
   * operations completing the lakehouse lifecycle on the transaction-log
@@ -11,12 +12,6 @@ import graft.QueryDsl._
   * evolution, column mapping, CHECK constraints, DESCRIBE HISTORY).
   * Registration + docs in [[graft.Queries]]. */
 private[graft] object Catalog10 {
-
-  private def writeOne(root: String, df: DataFrame, name: String): String = {
-    val d = s"$root/$name"
-    df.coalesce(1).write.mode("overwrite").parquet(d)
-    new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
-  }
 
   private def residueBase(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "part").select(
@@ -39,7 +34,7 @@ private[graft] object Catalog10 {
       val base = residueBase(s, dir)
       // disjoint-path fixture writes run overlapped (guide §2.6)
       QueryDsl.parActions(0 until 3)(m =>
-        writeOne(root, base.filter(pmod(col("key"), lit(3)) === m), s"m$m"))
+        TxnLog.writeDataFile(base.filter(pmod(col("key"), lit(3)) === m), s"$root/m$m"))
     })
 
   /** A fresh txn table (own log) over the shared residue files. */
@@ -47,7 +42,7 @@ private[graft] object Catalog10 {
       : (String, Seq[String], DataFrame) = {
     val logDir = s"$root/_log"
     val fs = sharedResidueFiles(s, dir)
-    graft.sources.TxnLog.commit(logDir, 0, adds = fs, removes = Nil)
+    TxnLog.commit(logDir, 0, adds = fs, removes = Nil)
     (logDir, fs, residueBase(s, dir))
   }
 
@@ -63,7 +58,6 @@ private[graft] object Catalog10 {
     "q272_restore",
     (s, dir) => {
       import s.implicits._
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q272").toString
       val (logDir, _, base) = residueTable(s, dir, root)
       TxnLog.deleteMergeOnRead(s, logDir, s"$root/dv1", col("key") % 7 === 0)
@@ -116,14 +110,13 @@ private[graft] object Catalog10 {
     "q273_concurrent_writers",
     (s, dir) => {
       import s.implicits._
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q273").toString
       val (logDir, fs, base) = residueTable(s, dir, root)
       // disjoint-path fixture writes run overlapped (guide §2.6)
       val Seq(m0a, m1b) = QueryDsl.parActions(Seq(
         ("m0a", 0, 10L), ("m1b", 1, 100L))) { case (name, res, mult) =>
-        writeOne(root, base.filter(col("key") % 3 === res)
-          .select(col("key"), (col("key") * mult).as("value")), name)
+        TxnLog.writeDataFile(base.filter(col("key") % 3 === res)
+          .select(col("key"), (col("key") * mult).as("value")), s"$root/$name")
       }
       val (vA, _) = TxnLog.commitOptimistic(s, logDir, 0, Seq(m0a), Seq(fs(0)))
       val (vB, _) = TxnLog.commitOptimistic(s, logDir, 0, Seq(m1b), Seq(fs(1)))
@@ -170,7 +163,6 @@ private[graft] object Catalog10 {
     "q274_shallow_clone",
     (s, dir) => {
       import s.implicits._
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q274").toString
       val (logDir, _, base) = residueTable(s, dir, root)
       TxnLog.deleteMergeOnRead(s, logDir, s"$root/dv1", col("key") % 7 === 0)
@@ -181,8 +173,8 @@ private[graft] object Catalog10 {
         .select(col("key"), (col("key") * 9).as("value"))
       TxnLog.mergeCopyOnWrite(s, cloneLog, s"$root/cmerged", updates, "key")
       // source diverges: plain append
-      val appended = writeOne(root, base.filter(col("key") % 500 === 0)
-        .select((col("key") + 10000000L).as("key"), (col("key") * 3).as("value")), "srcadd")
+      val appended = TxnLog.writeDataFile(base.filter(col("key") % 500 === 0)
+        .select((col("key") + 10000000L).as("key"), (col("key") * 3).as("value")), s"$root/srcadd")
       TxnLog.commit(logDir, 2, adds = Seq(appended), removes = Nil)
       val srcAtClone = TxnLog.liveFiles(logDir, 1)
       // post-final-log version reads run overlapped (guide §2.6)
@@ -233,7 +225,6 @@ private[graft] object Catalog10 {
     "q275_partition_evolution",
     (s, dir) => {
       import s.implicits._
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q275").toString
       val logDir = s"$root/_log"
       val base = t(s, dir, "part").select(
@@ -244,13 +235,13 @@ private[graft] object Catalog10 {
       // disjoint-path fixture writes run overlapped (guide §2.6)
       val old = QueryDsl.parActions(Seq(
         ("old0", col("key") <= half), ("old1", col("key") > half))) {
-        case (name, pred) => writeOne(root, base.filter(pred), name)
+        case (name, pred) => TxnLog.writeDataFile(base.filter(pred), s"$root/$name")
       }
       TxnLog.commit(logDir, 0, adds = old, removes = Nil)
       val fresh = base.filter(col("key") % 25 === 0).select(
         (col("key") + 10000000L).as("key"), col("cat"), (col("key") * 3).as("value"))
       val parts = QueryDsl.parActions(0 until 4) { c =>
-        writeOne(root, fresh.filter(col("cat") === c), s"cat$c") -> s"cat=$c"
+        TxnLog.writeDataFile(fresh.filter(col("cat") === c), s"$root/cat$c") -> s"cat=$c"
       }
       TxnLog.commit(logDir, 1, adds = parts.map(_._1), removes = Nil,
         partitions = parts.toMap)
@@ -280,17 +271,16 @@ private[graft] object Catalog10 {
     "q276_rename_column",
     (s, dir) => {
       import s.implicits._
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q276").toString
       val logDir = s"$root/_log"
       val base = t(s, dir, "part").select(
         col("p_partkey").cast("long").as("key"),
         (col("p_partkey") * 2).cast("long").as("val"))
-      TxnLog.commit(logDir, 0, adds = Seq(writeOne(root, base, "v0")), removes = Nil)
+      TxnLog.commit(logDir, 0, adds = Seq(TxnLog.writeDataFile(base, s"$root/v0")), removes = Nil)
       TxnLog.renameColumn(s, logDir, "val", "amount")
       val appended = base.filter(col("key") % 250 === 0)
         .select((col("key") + 10000000L).as("key"), (col("key") * 6).as("val"))
-      TxnLog.commit(logDir, 2, adds = Seq(writeOne(root, appended, "v2")), removes = Nil)
+      TxnLog.commit(logDir, 2, adds = Seq(TxnLog.writeDataFile(appended, s"$root/v2")), removes = Nil)
       TxnLog.renameColumn(s, logDir, "amount", "amt")
       // post-final-log version reads run overlapped (guide §2.6)
       QueryDsl.parActions(0L to 3L) { v =>
@@ -331,13 +321,12 @@ private[graft] object Catalog10 {
     "q277_check_constraints",
     (s, dir) => {
       import s.implicits._
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q277").toString
       val logDir = s"$root/_log"
       val base = t(s, dir, "part").select(
         col("p_partkey").cast("long").as("key"),
         (col("p_partkey") * 2 + 1).cast("long").as("value"))
-      TxnLog.commit(logDir, 0, adds = Seq(writeOne(root, base, "v0")), removes = Nil)
+      TxnLog.commit(logDir, 0, adds = Seq(TxnLog.writeDataFile(base, s"$root/v0")), removes = Nil)
       val refusedConstraint =
         try { TxnLog.addConstraint(s, logDir, "big", "value > 10"); false }
         catch { case _: IllegalArgumentException => true }
@@ -380,7 +369,6 @@ private[graft] object Catalog10 {
     "q278_history",
     (s, dir) => {
       import s.implicits._
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q278").toString
       val (logDir, _, base) = residueTable(s, dir, root)
       TxnLog.deleteMergeOnRead(s, logDir, s"$root/dv1", col("key") % 7 === 0)
@@ -467,26 +455,25 @@ private[graft] object Catalog10 {
     "q280_stream_table_read",
     (s, dir) => {
       import s.implicits._
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q280").toString
       val logDir = s"$root/_log"
       val base = t(s, dir, "part").select(
         col("p_partkey").cast("long").as("key"),
         (col("p_partkey") * 2).cast("long").as("value"))
-      val f0 = writeOne(root, base, "v0")
+      val f0 = TxnLog.writeDataFile(base, s"$root/v0")
       TxnLog.commit(logDir, 0, adds = Seq(f0), removes = Nil)
-      TxnLog.commit(logDir, 1, adds = Seq(writeOne(root,
+      TxnLog.commit(logDir, 1, adds = Seq(TxnLog.writeDataFile(
         base.filter(col("key") % 100 === 0)
           .select((col("key") + 10000000L).as("key"), (col("key") * 3).as("value")),
-        "v1")), removes = Nil)
+        s"$root/v1")), removes = Nil)
       // v2 REWRITES v0's file — a change commit the append-only reader skips
-      TxnLog.commit(logDir, 2, adds = Seq(writeOne(root,
-        base.select(col("key"), (col("value") * 1).as("value")), "v2")),
+      TxnLog.commit(logDir, 2, adds = Seq(TxnLog.writeDataFile(
+        base.select(col("key"), (col("value") * 1).as("value")), s"$root/v2")),
         removes = Seq(f0))
-      TxnLog.commit(logDir, 3, adds = Seq(writeOne(root,
+      TxnLog.commit(logDir, 3, adds = Seq(TxnLog.writeDataFile(
         base.filter(col("key") % 200 === 0)
           .select((col("key") + 20000000L).as("key"), (col("key") * 5).as("value")),
-        "v3")), removes = Nil)
+        s"$root/v3")), removes = Nil)
       val batches = scala.collection.concurrent.TrieMap.empty[Long, (Long, Long)]
       val q = scopedStreamStart(s) {
         s.readStream
@@ -540,23 +527,22 @@ private[graft] object Catalog10 {
     (s, dir) => {
       import s.implicits._
       import graft.plans.MaterializedView
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q281").toString
       val logDir = s"$root/_log"
       val base = t(s, dir, "part").select(
         pmod(col("p_partkey").cast("long"), lit(10)).as("g"),
         (col("p_partkey") * 2).cast("long").as("value"))
-      TxnLog.commit(logDir, 0, adds = Seq(writeOne(root, base, "v0")), removes = Nil)
+      TxnLog.commit(logDir, 0, adds = Seq(TxnLog.writeDataFile(base, s"$root/v0")), removes = Nil)
       MaterializedView.createForTxn(s, logDir, s"$root/mv_v0", Seq("g"), sums = Seq("value"))
       val keyed = t(s, dir, "part").select(col("p_partkey").cast("long").as("key"))
-      TxnLog.commit(logDir, 1, adds = Seq(writeOne(root,
+      TxnLog.commit(logDir, 1, adds = Seq(TxnLog.writeDataFile(
         keyed.filter(col("key") % 100 === 0)
           .select(pmod(col("key"), lit(10)).as("g"), (col("key") * 3).as("value")),
-        "a1")), removes = Nil)
-      TxnLog.commit(logDir, 2, adds = Seq(writeOne(root,
+        s"$root/a1")), removes = Nil)
+      TxnLog.commit(logDir, 2, adds = Seq(TxnLog.writeDataFile(
         keyed.filter(col("key") % 200 === 0)
           .select(pmod(col("key"), lit(10)).as("g"), (col("key") * 5).as("value")),
-        "a2")), removes = Nil)
+        s"$root/a2")), removes = Nil)
       val (_, deltaRows) = MaterializedView.refreshIncremental(s, logDir, s"$root/mv_head")
       TxnLog.restore(s, logDir, 0)
       def stage(name: String, asOf: Long, mvTag: String, delta: Long) = {
@@ -612,7 +598,6 @@ private[graft] object Catalog10 {
     "q282_optimize_compact",
     (s, dir) => {
       import s.implicits._
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q282").toString
       val (logDir, _, _) = residueTable(s, dir, root)
       TxnLog.deleteMergeOnRead(s, logDir, s"$root/dv1", col("key") % 7 === 0)
@@ -660,14 +645,13 @@ private[graft] object Catalog10 {
     "q283_sql_time_travel",
     (s, dir) => {
       import s.implicits._
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q283").toString
       val (log, _, base) = residueTable(s, dir, root)
       TxnLog.deleteMergeOnRead(s, log, s"$root/dv1", col("key") % 7 === 0)
-      TxnLog.commit(log, 2, adds = Seq(writeOne(root,
+      TxnLog.commit(log, 2, adds = Seq(TxnLog.writeDataFile(
         base.filter(col("key") % 300 === 0)
           .select((col("key") + 10000000L).as("key"), (col("key") * 9).as("value")),
-        "a2")), removes = Nil)
+        s"$root/a2")), removes = Nil)
       s.sql(
         s"""SELECT '1_v0' AS snap, CAST(COUNT(*) AS BIGINT) AS n_rows,
            |       CAST(SUM(value) AS BIGINT) AS sum_value
@@ -772,14 +756,13 @@ private[graft] object Catalog10 {
     "q285_write_audit_publish",
     (s, dir) => {
       import s.implicits._
-      import graft.sources.TxnLog
       val root = java.nio.file.Files.createTempDirectory("graft-q285").toString
       val (mainLog, _, base) = residueTable(s, dir, root)
       TxnLog.addConstraint(s, mainLog, "nonnegative", "value >= 0")
       def stage(name: String, batch: DataFrame): String = {
         val log = s"$root/_$name"
         TxnLog.shallowClone(mainLog, log, 1)
-        TxnLog.commit(log, 1, adds = Seq(writeOne(root, batch, name)), removes = Nil)
+        TxnLog.commit(log, 1, adds = Seq(TxnLog.writeDataFile(batch, s"$root/$name")), removes = Nil)
         log
       }
       // branch X: one violating row hidden in an otherwise-clean batch

@@ -11,12 +11,6 @@ import graft.QueryDsl._
   * Registration + docs in [[graft.Queries]]. */
 private[graft] object Catalog11 {
 
-  private def writeOne(root: String, df: DataFrame, name: String): String = {
-    val d = s"$root/$name"
-    df.coalesce(1).write.mode("overwrite").parquet(d)
-    new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
-  }
-
   /** Recursive CTE (`WITH RECURSIVE` — Spark 4's UnionLoop operator,
     * SPARK-24497): a 10-ary hierarchy is derived from part keys (parent(k)
     * = k DIV 10, roots k < 10 — keys are contiguous so every parent
@@ -614,10 +608,10 @@ private[graft] object Catalog11 {
         floor(col("value") * 100).cast("long").as("cents"))
       val minDay = ev.agg(min(expr("tsec div 86400"))).head().getLong(0)
       // pre-evolution unpartitioned file: day minDay+12 rows, shifted ids, 7× cents
-      val old = writeOne(root,
+      val old = TxnLog.writeDataFile(
         ev.filter(expr("tsec div 86400") === minDay + 12)
           .select(col("tsec"), (col("user_id") + 1000000L).as("user_id"),
-            (col("cents") * 7).as("cents")), "old")
+            (col("cents") * 7).as("cents")), s"$root/old")
       TxnLog.commit(logDir, 0, adds = Seq(old), removes = Nil)
       // the days(ts) layout: ONE partitionBy write, tag = transform value
       val stage = s"$root/staged"
@@ -1054,26 +1048,27 @@ private[graft] object Catalog11 {
       val logDir = s"$root/_log"
       val base = t(s, dir, "part").select(col("p_partkey").cast("long").as("k"))
       // v0: one open interval per key, rate 2k, valid [0, ∞)
-      val v0 = writeOne(root, base.select(col("k"),
+      val v0 = TxnLog.writeDataFile(base.select(col("k"),
         lit(0L).as("valid_from"), lit(Long.MaxValue).as("valid_to"),
-        (col("k") * 2).as("rate")), "v0")
+        (col("k") * 2).as("rate")), s"$root/v0")
       TxnLog.commit(logDir, 0, adds = Seq(v0), removes = Nil)
       // v1: forward-dated change for even keys — close at day 10, open 3k
       val evens = base.filter(col("k") % 2 === 0)
-      val v1closed = writeOne(root, evens.select(col("k"),
-        lit(0L).as("valid_from"), lit(10L).as("valid_to"), (col("k") * 2).as("rate")), "v1c")
-      val v1open = writeOne(root, evens.select(col("k"),
+      val v1closed = TxnLog.writeDataFile(evens.select(col("k"),
+        lit(0L).as("valid_from"), lit(10L).as("valid_to"), (col("k") * 2).as("rate")), s"$root/v1c")
+      val v1open = TxnLog.writeDataFile(evens.select(col("k"),
         lit(10L).as("valid_from"), lit(Long.MaxValue).as("valid_to"),
-        (col("k") * 3).as("rate")), "v1o")
-      val v1odd = writeOne(root, base.filter(col("k") % 2 =!= 0).select(col("k"),
+        (col("k") * 3).as("rate")), s"$root/v1o")
+      val v1odd = TxnLog.writeDataFile(base.filter(col("k") % 2 =!= 0).select(col("k"),
         lit(0L).as("valid_from"), lit(Long.MaxValue).as("valid_to"),
-        (col("k") * 2).as("rate")), "v1odd")
+        (col("k") * 2).as("rate")), s"$root/v1odd")
       TxnLog.commit(logDir, 1, adds = Seq(v1closed, v1open, v1odd), removes = Seq(v0))
       // v2: retroactive correction for k % 10 == 0 — the HISTORICAL
       // interval's rate was wrong (2k → 2k + 1); CoW-rewrite the closed file
-      val v2closed = writeOne(root, evens.select(col("k"),
+      val v2closed = TxnLog.writeDataFile(evens.select(col("k"),
         lit(0L).as("valid_from"), lit(10L).as("valid_to"),
-        when(col("k") % 10 === 0, col("k") * 2 + 1).otherwise(col("k") * 2).as("rate")), "v2c")
+        when(col("k") % 10 === 0, col("k") * 2 + 1).otherwise(col("k") * 2).as("rate")),
+        s"$root/v2c")
       TxnLog.commit(logDir, 2, adds = Seq(v2closed), removes = Seq(v1closed))
       val probes = Seq((0L, 5L), (1L, 5L), (1L, 15L), (2L, 5L), (2L, 15L))
       probes.map { case (sv, vv) =>

@@ -697,21 +697,16 @@ private[graft] object Catalog9 {
       val logDir = s"$root/_log"
       val ev = t(s, dir, "events").select(col("event_id").cast("long").as("event_id"),
         col("user_id").cast("long").as("user_id"))
-      def writeOne(df: DataFrame, name: String): String = {
-        val d = s"$root/$name"
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
-      }
       // disjoint-path fixture writes run overlapped (guide §2.6)
       val Seq(f0a, f0b) = QueryDsl.parActions(Seq(
         ("even", col("event_id") % 2 === 0), ("odd", col("event_id") % 2 === 1))) {
-        case (name, pred) => writeOne(ev.filter(pred), name)
+        case (name, pred) => TxnLog.writeDataFile(ev.filter(pred), s"$root/$name")
       }
       TxnLog.commit(logDir, 0, adds = Seq(f0a, f0b), removes = Nil)
-      val f1 = writeOne(TxnLog.readAsOf(s, logDir, 0), "compacted")
+      val f1 = TxnLog.writeDataFile(TxnLog.readAsOf(s, logDir, 0), s"$root/compacted")
       TxnLog.commit(logDir, 1, adds = Seq(f1), removes = Seq(f0a, f0b))
-      val f2 = writeOne(ev.filter(col("event_id") % 97 === 0)
-        .select((col("event_id") + 10000000L).as("event_id"), col("user_id")), "late")
+      val f2 = TxnLog.writeDataFile(ev.filter(col("event_id") % 97 === 0)
+        .select((col("event_id") + 10000000L).as("event_id"), col("user_id")), s"$root/late")
       TxnLog.commit(logDir, 2, adds = Seq(f2), removes = Nil)
       // post-final-log version reads run overlapped (guide §2.6)
       QueryDsl.parActions(0L to 2L) { v =>

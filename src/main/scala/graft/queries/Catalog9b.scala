@@ -807,15 +807,10 @@ private[graft] object Catalog9b {
       val base = t(s, dir, "part").select(
         col("p_partkey").cast("long").as("key"),
         (col("p_partkey") * 2).cast("long").as("value"))
-      def writeOne(df: DataFrame, name: String): String = {
-        val d = s"$root/$name"
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
-      }
       // disjoint-path fixture writes + post-final-log version reads run
       // overlapped (QueryDsl.parActions, guide §2.6)
       val fs = QueryDsl.parActions(0 until 3)(m =>
-        writeOne(base.filter(pmod(col("key"), lit(3)) === m), s"m$m"))
+        TxnLog.writeDataFile(base.filter(pmod(col("key"), lit(3)) === m), s"$root/m$m"))
       TxnLog.commit(logDir, 0, adds = fs, removes = Nil)
       // updates: keys % 300 == 0 (all in the mod-3==0 file) replace their
       // row; keys +1e7 (new) insert
@@ -871,15 +866,10 @@ private[graft] object Catalog9b {
       val base = t(s, dir, "part").select(
         col("p_partkey").cast("long").as("key"),
         (col("p_partkey") * 2).cast("long").as("value"))
-      def writeOne(df: DataFrame, name: String): String = {
-        val d = s"$root/$name"
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
-      }
       // disjoint-path fixture writes + post-final-log version reads run
       // overlapped (QueryDsl.parActions, guide §2.6)
       val fs = QueryDsl.parActions(0 until 3)(m =>
-        writeOne(base.filter(pmod(col("key"), lit(3)) === m), s"m$m"))
+        TxnLog.writeDataFile(base.filter(pmod(col("key"), lit(3)) === m), s"$root/m$m"))
       TxnLog.commit(logDir, 0, adds = fs, removes = Nil)
       TxnLog.deleteMergeOnRead(s, logDir, s"$root/dv1", col("key") % 7 === 0)
       TxnLog.deleteMergeOnRead(s, logDir, s"$root/dv2", col("key") % 11 === 0)
@@ -931,20 +921,15 @@ private[graft] object Catalog9b {
       val ev = t(s, dir, "events").select(
         col("event_id").cast("long").as("event_id"),
         col("user_id").cast("long").as("user_id"))
-      def writeOne(df: DataFrame, name: String): String = {
-        val d = s"$root/$name"
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
-      }
       // disjoint-path fixture writes run overlapped (guide §2.6)
       val Seq(f0a, f0b) = QueryDsl.parActions(Seq(
         ("even", col("event_id") % 2 === 0), ("odd", col("event_id") % 2 === 1))) {
-        case (name, pred) => writeOne(ev.filter(pred), name)
+        case (name, pred) => TxnLog.writeDataFile(ev.filter(pred), s"$root/$name")
       }
       TxnLog.commit(logDir, 0, adds = Seq(f0a, f0b), removes = Nil)
-      val f1 = writeOne(TxnLog.readAsOf(s, logDir, 0), "compacted")
+      val f1 = TxnLog.writeDataFile(TxnLog.readAsOf(s, logDir, 0), s"$root/compacted")
       TxnLog.commit(logDir, 1, adds = Seq(f1), removes = Seq(f0a, f0b))
-      val f2 = writeOne(ev.filter(col("event_id") % 97 === 0), "late")
+      val f2 = TxnLog.writeDataFile(ev.filter(col("event_id") % 97 === 0), s"$root/late")
       TxnLog.commit(logDir, 2, adds = Seq(f2), removes = Nil)
       val deleted = TxnLog.vacuum(logDir, 1)
       val v0Refused =
@@ -985,14 +970,9 @@ private[graft] object Catalog9b {
       val base = t(s, dir, "part").select(
         col("p_partkey").cast("long").as("key"),
         (col("p_partkey") * 2).cast("long").as("value"))
-      def writeOne(df: DataFrame, name: String): String = {
-        val d = s"$root/$name"
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
-      }
       // disjoint-path fixture writes run overlapped (guide §2.6)
       val fs = QueryDsl.parActions(0 until 3)(m =>
-        writeOne(base.filter(pmod(col("key"), lit(3)) === m), s"m$m"))
+        TxnLog.writeDataFile(base.filter(pmod(col("key"), lit(3)) === m), s"$root/m$m"))
       TxnLog.commit(logDir, 0, adds = fs, removes = Nil)
       // v1: CoW merge — value 1000k+1 (odd) can never equal an original 2k
       val updates = base.filter(col("key") % 300 === 0)
@@ -1330,17 +1310,12 @@ private[graft] object Catalog9b {
       val base = t(s, dir, "part").select(
         col("p_partkey").cast("long").as("key"),
         (col("p_partkey") * 2).cast("long").as("value"))
-      def writeOne(df: DataFrame, name: String): String = {
-        val d = s"$root/$name"
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
-      }
-      TxnLog.commit(logDir, 0, adds = Seq(writeOne(base, "v0")), removes = Nil)
+      TxnLog.commit(logDir, 0, adds = Seq(TxnLog.writeDataFile(base, s"$root/v0")), removes = Nil)
       // v1: append rows WITH a new column w — schema widens, no rewrite
       val widened = base.filter(col("key") % 250 === 0)
         .select((col("key") + 20000000L).as("key"),
           (col("key") * 2).as("value"), (col("key") * 3).as("w"))
-      TxnLog.commit(logDir, 1, adds = Seq(writeOne(widened, "v1")), removes = Nil)
+      TxnLog.commit(logDir, 1, adds = Seq(TxnLog.writeDataFile(widened, s"$root/v1")), removes = Nil)
       // v2: CoW merge on the evolved table (updates carry the full schema)
       val updates = base.filter(col("key") % 400 === 0)
         .select(col("key"), (col("key") * 5).as("value"), (col("key") * 7).as("w"))

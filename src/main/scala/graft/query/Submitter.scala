@@ -263,13 +263,6 @@ final class Submitter(
         name -> graft.query.Reports.peakLoad(df, rep.groupBy, ValueColumn, rep.keepTies, rep.tieBreak)
     }
 
-  /** Fail-fast semantic validation, run before any Spark job: unknown
-    * dataset/mapping names, datasets whose post-mapping schemas cannot
-    * combine, aggregation/report columns that won't exist. The reference
-    * validates at submission (query_submitter.py:173-249,
-    * dataset_schema_handler_base.py:669-745); without this, errors surface
-    * mid-combine as opaque analysis exceptions — or hours into a 100 TB
-    * run. Schema derivation is plan analysis only, no action. */
   /** ColumnType checks shared by both query kinds (ref ColumnType,
     * models.py:104-109,513-519,568-576): the value must be known, and a
     * `dimension_types` result keeps the internal type names — presentation
@@ -300,6 +293,13 @@ final class Submitter(
     }
   }
 
+  /** Fail-fast semantic validation, run before any Spark job: unknown
+    * dataset/mapping names, datasets whose post-mapping schemas cannot
+    * combine, aggregation/report columns that won't exist. The reference
+    * validates at submission (query_submitter.py:173-249,
+    * dataset_schema_handler_base.py:669-745); without this, errors surface
+    * mid-combine as opaque analysis exceptions — or hours into a 100 TB
+    * run. Schema derivation is plan analysis only, no action. */
   def validate(q: ProjectQuery): Unit = {
     require(q.datasets.datasets.nonEmpty, s"query '${q.name}': no datasets")
     validateResult(q.name, q.result)

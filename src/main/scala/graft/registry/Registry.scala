@@ -309,22 +309,26 @@ object Registry {
     * one message per offending mapping, naming it and a sample of the ids
     * that stop resolving. Anti-join per dependent mapping; only a 5-id
     * sample is ever collected. */
-  private def dimensionUpdateViolations(reg: Registry, name: String, records: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    val ids = records.select(col("id")).distinct()
+  private def dimensionUpdateViolations(reg: Registry, name: String, records: DataFrame): Seq[String] =
     reg.listMappings().flatMap { m =>
       val (from, to) = reg.mappingEndpoints(m)
       val sides = Seq(
         from.filter(_ == name).map(_ => graft.core.Constants.FromIdColumn),
         to.filter(_ == name).map(_ => graft.core.Constants.ToIdColumn)).flatten
       sides.flatMap { side =>
-        val missing = reg.mapping(m).select(col(side).as("id")).distinct()
-          .join(ids, Seq("id"), "left_anti")
-          .limit(5).collect().map(_.get(0))
+        val missing = unresolvedIds(reg.mapping(m), side, records)
         if (missing.isEmpty) None
         else Some(s"mapping '$m' $side values would no longer resolve: ${missing.mkString(", ")}")
       }
     }
+
+  /** Up to five distinct values of mapping column `side` that are not an
+    * `id` of dimension `records` — one anti-join, one 5-row collect. */
+  private def unresolvedIds(mapping: DataFrame, side: String, records: DataFrame): Array[Any] = {
+    import org.apache.spark.sql.functions.col
+    mapping.select(col(side).as("id")).distinct()
+      .join(records.select(col("id")).distinct(), Seq("id"), "left_anti")
+      .limit(5).collect().map(_.get(0))
   }
 
   /** Referential-integrity sweep over every declared mapping endpoint:
@@ -405,15 +409,11 @@ object Registry {
       toDimension: Option[String] = None): Unit = {
     if (validate) {
       MappingTypes.validate(name, mappingType, table, fromFractionTolerance, toFractionTolerance)
-      import org.apache.spark.sql.functions.col
       for ((dim, side) <- Seq(
           fromDimension.map((_, graft.core.Constants.FromIdColumn)),
           toDimension.map((_, graft.core.Constants.ToIdColumn))).flatten
           if HadoopFs.exists(reg.spark, s"${reg.root}/dimensions/$dim/records.parquet")) {
-        val ids = reg.dimensionRecords(dim).select(col("id")).distinct()
-        val missing = table.select(col(side).as("id")).distinct()
-          .join(ids, Seq("id"), "left_anti")
-          .limit(5).collect().map(_.get(0))
+        val missing = unresolvedIds(table, side, reg.dimensionRecords(dim))
         require(missing.isEmpty,
           s"registerMapping($name): $side values missing from dimension '$dim': ${missing.mkString(", ")}")
       }

@@ -1,6 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import graft.query.Json
 
 /** Minimal transaction-log table layout — the Delta/Iceberg commit-log
   * pattern reduced to its load-bearing core: a table IS a log of versioned
@@ -17,6 +20,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * every downstream operator (including column pruning and pushdown) works
   * unchanged.
   *
+  * Line format: one action per line, each a compact `Json.mapper` object
+  * with fields in the order `action`, `part` (tagged adds only), `file` —
+  * e.g. `{"action":"add","part":"k=1","file":"/t/f.parquet"}`. `action`
+  * is add / remove / dv / dvdrop / meta; a meta action's `file` carries
+  * the marker text. Strings are JSON-escaped, control characters
+  * included, so a marker holding a newline stays on its line.
+  *
   * Reference scope: the reference registry versions CONFIGS; file-level
   * table versioning is part of the scale extension surface.
   */
@@ -25,7 +35,51 @@ object TxnLog {
   private def logFile(logDir: String, version: Long) =
     new java.io.File(logDir, f"_v$version%06d.json")
 
-  private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+  /** One log record: `file` is the data/DV path, or the marker text of a
+    * `meta` action; `part` is an add's partition tag. */
+  private final case class Action(kind: String, file: String, part: Option[String] = None)
+
+  private def encode(a: Action): String = {
+    val n = Json.mapper.createObjectNode().put("action", a.kind)
+    a.part.foreach(n.put("part", _))
+    Json.mapper.writeValueAsString(n.put("file", a.file))
+  }
+
+  /** The actions of commit `v`, in log order — the one reader every
+    * replay below folds over. */
+  private def actions(logDir: String, v: Long): Seq[Action] =
+    java.nio.file.Files.readAllLines(logFile(logDir, v).toPath).asScala.toSeq
+      .filter(_.nonEmpty).map { line =>
+        val n = Json.mapper.readTree(line)
+        Action(n.get("action").asText(), n.get("file").asText(), Option(n.get("part")).map(_.asText()))
+      }
+
+  private def requireHead(logDir: String): Long = latestVersion(logDir).getOrElse(
+    throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
+
+  /** Refuses `v` outside [0, head]; returns the head. */
+  private def inRange(logDir: String, v: Long, what: String = "version"): Long = {
+    val latest = requireHead(logDir)
+    require(v >= 0 && v <= latest, s"txn log: $what $v out of range [0, $latest]")
+    latest
+  }
+
+  /** A data-file path as an absolute local path, whether it is logged
+    * plainly or comes back from `input_file_name()` as a URI. */
+  private def canon(p: String): String =
+    try new java.io.File(new java.net.URI(p).getPath).getAbsolutePath
+    catch { case _: Exception => new java.io.File(p).getAbsolutePath }
+
+  /** Write `df` as ONE parquet file under `dir` (replacing what is there)
+    * and return the file's absolute path — the single-file write behind
+    * every one-file commit and fixture. */
+  def writeDataFile(df: DataFrame, dir: String): String = {
+    df.coalesce(1).write.mode("overwrite").parquet(dir)
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .find(_.getName.endsWith(".parquet"))
+      .getOrElse(throw new IllegalStateException(s"txn log: no parquet written under $dir"))
+      .getAbsolutePath
+  }
 
   /** Attempt to publish `version`; returns false when ANOTHER writer won
     * the race to this version number. The publish is a hard-link creation
@@ -36,8 +90,7 @@ object TxnLog {
     * `removes` against the predecessor snapshot still REFUSES loudly —
     * only the version race returns false. `partitions` optionally tags an
     * added file with its partition spec (`col=value`, see
-    * [[commitPartitioned]] callers); the field precedes `file` so every
-    * suffix-based replay parser is unaffected. */
+    * [[livePartitions]]). */
   def tryCommit(
       logDir: String,
       version: Long,
@@ -62,19 +115,11 @@ object TxnLog {
         s"txn log: cannot remove $f — not live at version ${version - 1}"))
     }
     val lines =
-      adds.map { f =>
-        partitions.get(f) match {
-          case Some(p) => s"""{"action":"add","part":"${esc(p)}","file":"${esc(f)}"}"""
-          case None => s"""{"action":"add","file":"${esc(f)}"}"""
-        }
-      } ++
-        removes.map(f => s"""{"action":"remove","file":"${esc(f)}"}""") ++
-        dvs.map(f => s"""{"action":"dv","file":"${esc(f)}"}""") ++
-        dvDrops.map(f => s"""{"action":"dvdrop","file":"${esc(f)}"}""") ++
-        meta.map(m => s"""{"action":"meta","file":"${esc(m)}"}""")
+      adds.map(f => Action("add", f, partitions.get(f))) ++ removes.map(Action("remove", _)) ++
+        dvs.map(Action("dv", _)) ++ dvDrops.map(Action("dvdrop", _)) ++ meta.map(Action("meta", _))
     val tmp = java.io.File.createTempFile("_graft_txn", ".json", dir)
     java.nio.file.Files.write(tmp.toPath,
-      lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      lines.map(encode).mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     try {
       java.nio.file.Files.createLink(logFile(logDir, version).toPath, tmp.toPath)
       true
@@ -133,8 +178,7 @@ object TxnLog {
     var attempts = 0
     while (attempts < maxAttempts) {
       attempts += 1
-      val head = latestVersion(logDir).getOrElse(
-        throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
+      val head = requireHead(logDir)
       if (removes.nonEmpty) {
         val live = liveFiles(logDir, head)
         val gone = removes.filterNot(live.contains)
@@ -143,9 +187,6 @@ object TxnLog {
             s"txn log: conflict — ${gone.head} was removed by a concurrent commit")
         val newDvs = (dvFiles(logDir, head) -- dvFiles(logDir, basedOn)).toSeq.sorted
         if (newDvs.nonEmpty) {
-          def canon(p: String): String =
-            try new java.io.File(new java.net.URI(p).getPath).getAbsolutePath
-            catch { case _: Exception => new java.io.File(p).getAbsolutePath }
           val touched = spark.read.parquet(newDvs: _*).select(col("file")).distinct()
             .collect().map(r => canon(r.getString(0))).toSet
           val hit = removes.filter(f => touched.contains(canon(f)))
@@ -171,8 +212,7 @@ object TxnLog {
     * table size. Restoring past the vacuum watermark refuses (the target
     * snapshot's files may be physically gone). Returns the new version. */
   def restore(spark: SparkSession, logDir: String, toV: Long): Long = {
-    val head = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
+    val head = requireHead(logDir)
     require(toV <= head, s"txn log: cannot restore to future version $toV (head $head)")
     val target = liveFiles(logDir, toV)        // refuses below the vacuum watermark
     val current = liveFiles(logDir, head)
@@ -212,14 +252,10 @@ object TxnLog {
     * size is the version count, never data-scale. */
   def history(spark: SparkSession, logDir: String): DataFrame = {
     import spark.implicits._
-    val latest = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
-    (0L to latest).map { v =>
-      val lines = java.nio.file.Files.readAllLines(logFile(logDir, v).toPath)
-        .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
-      def n(kind: String) = lines.count(_.contains(s""""action":"$kind"""")).toLong
-      val metas = lines.filter(_.contains(""""action":"meta""""))
-        .map(_.split("\"file\":\"")(1).stripSuffix("\"}"))
+    (0L to requireHead(logDir)).map { v =>
+      val acts = actions(logDir, v)
+      def n(kind: String) = acts.count(_.kind == kind).toLong
+      val metas = acts.filter(_.kind == "meta").map(_.file)
       val op =
         if (metas.exists(_.startsWith("restore:"))) "restore"
         else if (metas.exists(_.startsWith("optimize:"))) "optimize"
@@ -249,35 +285,24 @@ object TxnLog {
   def retainedFrom(logDir: String): Long = {
     val f = watermarkFile(logDir)
     if (!f.exists()) 0L
-    else java.nio.file.Files.readString(f.toPath)
-      .split("\"retain_from\":")(1).takeWhile(_.isDigit).toLong
+    else Json.mapper.readTree(f).get("retain_from").asLong()
   }
 
-  /** The live file set after replaying commits 0..asOf (inclusive). */
-  def liveFiles(logDir: String, asOf: Long): Set[String] = {
-    val latest = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
-    require(asOf >= 0 && asOf <= latest,
-      s"txn log: version $asOf out of range [0, $latest]")
-    require(asOf >= retainedFrom(logDir),
-      s"txn log: version $asOf was expired by vacuum (oldest retained: ${retainedFrom(logDir)})")
-    var live = Set.empty[String]
-    (0L to asOf).foreach { v =>
-      val lines = java.nio.file.Files.readAllLines(logFile(logDir, v).toPath)
-      lines.forEach { line =>
-        if (line.nonEmpty) {
-          // two-field fixed-shape records: split-level parsing is exact
-          val file = line.split("\"file\":\"")(1).stripSuffix("\"}").replace("\\\"", "\"")
-            .replace("\\\\", "\\")
-          if (line.contains("\"action\":\"add\"")) live += file
-          else if (line.contains("\"action\":\"remove\"")) live -= file
-          // "dv" actions are row-level metadata — they never change the
-          // live DATA file set
-        }
+  /** Commits 0..asOf folded in order: the live data files with their
+    * partition tags, and the bound deletion vectors. Unguarded — the
+    * public projections below check the version. */
+  private def replay(logDir: String, asOf: Long): (Map[String, Option[String]], Set[String]) =
+    (0L to asOf).flatMap(actions(logDir, _))
+      .foldLeft((Map.empty[String, Option[String]], Set.empty[String])) {
+        case ((live, dvs), Action("add", f, part)) => (live + (f -> part), dvs)
+        case ((live, dvs), Action("remove", f, _)) => (live - f, dvs)
+        case ((live, dvs), Action("dv", f, _)) => (live, dvs + f)
+        case ((live, dvs), Action("dvdrop", f, _)) => (live, dvs - f)
+        case (state, _) => state // meta markers never change the file sets
       }
-    }
-    live
-  }
+
+  /** The live file set after replaying commits 0..asOf (inclusive). */
+  def liveFiles(logDir: String, asOf: Long): Set[String] = livePartitions(logDir, asOf).keySet
 
   /** Expire snapshots older than `retainFrom` and physically delete the
     * data files no retained version references (ref shape: Delta VACUUM /
@@ -292,26 +317,18 @@ object TxnLog {
     * older version than the current watermark refuses. Returns the
     * physically deleted data files (sorted). */
   def vacuum(logDir: String, retainFrom: Long): Seq[String] = {
-    val latest = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
-    require(retainFrom >= 0 && retainFrom <= latest,
-      s"txn log: retainFrom $retainFrom out of range [0, $latest]")
+    val latest = inRange(logDir, retainFrom, "retainFrom")
     require(retainFrom >= retainedFrom(logDir),
       s"txn log: watermark is monotone — already vacuumed to ${retainedFrom(logDir)}")
     val referenced = (retainFrom to latest).flatMap(liveFiles(logDir, _)).toSet
     // every data file ever added, straight from the log
-    val allAdds = (0L to latest).flatMap { v =>
-      java.nio.file.Files.readAllLines(logFile(logDir, v).toPath)
-        .toArray(Array.empty[String]).toSeq
-        .filter(_.contains("\"action\":\"add\""))
-        .map(_.split("\"file\":\"")(1).stripSuffix("\"}").replace("\\\"", "\"")
-          .replace("\\\\", "\\"))
-    }.toSet
+    val allAdds = (0L to latest).flatMap(actions(logDir, _))
+      .collect { case Action("add", f, _) => f }.toSet
     val doomed = (allAdds -- referenced).toSeq.sorted
     // publish the watermark FIRST: a reader racing the deletes sees the
     // refusal, never a half-deleted snapshot
     java.nio.file.Files.writeString(watermarkFile(logDir).toPath,
-      s"""{"retain_from":$retainFrom}""")
+      Json.mapper.writeValueAsString(Json.mapper.createObjectNode().put("retain_from", retainFrom)))
     doomed.foreach(f => new java.io.File(f).delete())
     doomed
   }
@@ -320,52 +337,18 @@ object TxnLog {
     * `dvdrop` actions (written by [[restore]]) un-bind — prefix replay, so
     * every historical version keeps exactly the visibility it had. */
   def dvFiles(logDir: String, asOf: Long): Set[String] = {
-    val latest = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
-    require(asOf >= 0 && asOf <= latest,
-      s"txn log: version $asOf out of range [0, $latest]")
-    var dvs = Set.empty[String]
-    (0L to asOf).foreach { v =>
-      java.nio.file.Files.readAllLines(logFile(logDir, v).toPath).forEach { line =>
-        if (line.nonEmpty) {
-          def file = line.split("\"file\":\"")(1).stripSuffix("\"}").replace("\\\"", "\"")
-            .replace("\\\\", "\\")
-          if (line.contains("\"action\":\"dv\"")) dvs += file
-          else if (line.contains("\"action\":\"dvdrop\"")) dvs -= file
-        }
-      }
-    }
-    dvs
+    inRange(logDir, asOf)
+    replay(logDir, asOf)._2
   }
 
   /** Live files at `asOf` with their partition tag (None for files added
     * before the table gained a partition spec — the Iceberg
     * partition-evolution state: one table, several layouts coexisting). */
   def livePartitions(logDir: String, asOf: Long): Map[String, Option[String]] = {
-    val latest = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
-    require(asOf >= 0 && asOf <= latest,
-      s"txn log: version $asOf out of range [0, $latest]")
+    inRange(logDir, asOf)
     require(asOf >= retainedFrom(logDir),
       s"txn log: version $asOf was expired by vacuum (oldest retained: ${retainedFrom(logDir)})")
-    var live = Map.empty[String, Option[String]]
-    (0L to asOf).foreach { v =>
-      java.nio.file.Files.readAllLines(logFile(logDir, v).toPath).forEach { line =>
-        if (line.nonEmpty) {
-          val file = line.split("\"file\":\"")(1).stripSuffix("\"}").replace("\\\"", "\"")
-            .replace("\\\\", "\\")
-          if (line.contains("\"action\":\"add\"")) {
-            val part =
-              if (line.contains("\"part\":\""))
-                Some(line.split("\"part\":\"")(1).split("\",\"file\":\"")(0)
-                  .replace("\\\"", "\"").replace("\\\\", "\\"))
-              else None
-            live += (file -> part)
-          } else if (line.contains("\"action\":\"remove\"")) live -= file
-        }
-      }
-    }
-    live
+    replay(logDir, asOf)._1
   }
 
   /** Partition-pruned file planning under PARTITION EVOLUTION: for an
@@ -409,42 +392,22 @@ object TxnLog {
   /** Data files ADDED by exactly version `v` (the streaming-source unit:
     * an append-only reader emits these rows per consumed version). */
   def addedFiles(logDir: String, v: Long): Seq[String] = {
-    val latest = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
-    require(v >= 0 && v <= latest, s"txn log: version $v out of range [0, $latest]")
-    java.nio.file.Files.readAllLines(logFile(logDir, v).toPath)
-      .toArray(Array.empty[String]).toSeq
-      .filter(_.contains("\"action\":\"add\""))
-      .map(_.split("\"file\":\"")(1).stripSuffix("\"}").replace("\\\"", "\"")
-        .replace("\\\\", "\\"))
+    inRange(logDir, v)
+    actions(logDir, v).collect { case Action("add", f, _) => f }
   }
 
   /** Whether version `v` CHANGES existing data (removes a file or commits
     * a deletion vector) — the commits an append-only streaming reader
     * must refuse or, under `skipChangeCommits`, skip. */
   def isChangeCommit(logDir: String, v: Long): Boolean = {
-    val latest = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
-    require(v >= 0 && v <= latest, s"txn log: version $v out of range [0, $latest]")
-    java.nio.file.Files.readAllLines(logFile(logDir, v).toPath)
-      .toArray(Array.empty[String]).toSeq
-      .exists(l => l.contains("\"action\":\"remove\"") || l.contains("\"action\":\"dv\"")
-        || l.contains("\"action\":\"dvdrop\""))
+    inRange(logDir, v)
+    actions(logDir, v).exists(a => a.kind == "remove" || a.kind == "dv" || a.kind == "dvdrop")
   }
 
   private def metaMarkers(logDir: String, asOf: Long, prefix: String): Seq[String] = {
-    val latest = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
-    require(asOf >= 0 && asOf <= latest,
-      s"txn log: version $asOf out of range [0, $latest]")
-    (0L to asOf).flatMap { v =>
-      java.nio.file.Files.readAllLines(logFile(logDir, v).toPath)
-        .toArray(Array.empty[String]).toSeq
-        .filter(l => l.contains("\"action\":\"meta\""))
-        .map(_.split("\"file\":\"")(1).stripSuffix("\"}").replace("\\\"", "\"")
-          .replace("\\\\", "\\"))
-        .filter(_.startsWith(prefix))
-        .map(_.stripPrefix(prefix))
+    inRange(logDir, asOf)
+    (0L to asOf).flatMap(actions(logDir, _)).collect {
+      case Action("meta", m, _) if m.startsWith(prefix) => m.stripPrefix(prefix)
     }
   }
 
@@ -472,8 +435,7 @@ object TxnLog {
     * renames O(1) on a 100 TB table. Refuses when `from` is not a current
     * logical column or `to` collides. Returns the committed version. */
   def renameColumn(spark: SparkSession, logDir: String, from: String, to: String): Long = {
-    val head = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
+    val head = requireHead(logDir)
     val logical = readAsOfMapped(spark, logDir, head).columns.toSet
     require(logical.contains(from), s"txn log: rename — no column '$from' (have ${logical.mkString(",")})")
     require(!logical.contains(to), s"txn log: rename — column '$to' already exists")
@@ -506,8 +468,7 @@ object TxnLog {
     * write. Returns the committed version. */
   def addConstraint(spark: SparkSession, logDir: String, name: String, exprSql: String): Long = {
     require(!name.contains(":") && name.nonEmpty, s"txn log: bad constraint name '$name'")
-    val head = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
+    val head = requireHead(logDir)
     require(!constraints(logDir, head).exists(_._1 == name),
       s"txn log: constraint '$name' already exists")
     val bad = readAsOfWithDeletes(spark, logDir, head)
@@ -526,19 +487,13 @@ object TxnLog {
     * committed version. */
   def appendChecked(spark: SparkSession, logDir: String, dataDir: String, df: DataFrame): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
-    val head = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
+    val head = requireHead(logDir)
     constraints(logDir, head).foreach { case (name, sql) =>
       val bad = df.filter(!coalesce(expr(sql), lit(false))).count()
       require(bad == 0L,
         s"txn log: append refused — $bad rows violate constraint '$name' ($sql)")
     }
-    val outDir = s"$dataDir/checked_${head + 1}"
-    df.coalesce(1).write.mode("overwrite").parquet(outDir)
-    val file = new java.io.File(outDir).listFiles()
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"appendChecked: no parquet under $outDir"))
-      .getAbsolutePath
+    val file = writeDataFile(df, s"$dataDir/checked_${head + 1}")
     commit(logDir, head + 1, adds = Seq(file), removes = Nil)
     head + 1
   }
@@ -593,8 +548,7 @@ object TxnLog {
       dvOutDir: String,
       predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{col, input_file_name}
-    val v = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
+    val v = requireHead(logDir)
     val files = liveFiles(logDir, v).toSeq.sorted
     require(files.nonEmpty, s"txn log: version $v has no live files")
     // predicate applies to the VISIBLE snapshot: rows already dead under an
@@ -612,12 +566,8 @@ object TxnLog {
           .select(col("file").as("__graft_file"), col("pos").as("__graft_pos"))
           .distinct(),
         Seq("__graft_file", "__graft_pos"), "left_anti")
-    visible.select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-      .coalesce(1).write.mode("overwrite").parquet(dvOutDir)
-    val dvFile = new java.io.File(dvOutDir).listFiles()
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"delete: no parquet written under $dvOutDir"))
-      .getAbsolutePath
+    val dvFile = writeDataFile(
+      visible.select(col("__graft_file").as("file"), col("__graft_pos").as("pos")), dvOutDir)
     commit(logDir, v + 1, adds = Nil, removes = Nil, dvs = Seq(dvFile))
     v + 1
   }
@@ -648,8 +598,7 @@ object TxnLog {
       bucket: Option[org.apache.spark.sql.Column] = None): Long = {
     import org.apache.spark.sql.functions.{abs, col, lit, pmod, xxhash64}
     require(targetFiles >= 1, s"txn log: compact needs targetFiles >= 1, got $targetFiles")
-    val v = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
+    val v = requireHead(logDir)
     val files = liveFiles(logDir, v).toSeq.sorted
     require(files.nonEmpty, s"txn log: version $v has no live files")
     val visible = readAsOfWithDeletes(spark, logDir, v)
@@ -691,8 +640,7 @@ object TxnLog {
       mainLog: String,
       stagingLog: String,
       basedOn: Long): Long = {
-    val stagingHead = latestVersion(stagingLog).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $stagingLog"))
+    val stagingHead = requireHead(stagingLog)
     val cloneBase = liveFiles(stagingLog, 0)
     val stagedLive = liveFiles(stagingLog, stagingHead)
     require(cloneBase.subsetOf(stagedLive),
@@ -702,7 +650,7 @@ object TxnLog {
     val delta = (stagedLive -- cloneBase).toSeq.sorted
     require(delta.nonEmpty, "txn log: publish — staging added no files")
     val staged = spark.read.option("mergeSchema", "true").parquet(delta: _*)
-    constraints(mainLog, latestVersion(mainLog).get).foreach { case (name, sql) =>
+    constraints(mainLog, requireHead(mainLog)).foreach { case (name, sql) =>
       import org.apache.spark.sql.functions.{coalesce, expr, lit}
       val bad = staged.filter(!coalesce(expr(sql), lit(false))).count()
       require(bad == 0L,
@@ -715,14 +663,8 @@ object TxnLog {
   /** Batch ids already committed via [[appendBatch]] (from `batch:<id>`
     * meta markers). */
   def committedBatchIds(logDir: String): Set[Long] =
-    latestVersion(logDir).map { latest =>
-      (0L to latest).flatMap { v =>
-        java.nio.file.Files.readAllLines(logFile(logDir, v).toPath)
-          .toArray(Array.empty[String]).toSeq
-          .filter(l => l.contains("\"action\":\"meta\"") && l.contains("batch:"))
-          .map(_.split("batch:")(1).takeWhile(_.isDigit).toLong)
-      }.toSet
-    }.getOrElse(Set.empty)
+    latestVersion(logDir).map(metaMarkers(logDir, _, "batch:").map(_.toLong).toSet)
+      .getOrElse(Set.empty)
 
   /** Exactly-once streaming append: the foreachBatch sink body for
     * ingesting a stream into a txn-log table. Structured Streaming
@@ -739,12 +681,7 @@ object TxnLog {
       batch: DataFrame,
       batchId: Long): Boolean = {
     if (committedBatchIds(logDir).contains(batchId)) return false
-    val outDir = s"$dataDir/batch_$batchId"
-    batch.coalesce(1).write.mode("overwrite").parquet(outDir)
-    val file = new java.io.File(outDir).listFiles()
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"appendBatch: no parquet under $outDir"))
-      .getAbsolutePath
+    val file = writeDataFile(batch, s"$dataDir/batch_$batchId")
     val next = latestVersion(logDir).map(_ + 1).getOrElse(0L)
     commit(logDir, next, adds = Seq(file), removes = Nil, meta = Seq(s"batch:$batchId"))
     true
@@ -775,9 +712,6 @@ object TxnLog {
     val dvTouched: Set[String] =
       if (newDvs.isEmpty) Set.empty
       else {
-        def canon(p: String): String =
-          try new java.io.File(new java.net.URI(p).getPath).getAbsolutePath
-          catch { case _: Exception => new java.io.File(p).getAbsolutePath }
         val hit = spark.read.parquet(newDvs: _*).select(col("file")).distinct()
           .collect().map(r => canon(r.getString(0))).toSet
         (before ++ after).filter(f => hit.contains(canon(f)))
@@ -836,8 +770,7 @@ object TxnLog {
       updates: DataFrame,
       keyCol: String): Long = {
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit}
-    val v = latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
+    val v = requireHead(logDir)
     val files = liveFiles(logDir, v).toSeq.sorted
     val snap = spark.read.option("mergeSchema", "true").parquet(files: _*)
     require(updates.columns.sorted.sameElements(snap.columns.sorted),
@@ -863,9 +796,6 @@ object TxnLog {
           .distinct(),
         Seq("__graft_file", "__graft_pos"), "left_anti")
     }
-    def canon(p: String): String =
-      try new java.io.File(new java.net.URI(p).getPath).getAbsolutePath
-      catch { case _: Exception => new java.io.File(p).getAbsolutePath }
     // which files contain a matched VISIBLE key — driver-bounded by the file count
     val touchedCanon = visible(snap)
       .join(keys, Seq(keyCol), "left_semi")
@@ -887,12 +817,7 @@ object TxnLog {
           else org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)
         }.toIndexedSeq: _*).unionByName(updates)
       }
-    merged.coalesce(1).write.mode("overwrite").parquet(outDir)
-    val outFile = new java.io.File(outDir).listFiles()
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"merge: no parquet written under $outDir"))
-      .getAbsolutePath
-    commit(logDir, v + 1, adds = Seq(outFile), removes = touched)
+    commit(logDir, v + 1, adds = Seq(writeDataFile(merged, outDir)), removes = touched)
     v + 1
   }
 }

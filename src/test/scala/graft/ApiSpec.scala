@@ -432,4 +432,21 @@ class ApiSpec extends SparkSpec {
       assert(get("/registry/datasets/nope/provenance").statusCode() == 404)
     } finally api.stop()
   }
+
+  test("unknown project path: the 404 body stays valid JSON when the path decodes a quote") {
+    val api = new Api(buildRegistry())
+    val port = api.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      def get(path: String): HttpResponse[String] =
+        client.send(
+          HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path")).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+      val projId = get("/projects").body().split("\"")(5)
+      val r = get(s"/projects/$projId/a%22b/c")
+      assert(r.statusCode() == 404)
+      assert(graft.query.Json.mapper.readTree(r.body()).get("error").asText() ==
+        s"unknown project path: /projects/$projId/a\"b/c")
+    } finally api.stop()
+  }
 }

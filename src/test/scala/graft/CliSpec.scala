@@ -434,6 +434,26 @@ class RegistryOpsSpec extends SparkSpec {
     assert(v2.dimensionRecords("geo").count() == 3 && v1.dimensionRecords("geo").count() == 2)
   }
 
+  test("mapping-side reference checks: golden refusals for a dimension update and a mapping registration") {
+    val reg = Registry(spark, Files.createTempDirectory("graft-refmsg").toString)
+    Registry.registerDimension(reg, "geo", Seq(("a", "A"), ("b", "B")).toDF("id", "name"))
+    Registry.registerMapping(reg, "geo_up",
+      Seq(("a", "all", 1.0), ("b", "all", 1.0)).toDF("from_id", "to_id", "from_fraction"),
+      fromDimension = Some("geo"))
+    val update = intercept[IllegalArgumentException] {
+      Registry.registerDimension(reg, "geo", Seq(("a", "A")).toDF("id", "name"))
+    }
+    assert(update.getMessage == "requirement failed: registerDimension(geo): incompatible update — " +
+      "mapping 'geo_up' from_id values would no longer resolve: b")
+    val mapping = intercept[IllegalArgumentException] {
+      Registry.registerMapping(reg, "bad",
+        Seq(("zZ", "all", 1.0)).toDF("from_id", "to_id", "from_fraction"),
+        fromDimension = Some("geo"))
+    }
+    assert(mapping.getMessage ==
+      "requirement failed: registerMapping(bad): from_id values missing from dimension 'geo': zZ")
+  }
+
   test("filtered registry answers a project query identically on the retained subset") {
     val root = Files.createTempDirectory("graft-filtreg").toString
     val reg = Registry(spark, root)

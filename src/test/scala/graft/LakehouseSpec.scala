@@ -295,4 +295,95 @@ class LakehouseSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](
       TxnLog.pruneByPartitionRange(log, 0, "day", 5L, 4L))
   }
+
+  test("txn log codec: a multi-line constraint keeps the head readable and enforced") {
+    val root = java.nio.file.Files.createTempDirectory("lh_multiline").toString
+    val log = s"$root/_log"
+    val f0 = fileOf(root, Seq(1L, 5L, 9L).toDF("x"), "f0")
+    TxnLog.commit(log, 0, Seq(f0), Nil)
+    val v = TxnLog.addConstraint(spark, log, "band", "x > 0\n AND x < 10")
+    assert(TxnLog.liveFiles(log, v) == Set(f0))
+    assert(TxnLog.constraints(log, v) == Seq(("band", "x > 0\n AND x < 10")))
+    // both lines are enforced: 10 passes the first, fails the second
+    assertThrows[IllegalArgumentException](
+      TxnLog.appendChecked(spark, log, root, Seq(10L).toDF("x")))
+    assert(TxnLog.latestVersion(log).contains(v))
+    assert(TxnLog.appendChecked(spark, log, root, Seq(3L).toDF("x")) == v + 1)
+  }
+
+  test("txn log codec: constraint text naming 'batch:x' does not read as a batch id") {
+    val root = java.nio.file.Files.createTempDirectory("lh_batchtext").toString
+    val log = s"$root/_log"
+    TxnLog.commit(log, 0, Seq(fileOf(root, Seq("a").toDF("tag"), "f0")), Nil)
+    TxnLog.addConstraint(spark, log, "tagged", "tag <> 'batch:x'")
+    assert(TxnLog.appendBatch(log, root, Seq("b").toDF("tag"), 7L))
+    assert(TxnLog.appendBatch(log, root, Seq("c").toDF("tag"), 8L))
+    assert(!TxnLog.appendBatch(log, root, Seq("c").toDF("tag"), 8L))
+    assert(TxnLog.committedBatchIds(log) == Set(7L, 8L))
+  }
+
+  test("txn log codec: commit lines keep the established bytes") {
+    val log = java.nio.file.Files.createTempDirectory("lh_golden_w").toString + "/_log"
+    TxnLog.commit(log, 0, adds = Seq("/d/a.parquet", "/d/b.parquet"), removes = Nil,
+      dvs = Seq("/d/dv0.parquet"), partitions = Map("/d/b.parquet" -> "k=1"))
+    TxnLog.commit(log, 1, adds = Seq("/d/c.parquet", "/d/d\\e.parquet"),
+      removes = Seq("/d/a.parquet"), dvs = Seq("/d/dv1.parquet"),
+      meta = Seq("note:say \"hi\" \\ bye"), dvDrops = Seq("/d/dv0.parquet"),
+      partitions = Map("/d/c.parquet" -> "k=\"2\""))
+    def text(v: Int) = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(log, f"_v$v%06d.json"))
+    assert(text(0) ==
+      """{"action":"add","file":"/d/a.parquet"}
+        |{"action":"add","part":"k=1","file":"/d/b.parquet"}
+        |{"action":"dv","file":"/d/dv0.parquet"}
+        |""".stripMargin)
+    assert(text(1) ==
+      """{"action":"add","part":"k=\"2\"","file":"/d/c.parquet"}
+        |{"action":"add","file":"/d/d\\e.parquet"}
+        |{"action":"remove","file":"/d/a.parquet"}
+        |{"action":"dv","file":"/d/dv1.parquet"}
+        |{"action":"dvdrop","file":"/d/dv0.parquet"}
+        |{"action":"meta","file":"note:say \"hi\" \\ bye"}
+        |""".stripMargin)
+  }
+
+  test("txn log codec: a log in the established text replays unchanged") {
+    val log = java.nio.file.Files.createTempDirectory("lh_golden_r").toString
+    val commits = Seq(
+      """{"action":"add","file":"/t/a.parquet"}
+        |{"action":"add","part":"k=1","file":"/t/b \"q\".parquet"}
+        |""",
+      """{"action":"dv","file":"/t/dv0.parquet"}
+        |{"action":"meta","file":"constraint:pos:x > 0 AND s <> \"a\\b\""}
+        |""",
+      """{"action":"add","file":"/t/c.parquet"}
+        |{"action":"remove","file":"/t/a.parquet"}
+        |{"action":"meta","file":"rename:x->y"}
+        |""",
+      """{"action":"add","file":"/t/a.parquet"}
+        |{"action":"remove","file":"/t/c.parquet"}
+        |{"action":"dvdrop","file":"/t/dv0.parquet"}
+        |{"action":"meta","file":"restore:0"}
+        |""")
+    commits.zipWithIndex.foreach { case (c, v) =>
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(log, f"_v$v%06d.json"), c.stripMargin)
+    }
+    val (a, b, c) = ("/t/a.parquet", "/t/b \"q\".parquet", "/t/c.parquet")
+    assert(TxnLog.liveFiles(log, 1) == Set(a, b))
+    assert(TxnLog.liveFiles(log, 2) == Set(b, c))
+    assert(TxnLog.livePartitions(log, 3) == Map(a -> None, b -> Some("k=1")))
+    assert(TxnLog.dvFiles(log, 2) == Set("/t/dv0.parquet"))
+    assert(TxnLog.dvFiles(log, 3).isEmpty)
+    assert(TxnLog.constraints(log, 3) == Seq(("pos", "x > 0 AND s <> \"a\\b\"")))
+    assert(TxnLog.columnMapping(log, 1).isEmpty)
+    assert(TxnLog.columnMapping(log, 3) == Map("x" -> "y"))
+    val h = TxnLog.history(spark, log).orderBy("version")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getString(5)))
+    assert(h.toSeq == Seq(
+      (0L, 2L, 0L, 0L, 0L, "append"),
+      (1L, 0L, 0L, 1L, 0L, "add-constraint"),
+      (2L, 1L, 1L, 0L, 0L, "rename-column"),
+      (3L, 1L, 1L, 0L, 1L, "restore")))
+  }
 }

@@ -85,10 +85,10 @@ class Round17OpsSpec extends SparkSpec {
         reg, ids.head, "curation:spec", srcTok, params)(
         sys.error("build thunk must not run on a provenance hit"))
     }
-    // exactly one job: spark.read.parquet's footer/schema-inference task
-    // (file-count-bounded metadata, measured) — never the corpus-pass
-    // shingle build, which the throwing thunk above proves is not invoked
-    assert(jobs <= 1L, s"expected a metadata-only resolve (≤ 1 footer job), saw $jobs jobs")
+    // zero jobs: the artifact table opens from its footer schema without a
+    // schema-inference task, and the corpus-pass shingle build never runs
+    // (the throwing thunk above proves it is not invoked)
+    assert(jobs == 0L, s"expected a metadata-only resolve (0 jobs), saw $jobs jobs")
   }
 
   test("input rewrite invalidates the artifacts (rebuild, fresh provenance)") {
