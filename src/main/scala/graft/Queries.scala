@@ -1,15 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.core.Constants._
-import graft.operators.{Aggregation, DatasetExpr, DimensionFilter, MappingKernel, Reshape, SetOps}
-import graft.functions.{Growth, Units}
-import graft.time.{AnnualTime, TimeAdjustments}
-import graft.text.{Dedup, TextFunctions}
-import graft.ml.Similarity
-import graft.multimodal.Multimodal
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The operator catalog: every query exercises one operator family from
   * SURVEY.md §2 (or a training-data-pipeline extension) against the
@@ -26,7 +17,7 @@ object Queries {
 
   /** The catalog record: a named query over a testdata dir plus its DuckDB
     * oracle (see QueryDsl — helpers and the record live there so the
-    * per-chunk catalog files in `queries/` can share them). */
+    * per-family catalog files in `queries/` can share them). */
   type Q = QueryDsl.Q
   val Q: QueryDsl.Q.type = QueryDsl.Q
 
@@ -36,6 +27,10 @@ object Queries {
   def prewarmRegistries(s: SparkSession, dir: String): Unit =
     QueryDsl.prewarmRegistries(s, dir)
 
+  /** Every family's queries in query-number order (`q<N>_…`, N ascending). */
   val all: Seq[Q] =
-    Catalog1.all ++ Catalog2.all ++ Catalog3.all ++ Catalog4.all ++ Catalog5.all ++ Catalog6.all ++ Catalog7.all ++ Catalog8.all ++ Catalog9.all ++ Catalog9b.all ++ Catalog10.all ++ Catalog11.all ++ Catalog12.all ++ Catalog13.all ++ Catalog14.all ++ Catalog15.all ++ Catalog16.all ++ Catalog17.all
+    Seq(DsgridCatalog.all, RelationalCatalog.all, LakehouseCatalog.all, StreamingCatalog.all,
+      GraphCatalog.all, GeoCatalog.all, VectorCatalog.all, TextCatalog.all, TextDedupCatalog.all,
+      TextCurationCatalog.all, StatsCatalog.all, StatsAnalyticsCatalog.all)
+      .flatten.sortBy(q => q.name.drop(1).takeWhile(_.isDigit).toInt)
 }

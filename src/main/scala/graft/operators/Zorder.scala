@@ -72,8 +72,7 @@ object Zorder {
       numFiles: Int): Long = {
     import graft.sources.TxnLog
     require(numFiles >= 1, s"optimizeTable: numFiles must be >= 1, got $numFiles")
-    val v = TxnLog.latestVersion(logDir).getOrElse(
-      throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
+    val v = TxnLog.requireHead(logDir)
     val files = TxnLog.liveFiles(logDir, v).toSeq.sorted
     // rewrite the VISIBLE snapshot, not the raw live files: a table with
     // bound deletion vectors would otherwise resurrect DV-killed rows in

@@ -4,18 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Constants._
-import graft.operators.{Aggregation, DatasetExpr, DimensionFilter, MappingKernel, Reshape, SetOps}
-import graft.functions.{Growth, Units}
-import graft.time.{AnnualTime, TimeAdjustments}
-import graft.text.{Dedup, TextFunctions}
-import graft.ml.Similarity
-import graft.multimodal.Multimodal
 
 /** Shared vocabulary of the query catalog: the `Q` record, table readers
   * (`t` / `normalizeTs`), memoized registries, deterministic-uniform and
-  * BPE oracle helpers, and the streaming start scope. Catalog chunk files
-  * (`queries/Catalog*.scala`) import this wholesale; `graft.Queries`
-  * re-exports the public pieces. */
+  * BPE oracle helpers, and the streaming start scope. The catalog family
+  * files (`queries/<Family>Catalog.scala`) import this wholesale;
+  * `graft.Queries` re-exports the public pieces. */
 private[graft] object QueryDsl {
 
   case class Q(
@@ -35,15 +29,21 @@ private[graft] object QueryDsl {
     * input order, so the assembled local frame is bit-identical to the
     * sequential loop's. Use ONLY when iterations touch disjoint state.
     * Bounded dedicated pool: the global EC would serialize behind other
-    * work and an unbounded one could swamp the scheduler. */
+    * work and an unbounded one could swamp the scheduler. Each task runs
+    * under the caller's session, pinned explicitly: a worker thread must
+    * not depend on which thread created it (the active-session
+    * thread-local is inherited only at thread creation). */
   private[graft] def parActions[A, B](xs: Seq[A], par: Int = 4)(f: A => B): Seq[B] =
     if (xs.sizeIs <= 1) xs.map(f)
     else {
+      val session = SparkSession.active
       val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(par, xs.size))
       implicit val ec: scala.concurrent.ExecutionContextExecutorService =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       try scala.concurrent.Await.result(
-        scala.concurrent.Future.traverse(xs)(a => scala.concurrent.Future(f(a))),
+        scala.concurrent.Future.traverse(xs) { a =>
+          scala.concurrent.Future { SparkSession.setActiveSession(session); f(a) }
+        },
         scala.concurrent.duration.Duration.Inf)
       finally pool.shutdown()
     }
@@ -78,27 +78,40 @@ private[graft] object QueryDsl {
   private[graft] def t(spark: SparkSession, dir: String, name: String): DataFrame =
     normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
 
+  /** Every directory a catalog query or fixture writes lives under one
+    * scratch root per JVM, deleted by a shutdown hook, so runs leave
+    * nothing behind in `java.io.tmpdir`. The delete does not follow
+    * symlinks: the streaming queries' links to the events file are
+    * unlinked, never their targets. */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-scratch")
+    sys.addShutdownHook(
+      scala.util.Try(org.apache.spark.network.util.JavaUtils.deleteRecursively(root.toFile)))
+    root
+  }
+
+  /** A fresh directory under the JVM's scratch root. */
+  private[graft] def scratch(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
+
+  private val memos =
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), (SparkSession, Any)]
+
+  /** Build a fixture (a registry, a written fixture dir, a materialized
+    * view) once per (sf dir, kind, Spark application): data preparation,
+    * not query work. The key includes the application id because a
+    * memoized value can hold its SparkSession, so a fresh session in the
+    * same JVM must rebuild. Entries whose session has stopped are dropped
+    * so a long-lived JVM that cycles sessions doesn't accumulate dead
+    * object graphs. */
+  private[graft] def memo[A](s: SparkSession, dir: String, kind: String)(build: => A): A = {
+    memos.filterInPlace((_, v) => !v._1.sparkContext.isStopped)
+    memos.getOrElseUpdate((dir, kind, s.sparkContext.applicationId), (s, build))._2.asInstanceOf[A]
+  }
+
   // ------------------------------------------------------------------
   // Relational core
   // ------------------------------------------------------------------
-
-  /** Shared project registries over the test tables, built once per
-    * (JVM, sf-dir): registration is data preparation, not query work — the
-    * reference's queries run against pre-registered projects too, and every
-    * other catalog query reads pre-existing parquet. Two roots because the
-    * TPC-H-derived project and the events-derived metering project define
-    * different `geography` dimension records. */
-  private[graft] val registryMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), graft.registry.Registry]
-
-  /** Memo key includes the Spark application id: a memoized Registry holds
-    * its SparkSession, so a fresh session in the same JVM must rebuild.
-    * Entries whose session has stopped are dropped so a long-lived JVM that
-    * cycles sessions doesn't accumulate dead object graphs. */
-  private[graft] def memoKey(s: SparkSession, dir: String, kind: String) = {
-    registryMemo.filterInPlace((_, reg) => !reg.spark.sparkContext.isStopped)
-    (dir, kind, s.sparkContext.applicationId)
-  }
 
   /** Build both shared registries eagerly — callers that want registration
     * (data prep) off their own clock, e.g. the bench harness's untimed
@@ -108,13 +121,19 @@ private[graft] object QueryDsl {
     meterRegistry(s, dir)
   }
 
-  /** Core project: accounts/cust_bal/supp_bal datasets, nation→region
+  /** Shared project registries over the test tables: registration is data
+    * preparation, not query work — the reference's queries run against
+    * pre-registered projects too, and every other catalog query reads
+    * pre-existing parquet. Two roots because the TPC-H-derived project and
+    * the events-derived metering project define different `geography`
+    * dimension records.
+    *
+    * Core project: accounts/cust_bal/supp_bal datasets, nation→region
     * mapping, region-level geography records, sector records. */
   private[graft] def coreRegistry(s: SparkSession, dir: String): graft.registry.Registry =
-    registryMemo.getOrElseUpdate(memoKey(s, dir, "core"), {
+    memo(s, dir, "core") {
       import graft.registry.Registry
-      val root = java.nio.file.Files.createTempDirectory("graft-registry-core").toString
-      val reg = Registry(s, root)
+      val reg = Registry(s, scratch("graft-registry-core"))
       val c = t(s, dir, "customer")
       val n = t(s, dir, "nation")
       val r = t(s, dir, "region")
@@ -141,15 +160,14 @@ private[graft] object QueryDsl {
       Registry.registerDimension(reg, "sector",
         c.select(col("c_mktsegment").as("id"), lower(col("c_mktsegment")).as("name")).distinct())
       reg
-    })
+    }
 
   /** Metering project: per-user-bucket events with tz-carrying geography. */
   private[graft] def meterRegistry(s: SparkSession, dir: String): graft.registry.Registry =
-    registryMemo.getOrElseUpdate(memoKey(s, dir, "meter"), {
+    memo(s, dir, "meter") {
       import graft.registry.Registry
       import s.implicits._
-      val root = java.nio.file.Files.createTempDirectory("graft-registry-meter").toString
-      val reg = Registry(s, root)
+      val reg = Registry(s, scratch("graft-registry-meter"))
       val e = t(s, dir, "events")
       Registry.registerDataset(reg, "meter",
         e.select(
@@ -162,7 +180,7 @@ private[graft] object QueryDsl {
           ("g1", "geo one", "America/Denver"),
           ("g2", "geo two", "UTC")).toDF("id", "name", "time_zone"))
       reg
-    })
+    }
 
   /** Cross-engine-replayable uniform for the sampling catalog queries:
     * a Knuth multiplicative mix of the id plus a seed offset, in long
@@ -184,14 +202,18 @@ private[graft] object QueryDsl {
   private[graft] def knuthUniformSql(keyExpr: String, seed: String): String =
     s"(($keyExpr * $KnuthA + ${seedOffset(seed)}) % $UniformM) / $UniformM.0"
 
-  /** Near-dup CLUSTERING (training-data pipeline op): LSH pairs are not a
-    * dedup decision — near-duplication is transitive in practice, so the
-    * pipeline needs connected components over the verified pairs and one
-    * representative per component. Corpus: each doc plus two clipped
-    * variants (chains full≈minus1≈minus2). Output: cluster-size histogram.
-    * Oracle: exact-Jaccard pairs via inverted-index join (as q29) + a
-    * recursive CTE computing min-reachable-id components — fully
-    * independent of the LSH path. */
+  /** DuckDB word-trigram shingle sets `(doc_id, shingles)` of relation
+    * `src`'s documents — lowercased, non-alphanumerics blanked, a document
+    * of at most 3 tokens its own single shingle: the oracles' spelling of
+    * [[graft.text.Dedup.shingleSets]]. */
+  private[graft] def shingleSetsSql(src: String): String =
+    """SELECT doc_id,
+                list_distinct(CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
+                  ELSE list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' ')) END) AS shingles
+              FROM (SELECT doc_id,
+                list_filter(regexp_split_to_array(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), '\s+'), x -> len(x) > 0) AS toks
+                FROM """ + src + ")"
+
   /** Shared q69/q82 fixture: the first 2000 documents plus two clipped
     * copies (1 and 2 trailing tokens removed, ids offset by 1M/2M), so
     * near-dup components of known shape exist. The clip length is clamped
@@ -223,7 +245,7 @@ private[graft] object QueryDsl {
     * The exhaustive form blew the driver's correctness-gate budget
     * (~190 s/oracle at sf0.01, the r6/r7 `{}` outage); this runs in ~3 s. */
   private[graft] val nearDupComponentsCte: String =
-    """corpus AS (
+    raw"""corpus AS (
               SELECT doc_id, text FROM documents WHERE doc_id < 2000
               UNION ALL
               SELECT doc_id + 1000000, array_to_string(toks[1:greatest(len(toks)-1, 0)], ' ')
@@ -234,12 +256,7 @@ private[graft] object QueryDsl {
               FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
                     FROM documents WHERE doc_id < 2000)),
             sh AS (
-              SELECT doc_id,
-                list_distinct(CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')]
-                  ELSE list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' ')) END) AS shingles
-              FROM (SELECT doc_id,
-                list_filter(regexp_split_to_array(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), '\s+'), x -> len(x) > 0) AS toks
-                FROM corpus)),
+              ${shingleSetsSql("corpus")}),
             shsz AS (SELECT doc_id, len(shingles) AS sz FROM sh),
             shex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
             shinter AS (
@@ -258,6 +275,23 @@ private[graft] object QueryDsl {
               UNION
               SELECT w.id, e.b FROM walk w JOIN edges e ON w.reach = e.a),
             roots AS (SELECT id, MIN(reach) AS root FROM walk GROUP BY id)"""
+
+  /** DuckDB replay of [[graft.text.TextFunctions.languageIdFromTokens]]
+    * over a distinct-token list column `toks`: one `s_<lang>` overlap
+    * score per language profile (`langScoresSql`), and their argmax as one
+    * expression (`langArgmaxSql`) — the engine's fold, starting at
+    * ('und', 0), where only a strictly greater score replaces. */
+  private[graft] def langScoresSql(toks: String): String =
+    graft.text.TextFunctions.languageProfiles.toSeq.sortBy(_._1).map { case (lang, words) =>
+      s"len(list_intersect($toks, [${words.map(w => s"'$w'").mkString(", ")}])) AS s_$lang"
+    }.mkString(", ")
+
+  private[graft] val langArgmaxSql: String =
+    graft.text.TextFunctions.languageProfiles.toSeq.sortBy(_._1)
+      .foldLeft(("'und'", "0")) { case ((bl, bs), (lang, _)) =>
+        (s"(CASE WHEN s_$lang > $bs THEN '$lang' ELSE $bl END)",
+          s"(CASE WHEN s_$lang > $bs THEN s_$lang ELSE $bs END)")
+      }._1
 
   /** DuckDB replay of `Bpe.trainMerges` for `k` rounds: per round, weighted
     * adjacent-pair counts over the word table, argmax with the same
@@ -303,25 +337,14 @@ private[graft] object QueryDsl {
         FROM ($union) ORDER BY rank"""
   }
 
-  private[graft] val streamRuns = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** The DuckDB replay of [[graft.operators.Linkage.flog2fp]] — the
+    * established fixed-point floor-log₂ macro (q90/q237/q329/q334). */
+  private[graft] def flog(x: String) =
+    s"(16 * (length(bin($x)) - 1) - 16 + (($x) * 16) // (1::BIGINT << (length(bin($x)) - 1)))"
 
   /** Catalog-side alias for [[graft.streaming.StreamOps.scopedStreamStart]]
     * (the scoping logic lives with the streaming operators since r18 so
     * the library surface and the bench warm-up share one copy). */
   private[graft] def scopedStreamStart[A](s: SparkSession)(start: => A): A =
     graft.streaming.StreamOps.scopedStreamStart(s)(start)
-
-  private[graft] val q221Runs = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private[graft] val q238Runs = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** The cost-based-optimizer statistics surface: nation and customer
-    * registered as catalog tables, `ANALYZE TABLE ... COMPUTE STATISTICS
-    * FOR COLUMNS` run, and the recorded stats read back — row counts and
-    * column NDVs (exact at these cardinalities: Spark's HLL++ is sparse-
-    * mode-exact for small distinct sets), which is what the planner uses
-    * to choose broadcast sides without hints. Oracle recomputes the same
-    * stats from the data; TopKSpec-style plan proof lives in the catalog
-    * stats themselves being non-null. */
-  private[graft] val q250Runs = new java.util.concurrent.atomic.AtomicInteger(0)
 }

@@ -54,7 +54,8 @@ object TxnLog {
         Action(n.get("action").asText(), n.get("file").asText(), Option(n.get("part")).map(_.asText()))
       }
 
-  private def requireHead(logDir: String): Long = latestVersion(logDir).getOrElse(
+  /** The head version; refuses a log with no commits. */
+  private[graft] def requireHead(logDir: String): Long = latestVersion(logDir).getOrElse(
     throw new IllegalArgumentException(s"txn log: no commits in $logDir"))
 
   /** Refuses `v` outside [0, head]; returns the head. */
@@ -288,18 +289,25 @@ object TxnLog {
     else Json.mapper.readTree(f).get("retain_from").asLong()
   }
 
-  /** Commits 0..asOf folded in order: the live data files with their
-    * partition tags, and the bound deletion vectors. Unguarded — the
-    * public projections below check the version. */
-  private def replay(logDir: String, asOf: Long): (Map[String, Option[String]], Set[String]) =
-    (0L to asOf).flatMap(actions(logDir, _))
-      .foldLeft((Map.empty[String, Option[String]], Set.empty[String])) {
-        case ((live, dvs), Action("add", f, part)) => (live + (f -> part), dvs)
-        case ((live, dvs), Action("remove", f, _)) => (live - f, dvs)
-        case ((live, dvs), Action("dv", f, _)) => (live, dvs + f)
-        case ((live, dvs), Action("dvdrop", f, _)) => (live, dvs - f)
-        case (state, _) => state // meta markers never change the file sets
-      }
+  /** A replay state: the live data files with their partition tags, and
+    * the bound deletion vectors. */
+  private type Snapshot = (Map[String, Option[String]], Set[String])
+
+  private val emptySnapshot: Snapshot = (Map.empty, Set.empty)
+
+  /** One action applied to a replay state. */
+  private def applyAction(state: Snapshot, a: Action): Snapshot = (state, a) match {
+    case ((live, dvs), Action("add", f, part)) => (live + (f -> part), dvs)
+    case ((live, dvs), Action("remove", f, _)) => (live - f, dvs)
+    case ((live, dvs), Action("dv", f, _)) => (live, dvs + f)
+    case ((live, dvs), Action("dvdrop", f, _)) => (live, dvs - f)
+    case _ => state // meta markers never change the file sets
+  }
+
+  /** Commits 0..asOf folded in order. Unguarded — the public projections
+    * below check the version. */
+  private def replay(logDir: String, asOf: Long): Snapshot =
+    (0L to asOf).flatMap(actions(logDir, _)).foldLeft(emptySnapshot)(applyAction)
 
   /** The live file set after replaying commits 0..asOf (inclusive). */
   def liveFiles(logDir: String, asOf: Long): Set[String] = livePartitions(logDir, asOf).keySet
@@ -320,10 +328,16 @@ object TxnLog {
     val latest = inRange(logDir, retainFrom, "retainFrom")
     require(retainFrom >= retainedFrom(logDir),
       s"txn log: watermark is monotone — already vacuumed to ${retainedFrom(logDir)}")
-    val referenced = (retainFrom to latest).flatMap(liveFiles(logDir, _)).toSet
-    // every data file ever added, straight from the log
-    val allAdds = (0L to latest).flatMap(actions(logDir, _))
-      .collect { case Action("add", f, _) => f }.toSet
+    // one pass over the log, each commit read once: the replay's live set
+    // after every retained version, and every data file ever added
+    val (_, referenced, allAdds) =
+      (0L to latest).foldLeft((emptySnapshot, Set.empty[String], Set.empty[String])) {
+        case ((state, ref, adds), v) =>
+          val acts = actions(logDir, v)
+          val next = acts.foldLeft(state)(applyAction)
+          (next, if (v >= retainFrom) ref ++ next._1.keySet else ref,
+            adds ++ acts.collect { case Action("add", f, _) => f })
+      }
     val doomed = (allAdds -- referenced).toSeq.sorted
     // publish the watermark FIRST: a reader racing the deletes sees the
     // refusal, never a half-deleted snapshot
