@@ -10,6 +10,7 @@ import graft.sources.HadoopFs
   * listing):
   *
   * {{{
+  * graft.Cli config create <config.json> <registryRoot>
   * graft.Cli query project <registryRoot> <query.json> <outDir> [--csv] [--cache <dir>]
   * graft.Cli query dataset <registryRoot> <query.json> <outDir> [--csv] [--cache <dir>]
   * graft.Cli registry list <registryRoot>
@@ -29,9 +30,9 @@ import graft.sources.HadoopFs
   * graft.Cli registry auto-update-dimension <registryRoot> <name> <records-path> [--category c]
   * graft.Cli registry generate-dataset-config <registryRoot> <datasetId> <data-path> <out-dir> [--time-cols a,b] [--register]
   * graft.Cli registry generate-project-query <registryRoot> <name> <ds1,ds2,...> <out.json>
-  * graft.Cli query composite-create <registryRoot> <query.json> <id>
-  * graft.Cli query composite-run <registryRoot> <id> <query.json> <outDir> [--csv]
-  * graft.Cli query register-derived <registryRoot> <query.json> <id>
+  * graft.Cli query composite-create <registryRoot> <query.json> <id> [--cache <dir>]
+  * graft.Cli query composite-run <registryRoot> <id> <query.json> <outDir> [--csv] [--cache <dir>]
+  * graft.Cli query register-derived <registryRoot> <query.json> <id> [--cache <dir>]
   * graft.Cli curate <dataDir> <plan.json> <outDir> [--csv] [--cache <dir>] [--resume] [--dry-run] [--register <registryRoot>]
   * graft.Cli serve <registryRoot> [port]
   * }}}
@@ -132,8 +133,8 @@ object Cli {
     // parse, submit with optional cache/resume, write result + sidecar)
     case "curate" :: dataDir :: planFile :: outDir :: rest =>
       val spark = GraftSession.get()
-      val planText = readFile(planFile)
       val rc = validated {
+        val planText = readFile(planFile)
         val plan = graft.query.CurationJson.parse(planText)
         val sub = new graft.query.CurationSubmitter(
           spark, dataDir, flagValue(rest, "--cache"), resume = rest.contains("--resume"))
@@ -190,24 +191,23 @@ object Cli {
     case "query" :: kind :: registryRoot :: queryFile :: outDir :: rest
         if kind == "project" || kind == "dataset" =>
       val spark = GraftSession.get()
-      val reg = Registry(spark, registryRoot)
-      val cacheDir = rest.dropWhile(_ != "--cache").drop(1).headOption
-      val queryText = readFile(queryFile)
-      val submitter = new Submitter(reg, cacheDir)
-      val (name, result) =
-        if (kind == "project") {
-          val q = Json.parseProjectQuery(queryText); (q.name, submitter.submit(q))
-        } else {
-          val q = Json.parseDatasetQuery(queryText); (q.name, submitter.submit(q))
-        }
-      if (rest.contains("--csv"))
-        graft.sources.Writers.csv(result, s"$outDir/$name.csv", singleFile = true)
-      else
-        graft.sources.Writers.parquetAutoPartition(spark, result, s"$outDir/$name.parquet")
-      // query sidecar, as the reference writes beside results
-      HadoopFs.writeText(spark, s"$outDir/query.json", queryText)
-      println(s"wrote $outDir/$name")
-      0
+      validated {
+        val queryText = readFile(queryFile)
+        val submitter = new Submitter(Registry(spark, registryRoot), flagValue(rest, "--cache"))
+        val (name, result) =
+          if (kind == "project") {
+            val q = Json.parseProjectQuery(queryText); (q.name, submitter.submit(q))
+          } else {
+            val q = Json.parseDatasetQuery(queryText); (q.name, submitter.submit(q))
+          }
+        if (rest.contains("--csv"))
+          graft.sources.Writers.csv(result, s"$outDir/$name.csv", singleFile = true)
+        else
+          graft.sources.Writers.parquetAutoPartition(spark, result, s"$outDir/$name.parquet")
+        // query sidecar, as the reference writes beside results
+        HadoopFs.writeText(spark, s"$outDir/query.json", queryText)
+        println(s"wrote $outDir/$name")
+      }
 
     case "registry" :: "list" :: registryRoot :: Nil =>
       val reg = Registry(GraftSession.get(), registryRoot)
@@ -265,26 +265,22 @@ object Cli {
 
     case "registry" :: "register-bulk" :: registryRoot :: manifestPath :: rest =>
       val spark = GraftSession.get()
-      val manifest = readFile(manifestPath)
-      val journal = flagValue(rest, "--journal")
-        .getOrElse(manifestPath + ".journal.json")
-      val base = java.nio.file.Paths.get(manifestPath).toAbsolutePath.getParent.toString
-      val rc = validated {
+      validated {
+        val base = java.nio.file.Paths.get(manifestPath).toAbsolutePath.getParent.toString
         val r = graft.registry.BulkRegister(
-          Registry(spark, registryRoot), manifest,
+          Registry(spark, registryRoot), readFile(manifestPath),
           baseDir = Some(flagValue(rest, "--data-base-dir").getOrElse(base)),
-          journalPath = Some(journal))
+          journalPath = Some(flagValue(rest, "--journal").getOrElse(manifestPath + ".journal.json")))
         println(s"registered ${r.registered.size} (skipped ${r.skipped.size} journaled)")
       }
-      rc
 
     // §3.3 composite/derived lifecycle on the command line (ref:
     // dsgrid/cli/query.py:464+ create-composite / query-composite /
     // create-derived-dataset), delegating to the Submitter APIs
     case "query" :: "composite-create" :: registryRoot :: queryFile :: id :: rest =>
       val spark = GraftSession.get()
-      val q = Json.parseProjectQuery(readFile(queryFile))
       val rc = validated {
+        val q = Json.parseProjectQuery(readFile(queryFile))
         new Submitter(Registry(spark, registryRoot), flagValue(rest, "--cache"))
           .createCompositeDataset(id, q.datasets)
       }
@@ -293,8 +289,8 @@ object Cli {
 
     case "query" :: "composite-run" :: registryRoot :: id :: queryFile :: outDir :: rest =>
       val spark = GraftSession.get()
-      val q = Json.parseProjectQuery(readFile(queryFile))
-      val rc = validated {
+      validated {
+        val q = Json.parseProjectQuery(readFile(queryFile))
         val result = new Submitter(Registry(spark, registryRoot), flagValue(rest, "--cache"))
           .submitComposite(id, q.result)
         if (rest.contains("--csv"))
@@ -303,14 +299,12 @@ object Cli {
           graft.sources.Writers.parquetAutoPartition(spark, result, s"$outDir/${q.name}.parquet")
         println(s"wrote $outDir/${q.name}")
       }
-      rc
 
     case "query" :: "register-derived" :: registryRoot :: queryFile :: id :: rest =>
       val spark = GraftSession.get()
-      val q = Json.parseProjectQuery(readFile(queryFile))
       val rc = validated {
         new Submitter(Registry(spark, registryRoot), flagValue(rest, "--cache"))
-          .registerDerivedDataset(id, q)
+          .registerDerivedDataset(id, Json.parseProjectQuery(readFile(queryFile)))
       }
       if (rc == 0) println(s"registered derived dataset $id")
       rc
@@ -419,6 +413,8 @@ object Cli {
       System.err.println(
         """usage:  (<registryRoot> may be @<config.json> written by `config create`)
           |  graft.Cli config create <config.json> <registryRoot>
+          |  graft.Cli curate <dataDir> <plan.json> <outDir> [--csv] [--cache <dir>] [--resume] [--dry-run] [--register <registryRoot>]
+          |  graft.Cli serve <registryRoot> [port]
           |  graft.Cli query project <registryRoot> <query.json> <outDir> [--csv] [--cache <dir>]
           |  graft.Cli query dataset <registryRoot> <query.json> <outDir> [--csv] [--cache <dir>]
           |  graft.Cli registry list <registryRoot>

@@ -1,10 +1,14 @@
 package graft.api
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.fasterxml.jackson.core.{JsonGenerator, JsonProcessingException}
+import com.fasterxml.jackson.core.util.MinimalPrettyPrinter
+import com.fasterxml.jackson.databind.util.RawValue
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import graft.query.{Json, Submitter}
 import graft.registry.Registry
 import graft.sources.HadoopFs
@@ -60,6 +64,10 @@ import graft.sources.HadoopFs
   *                                          (ref: apps/registration_gui.py)
   *   GET  /register                       → static registration page
   *                                          ([[RegistrationPage]])
+  *
+  * Every route goes through `route`: bad client input (an
+  * IllegalArgumentException, unparseable JSON, SQL that does not analyze)
+  * is a 400, anything else a 500, with body {"error": message}.
   */
 final class Api(
     registry: Registry,
@@ -76,17 +84,11 @@ final class Api(
       * async submissions are rejected with 429 instead of growing the fixed
       * pool's work queue without bound under a submission burst */
     maxPendingQueries: Int = 32) {
+  import Api._
 
   private var server: HttpServer = _
-  private lazy val submitter = new Submitter(registry)
 
-  private sealed trait JobState
-  private case object Running extends JobState
-  private final case class Done(resultJson: String, finishedAt: Long) extends JobState
-  /** file-mode result: rows live in server-side parquet, never in memory */
-  private final case class DoneFile(path: String, finishedAt: Long) extends JobState
-  private final case class Failed(error: String, finishedAt: Long) extends JobState
-  private val jobs = new java.util.concurrent.ConcurrentHashMap[String, JobState]()
+  private val jobs = new java.util.concurrent.ConcurrentHashMap[String, Job]()
   /** spool directory for ?file=true results; entries die with their job */
   private lazy val spoolDir =
     java.nio.file.Files.createTempDirectory("graft-api-spool").toString
@@ -99,42 +101,38 @@ final class Api(
     * oldest finished ones. Running jobs are never evicted. */
   private def evictFinished(): Unit = {
     val now = System.currentTimeMillis()
-    val finished = new scala.collection.mutable.ArrayBuffer[(String, Long)]()
-    def drop(id: String): Unit = {
-      jobs.remove(id) match {
-        case DoneFile(p, _) => HadoopFs.delete(registry.spark, new java.io.File(p).getParent)
-        case _ =>
-      }
-    }
-    jobs.forEach { (id, st) =>
-      st match {
-        case Done(_, at) => if (now - at > completedJobTtlMillis) drop(id) else finished += (id -> at)
-        case DoneFile(_, at) => if (now - at > completedJobTtlMillis) drop(id) else finished += (id -> at)
-        case Failed(_, at) => if (now - at > completedJobTtlMillis) drop(id) else finished += (id -> at)
-        case Running =>
-      }
-    }
-    if (finished.size > maxCompletedJobs)
-      finished.sortBy(_._2).dropRight(maxCompletedJobs).foreach { case (id, _) => drop(id) }
+    def drop(id: String): Unit =
+      jobs.remove(id).file.foreach(p => HadoopFs.delete(registry.spark, new java.io.File(p).getParent))
+    val finished = jobs.asScala.toSeq.filter(_._2.status != 202)
+    val (expired, kept) = finished.partition(now - _._2.finishedAt > completedJobTtlMillis)
+    expired.foreach(j => drop(j._1))
+    kept.sortBy(_._2.finishedAt).dropRight(maxCompletedJobs).foreach(j => drop(j._1))
   }
 
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/registry/datasets", datasetsHandler())
-    server.createContext("/registry/dimensions", listHandler(() => registry.listDimensions()))
-    server.createContext("/dimensions/types", enumHandler("types", Api.DimensionTypes))
-    server.createContext("/reports/types", enumHandler("types", Api.ReportTypes))
-    server.createContext("/value_formats", enumHandler("formats", Api.ValueFormats))
-    server.createContext("/registry/mappings", listHandler(() => registry.listMappings()))
-    server.createContext("/projects", projectsHandler())
-    server.createContext("/dimensions/records/", dimensionRecordsHandler())
-    server.createContext("/query/project/async", asyncSubmitHandler())
-    server.createContext("/query/project", queryHandler())
-    server.createContext("/jobs/", jobStatusHandler())
-    server.createContext("/viewer", viewerHandler())
-    server.createContext("/curate", curateHandler())
-    server.createContext("/registry/bulk", bulkRegisterHandler())
-    server.createContext("/register", staticPageHandler(RegistrationPage.html))
+    route("/registry/datasets")(datasets)
+    route("/registry/dimensions")(_ => 200 -> registry.listDimensions())
+    route("/dimensions/types")(_ => 200 -> obj("types" -> DimensionTypes))
+    route("/reports/types")(_ => 200 -> obj("types" -> ReportTypes))
+    route("/value_formats")(_ => 200 -> obj("formats" -> ValueFormats))
+    route("/registry/mappings")(_ => 200 -> registry.listMappings())
+    route("/projects")(projects)
+    route("/dimensions/records/") { ex =>
+      val dim = ex.getRequestURI.getPath.stripPrefix("/dimensions/records/").stripSuffix("/")
+      if (!registry.listDimensions().contains(dim)) 404 -> error(s"unknown dimension: $dim")
+      else 200 -> obj("records" -> rows(registry.dimensionRecords(dim)))
+    }
+    route("/query/project/async")(submitAsync)
+    route("/query/project")(ex => 200 -> rows(new Submitter(registry).submit(Json.parseProjectQuery(body(ex)))))
+    route("/jobs/")(job)
+    // the static single-page project viewer ([[ViewerPage]]), closing the
+    // reference's Dash GUI surface headlessly: the page drives the same
+    // three read endpoints the Dash app calls
+    route("/viewer")(_ => 200 -> Page(ViewerPage.html))
+    route("/curate")(postOnly(curate))
+    route("/registry/bulk")(postOnly(bulk))
+    route("/register")(_ => 200 -> Page(RegistrationPage.html))
     server.setExecutor(null)
     server.start()
     server.getAddress.getPort
@@ -145,15 +143,18 @@ final class Api(
     pool.shutdownNow()
   }
 
-  private def listHandler(items: () => Seq[String]): HttpHandler = new HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      respond(ex, 200, items().map(quote).mkString("[", ",", "]"))
-  }
-
-  private def enumHandler(field: String, values: Seq[String]): HttpHandler = new HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      respond(ex, 200, s"""{"$field": ${values.map(quote).mkString("[", ",", "]")}}""")
-  }
+  /** Serve `path` and every path under it. The one place that pins the
+    * registry's session on the handling thread (the dispatcher thread
+    * inherits none), maps a handler's exception to its status, and sends. */
+  private def route(path: String)(handler: HttpExchange => (Int, Any)): Unit =
+    server.createContext(path, (ex: HttpExchange) => {
+      val (status, body) =
+        try {
+          SparkSession.setActiveSession(registry.spark)
+          handler(ex)
+        } catch { case e: Exception => statusOf(e) -> error(String.valueOf(e.getMessage)) }
+      send(ex, status, body)
+    })
 
   /** GET /registry/datasets → list; /registry/datasets/<id> → detail
     * payload (ref app.py:229-233 — the reference returns the dataset
@@ -168,66 +169,43 @@ final class Api(
     * /registry/datasets/<id>/provenance → the derived-artifact lineage
     * sidecar ([[graft.registry.DerivedArtifacts]]); 404 for plain fact
     * tables. */
-  private def datasetsHandler(): HttpHandler = new HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      try {
-        val rest = ex.getRequestURI.getPath.stripPrefix("/registry/datasets")
-          .stripPrefix("/").stripSuffix("/")
-        if (rest.isEmpty)
-          respond(ex, 200, registry.listDatasets().map(quote).mkString("[", ",", "]"))
-        else if (rest.endsWith("/provenance")) {
-          // derived-artifact lineage (DerivedArtifacts sidecar): which
-          // source state + params produced this dataset — metadata-only;
-          // a dataset without a sidecar (a user fact table) is the 404
-          val id = rest.stripSuffix("/provenance")
-          if (!registry.listDatasets().contains(id))
-            respond(ex, 404, s"""{"error": ${quote(s"unknown dataset: $id")}}""")
-          else {
-            val p = s"${registry.root}/datasets/$id/provenance.json"
-            if (!HadoopFs.exists(registry.spark, p))
-              respond(ex, 404, s"""{"error": ${quote(s"dataset '$id' has no provenance sidecar")}}""")
-            else respond(ex, 200, HadoopFs.readText(registry.spark, p))
-          }
-        }
-        else if (rest.endsWith("/card")) {
-          val id = rest.stripSuffix("/card")
-          if (!registry.listDatasets().contains(id))
-            respond(ex, 404, s"""{"error": ${quote(s"unknown dataset: $id")}}""")
-          else {
-            val params = Option(ex.getRequestURI.getQuery).getOrElse("").split("&")
-              .filter(_.contains("=")).map { kv =>
-                val Array(k, v) = kv.split("=", 2)
-                k -> java.net.URLDecoder.decode(v, StandardCharsets.UTF_8)
-              }.toMap
-            val textCol = params.getOrElse("text_column", "text")
-            val langCol = params.getOrElse("lang_column", "lang")
-            val groupBy = params.getOrElse("group_by", "source").split(",").toSeq
-            val df = registry.loadData(id)
-            val missing = (groupBy :+ textCol :+ langCol).filterNot(df.columns.contains)
-            if (missing.nonEmpty)
-              respond(ex, 400, s"""{"error": ${quote(
-                s"dataset '$id' lacks column(s): ${missing.mkString(", ")}")}}""")
-            else respond(ex, 200,
-              s"""{"card": ${toJsonRows(
-                graft.text.DataCard.dataCard(df, textCol, langCol, groupBy)
-                  .orderBy(groupBy.head, groupBy.tail: _*))}}""")
-          }
-        }
-        else if (!registry.listDatasets().contains(rest))
-          respond(ex, 404, s"""{"error": ${quote(s"unknown dataset: $rest")}}""")
-        else {
-          val cols = registry.loadData(rest).columns
-          val fmt = registry.datasetFormat(rest).map(_.valueFormat).getOrElse("stacked")
-          val hasLookup = registry.lookup(rest).isDefined
-          respond(ex, 200,
-            s"""{"dataset": {"dataset_id": ${quote(rest)}, """ +
-              s""""value_format": ${quote(fmt)}, "has_lookup": $hasLookup, """ +
-              s""""columns": ${cols.map(quote).mkString("[", ",", "]")}}}""")
-        }
-      } catch {
-        case e: Exception =>
-          respond(ex, 500, s"""{"error": ${quote(String.valueOf(e.getMessage))}}""")
-      }
+  private def datasets(ex: HttpExchange): (Int, Any) = {
+    val rest = ex.getRequestURI.getPath.stripPrefix("/registry/datasets")
+      .stripPrefix("/").stripSuffix("/")
+    val view = Seq("/provenance", "/card").find(rest.endsWith).getOrElse("")
+    val id = rest.stripSuffix(view)
+    if (rest.isEmpty) 200 -> registry.listDatasets()
+    else if (!registry.listDatasets().contains(id)) 404 -> error(s"unknown dataset: $id")
+    else view match {
+      case "/provenance" =>
+        // derived-artifact lineage (DerivedArtifacts sidecar): which
+        // source state + params produced this dataset — metadata-only;
+        // a dataset without a sidecar (a user fact table) is the 404
+        val p = s"${registry.root}/datasets/$id/provenance.json"
+        if (!HadoopFs.exists(registry.spark, p)) 404 -> error(s"dataset '$id' has no provenance sidecar")
+        else 200 -> new RawValue(HadoopFs.readText(registry.spark, p))
+      case "/card" =>
+        val params = Option(ex.getRequestURI.getQuery).getOrElse("").split("&")
+          .filter(_.contains("=")).map { kv =>
+            val Array(k, v) = kv.split("=", 2)
+            k -> java.net.URLDecoder.decode(v, StandardCharsets.UTF_8)
+          }.toMap
+        val textCol = params.getOrElse("text_column", "text")
+        val langCol = params.getOrElse("lang_column", "lang")
+        val groupBy = params.getOrElse("group_by", "source").split(",").toSeq
+        val df = registry.loadData(id)
+        val missing = (groupBy :+ textCol :+ langCol).filterNot(df.columns.contains)
+        if (missing.nonEmpty) 400 -> error(s"dataset '$id' lacks column(s): ${missing.mkString(", ")}")
+        else 200 -> obj("card" -> rows(
+          graft.text.DataCard.dataCard(df, textCol, langCol, groupBy)
+            .orderBy(groupBy.head, groupBy.tail: _*)))
+      case _ =>
+        200 -> obj("dataset" -> obj(
+          "dataset_id" -> id,
+          "value_format" -> registry.datasetFormat(id).map(_.valueFormat).getOrElse("stacked"),
+          "has_lookup" -> registry.lookup(id).isDefined,
+          "columns" -> registry.loadData(id).columns))
+    }
   }
 
   /** The registry presented as one project — graft projects are query-time
@@ -242,231 +220,123 @@ final class Api(
     *   GET /projects                      → {"projects": [{"project_id": …}]}
     *   GET /projects/<id>/dimensions      → {"dimensions": [{dimension_id, name, category}]}
     *   GET /dimensions/records/<name>     → {"records": [row…]} (limit-capped) */
-  private def projectsHandler(): HttpHandler = new HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      try {
-        val path = ex.getRequestURI.getPath.stripSuffix("/")
-        path match {
-          case "/projects" =>
-            respond(ex, 200,
-              s"""{"projects": [{"project_id": ${quote(projectId)}}]}""")
-          // detail payload (ref app.py:119-125 GetProject): the project's
-          // datasets and dimensions — all registry listings, metadata-only
-          case p if p == s"/projects/$projectId" =>
-            respond(ex, 200,
-              s"""{"project": {"project_id": ${quote(projectId)}, """ +
-                s""""datasets": ${registry.listDatasets().map(quote).mkString("[", ",", "]")}, """ +
-                s""""dimensions": ${registry.listDimensions().map(quote).mkString("[", ",", "]")}}}""")
-          case p if p.startsWith("/projects/") && p.count(_ == '/') == 2 =>
-            respond(ex, 404,
-              s"""{"error": ${quote(s"unknown project: ${p.stripPrefix("/projects/")}")}}""")
-          case p if p == s"/projects/$projectId/dimensions" =>
-            val dims = registry.listDimensions().map { d =>
-              s"""{"dimension_id": ${quote(d)}, "name": ${quote(d)}, """ +
-                s""""category": ${quote(registry.dimensionCategory(d))}}"""
-            }
-            respond(ex, 200, s"""{"dimensions": ${dims.mkString("[", ",", "]")}}""")
-          case _ =>
-            respond(ex, 404, s"""{"error": ${quote(s"unknown project path: $path")}}""")
-        }
-      } catch {
-        case e: Exception =>
-          respond(ex, 500, s"""{"error": ${quote(String.valueOf(e.getMessage))}}""")
-      }
-  }
-
-  private def dimensionRecordsHandler(): HttpHandler = new HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      try {
-        val dim = ex.getRequestURI.getPath.stripPrefix("/dimensions/records/").stripSuffix("/")
-        if (!registry.listDimensions().contains(dim))
-          respond(ex, 404, s"""{"error": ${quote(s"unknown dimension: $dim")}}""")
-        else respond(ex, 200, s"""{"records": ${toJsonRows(registry.dimensionRecords(dim))}}""")
-      } catch {
-        case e: Exception =>
-          respond(ex, 500, s"""{"error": ${quote(String.valueOf(e.getMessage))}}""")
-      }
-  }
-
-  private def queryHandler(): HttpHandler = new HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      try {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        val df = submitter.submit(Json.parseProjectQuery(body))
-        respond(ex, 200, toJsonRows(df))
-      } catch {
-        case e: Exception =>
-          respond(ex, 400, s"""{"error": ${quote(String.valueOf(e.getMessage))}}""")
-      }
-  }
+  private def projects(ex: HttpExchange): (Int, Any) =
+    ex.getRequestURI.getPath.stripSuffix("/") match {
+      case "/projects" => 200 -> obj("projects" -> Seq(obj("project_id" -> projectId)))
+      // detail payload (ref app.py:119-125 GetProject): the project's
+      // datasets and dimensions — all registry listings, metadata-only
+      case p if p == s"/projects/$projectId" =>
+        200 -> obj("project" -> obj(
+          "project_id" -> projectId,
+          "datasets" -> registry.listDatasets(),
+          "dimensions" -> registry.listDimensions()))
+      case p if p.startsWith("/projects/") && p.count(_ == '/') == 2 =>
+        404 -> error(s"unknown project: ${p.stripPrefix("/projects/")}")
+      case p if p == s"/projects/$projectId/dimensions" =>
+        200 -> obj("dimensions" -> registry.listDimensions().map(d =>
+          obj("dimension_id" -> d, "name" -> d, "category" -> registry.dimensionCategory(d))))
+      case p => 404 -> error(s"unknown project path: $p")
+    }
 
   /** Admission gate: the pending-count check, id allocation, and the
-    * Running insert happen under one lock, so concurrent submissions can
-    * never exceed `maxPendingQueries`, and a job id is present in `jobs`
-    * before it is ever observable by a client (no spurious 410 for a
-    * just-admitted job). */
+    * running-job insert happen under one lock, so concurrent submissions
+    * can never exceed `maxPendingQueries`, and a job id is present in
+    * `jobs` before it is ever observable by a client (no spurious 410 for
+    * a just-admitted job). */
   private val admission = new Object
 
-  private def asyncSubmitHandler(): HttpHandler = new HttpHandler {
-    def handle(ex: HttpExchange): Unit = {
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      // ?file=true: the result is written to server-side parquet and
-      // fetched via /jobs/<id>/file — inline rows are never held, so big
-      // results don't pin driver memory past the write (ref app.py:326-359)
-      val asFile = Option(ex.getRequestURI.getQuery).exists(_.split("&").contains("file=true"))
-      val admitted = admission.synchronized {
-        evictFinished()
-        var pending = 0
-        jobs.forEach((_, st) => if (st == Running) pending += 1)
-        if (pending >= maxPendingQueries) Left(pending)
-        else {
-          val id = s"job-${jobSeq.incrementAndGet()}"
-          jobs.put(id, Running)
-          Right(id)
-        }
+  private def submitAsync(ex: HttpExchange): (Int, Any) = {
+    val query = body(ex)
+    // ?file=true: the result is written to server-side parquet and
+    // fetched via /jobs/<id>/file — inline rows are never held, so big
+    // results don't pin driver memory past the write (ref app.py:326-359)
+    val asFile = Option(ex.getRequestURI.getQuery).exists(_.split("&").contains("file=true"))
+    admission.synchronized {
+      evictFinished()
+      val pending = jobs.values.asScala.count(_.status == 202)
+      if (pending >= maxPendingQueries) Left(pending)
+      else {
+        val id = s"job-${jobSeq.incrementAndGet()}"
+        jobs.put(id, Job(202))
+        Right(id)
       }
-      val id = admitted match {
-        case Left(pending) =>
-          respond(ex, 429, s"""{"error": "too many pending queries ($pending), retry later"}""")
-          return
-        case Right(id) => id
-      }
-      pool.submit(new Runnable {
-        def run(): Unit =
-          try {
-            val df = submitter.submit(Json.parseProjectQuery(body))
-            if (asFile) {
-              // one parquet file per job under the spool: coalesce(1) is
-              // fine here — a download endpoint is single-stream anyway
-              val dir = s"$spoolDir/$id"
-              df.coalesce(1).write.mode("overwrite").parquet(dir)
-              val part = new java.io.File(dir).listFiles()
-                .find(f => f.getName.endsWith(".parquet")).get
-              jobs.put(id, DoneFile(part.getAbsolutePath, System.currentTimeMillis()))
-            } else
-              jobs.put(id, Done(toJsonRows(df), System.currentTimeMillis()))
-          } catch { case e: Exception => jobs.put(id, Failed(String.valueOf(e.getMessage), System.currentTimeMillis())) }
-      })
-      respond(ex, 202, s"""{"job_id": ${quote(id)}}""")
+    } match {
+      case Left(pending) => 429 -> error(s"too many pending queries ($pending), retry later")
+      case Right(id) =>
+        pool.execute(() => jobs.put(id, runJob(id, query, asFile)))
+        202 -> obj("job_id" -> id)
     }
   }
 
-  private def jobStatusHandler(): HttpHandler = new HttpHandler {
-    def handle(ex: HttpExchange): Unit = {
-      val rest = ex.getRequestURI.getPath.stripPrefix("/jobs/").stripSuffix("/")
-      val (id, wantsFile) =
-        if (rest.endsWith("/file")) (rest.stripSuffix("/file"), true) else (rest, false)
-      jobs.get(id) match {
-        case null =>
-          // ids are monotonic `job-N`: a missing id at or below the current
-          // sequence WAS issued and has been evicted (TTL/cap) — tell the
-          // client "expired" (410), distinct from a never-existing id (404)
-          val issued = id.stripPrefix("job-").toLongOption.exists(n => n > 0 && n <= jobSeq.get())
-          if (issued) respond(ex, 410, s"""{"error": "job expired and was evicted"}""")
-          else respond(ex, 404, s"""{"error": "unknown job"}""")
-        case Running =>
-          // a file request on a running job is the reference's 422 (data
-          // can only be read for completed tasks, app.py:330-334)
-          if (wantsFile) respond(ex, 422, """{"error": "job still running"}""")
-          else respond(ex, 200, """{"status": "running"}""")
-        case Done(rows, _) =>
-          if (wantsFile) respond(ex, 422,
-            """{"error": "job holds inline rows; submit with ?file=true for a download"}""")
-          else respond(ex, 200, rows)
-        case DoneFile(path, _) =>
-          if (wantsFile) respondFile(ex, path)
-          else respond(ex, 200,
-            s"""{"status": "complete", "file": ${quote(s"/jobs/$id/file")}}""")
-        case Failed(err, _) => respond(ex, 500, s"""{"error": ${quote(err)}}""")
-      }
-    }
-  }
-
-  /** Stream a completed job's parquet file — raw bytes, the reference's
-    * FileResponse contract (app.py:352-359). */
-  private def respondFile(ex: HttpExchange, path: String): Unit = {
-    val f = new java.io.File(path)
-    // Open the descriptor BEFORE any header write: TTL eviction runs on
-    // every async submit and may delete this spool directory
-    // mid-request — an open fd survives the unlink (POSIX), while a
-    // path-based Files.copy would throw AFTER headers were sent,
-    // truncating the download (r16 ADVICE item 3). Length comes from the
-    // open channel for the same reason: File.length() is 0 post-unlink.
-    val fis =
-      try new java.io.FileInputStream(f)
-      catch {
-        case _: java.io.FileNotFoundException =>
-          respond(ex, 410, """{"error": "result file was evicted"}""")
-          return
-      }
+  /** Run one async job to its finished record. Pool threads inherit no
+    * active session, so the job pins the registry's own. */
+  private def runJob(id: String, query: String, asFile: Boolean): Job =
     try {
-      val len = fis.getChannel.size()
-      ex.getResponseHeaders.set("Content-Type", "application/octet-stream")
-      ex.getResponseHeaders.set("Content-Disposition",
-        s"""attachment; filename="${f.getName}"""")
-      ex.sendResponseHeaders(200, len)
-      val os = ex.getResponseBody
-      try fis.transferTo(os) finally os.close()
-    } finally fis.close()
-  }
+      SparkSession.setActiveSession(registry.spark)
+      val df = new Submitter(registry).submit(Json.parseProjectQuery(query))
+      if (asFile) {
+        // one parquet file per job under the spool: coalesce(1) is
+        // fine here — a download endpoint is single-stream anyway
+        val dir = s"$spoolDir/$id"
+        df.coalesce(1).write.mode("overwrite").parquet(dir)
+        val part = new java.io.File(dir).listFiles().find(_.getName.endsWith(".parquet")).get
+        Job(200, file = Some(part.getAbsolutePath))
+      } else Job(200, rows(df))
+    } catch { case e: Exception => Job(500, error(String.valueOf(e.getMessage))) }
 
-  /** GET /viewer — the static single-page project viewer ([[ViewerPage]]),
-    * closing the reference's Dash GUI surface headlessly: the page drives
-    * the same three read endpoints the Dash app calls. */
-  private def viewerHandler(): HttpHandler = staticPageHandler(ViewerPage.html)
-
-  private def staticPageHandler(html: String): HttpHandler = new HttpHandler {
-    def handle(ex: HttpExchange): Unit = {
-      val bytes = html.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-      ex.sendResponseHeaders(200, bytes.length)
-      val os = ex.getResponseBody
-      os.write(bytes)
-      os.close()
+  private def job(ex: HttpExchange): (Int, Any) = {
+    val rest = ex.getRequestURI.getPath.stripPrefix("/jobs/").stripSuffix("/")
+    val wantsFile = rest.endsWith("/file")
+    val id = rest.stripSuffix("/file")
+    jobs.get(id) match {
+      case null =>
+        // ids are monotonic `job-N`: a missing id at or below the current
+        // sequence WAS issued and has been evicted (TTL/cap) — tell the
+        // client "expired" (410), distinct from a never-existing id (404)
+        val issued = id.stripPrefix("job-").toLongOption.exists(n => n > 0 && n <= jobSeq.get())
+        if (issued) 410 -> error("job expired and was evicted") else 404 -> error("unknown job")
+      // a file request on a running job is the reference's 422 (data
+      // can only be read for completed tasks, app.py:330-334)
+      case Job(202, _, _, _) =>
+        if (wantsFile) 422 -> error("job still running") else 200 -> obj("status" -> "running")
+      case Job(200, _, Some(path), _) =>
+        if (wantsFile) download(path) else 200 -> obj("status" -> "complete", "file" -> s"/jobs/$id/file")
+      case Job(200, _, None, _) if wantsFile =>
+        422 -> error("job holds inline rows; submit with ?file=true for a download")
+      case j => j.status -> j.body
     }
   }
+
+  /** A completed job's parquet file — raw bytes, the reference's
+    * FileResponse contract (app.py:352-359). The descriptor is opened
+    * BEFORE any header write: TTL eviction runs on every async submit and
+    * may delete this spool directory mid-request — an open fd survives the
+    * unlink (POSIX), while a path-based copy would throw AFTER headers were
+    * sent, truncating the download (r16 ADVICE item 3). */
+  private def download(path: String): (Int, Any) =
+    try 200 -> Download(new java.io.File(path).getName, new java.io.FileInputStream(path))
+    catch { case _: java.io.FileNotFoundException => 410 -> error("result file was evicted") }
 
   /** POST /curate — run a curation-plan document over a data directory:
-    * body {"data_dir": …, "plan": {…}, "cache_dir"?: …}. Validation
-    * failures (bad plan, missing input/columns) are the client's 400;
-    * execution failures are our 500 (the bulk-register convention). */
-  private def curateHandler(): HttpHandler = new HttpHandler {
-    def handle(ex: HttpExchange): Unit = {
-      if (ex.getRequestMethod != "POST") {
-        respond(ex, 405, """{"error": "POST required"}""")
-        return
-      }
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      try {
-        val root = Json.mapper.readTree(body)
-        val dataDir = Json.str(root, "data_dir")
-        val planNode = Option(root.get("plan")).filterNot(_.isNull)
-          .getOrElse(throw new IllegalArgumentException("missing required field: plan"))
-        val cacheDir = Json.optStr(root, "cache_dir")
-        val plan = graft.query.CurationJson.parse(planNode.toString)
-        val sub = new graft.query.CurationSubmitter(registry.spark, dataDir, cacheDir)
-        // "validate_only": true → the dry-run schema walk (per-stage
-        // output columns), zero Spark jobs — the CLI --dry-run twin
-        if (Option(root.get("validate_only")).exists(_.asBoolean(false))) {
-          val stages = sub.explain(plan).zipWithIndex.map { case ((tpe, cols, persist), i) =>
-            s"""{"index": $i, "stage_type": ${quote(tpe)}, "persist": $persist, """ +
-              s""""columns": ${cols.map(quote).mkString("[", ",", "]")}}"""
-          }
-          respond(ex, 200,
-            s"""{"name": ${quote(plan.name)}, "valid": true, """ +
-              s""""stages": ${stages.mkString("[", ",", "]")}}""")
-        } else
-          respond(ex, 200, toJsonRows(sub.submit(plan)))
-      } catch {
-        case e: IllegalArgumentException =>
-          respond(ex, 400, s"""{"error": ${quote(String.valueOf(e.getMessage))}}""")
-        case e: Exception =>
-          respond(ex, 500, s"""{"error": ${quote(String.valueOf(e.getMessage))}}""")
-      }
-    }
+    * body {"data_dir": …, "plan": {…}, "cache_dir"?: …}. */
+  private def curate(ex: HttpExchange): (Int, Any) = {
+    val root = Json.mapper.readTree(body(ex))
+    val dataDir = Json.str(root, "data_dir")
+    val planNode = Option(root.get("plan")).filterNot(_.isNull)
+      .getOrElse(throw new IllegalArgumentException("missing required field: plan"))
+    val plan = graft.query.CurationJson.parse(planNode.toString)
+    val sub = new graft.query.CurationSubmitter(registry.spark, dataDir, Json.optStr(root, "cache_dir"))
+    // "validate_only": true → the dry-run schema walk (per-stage
+    // output columns), zero Spark jobs — the CLI --dry-run twin
+    if (Option(root.get("validate_only")).exists(_.asBoolean(false)))
+      200 -> obj("name" -> plan.name, "valid" -> true, "stages" ->
+        sub.explain(plan).zipWithIndex.map { case ((tpe, cols, persist), i) =>
+          obj("index" -> i, "stage_type" -> tpe, "persist" -> persist, "columns" -> cols)
+        })
+    else 200 -> rows(sub.submit(plan))
   }
 
-  /** POST /registry/bulk — run a bulk-register manifest against this
+  /** POST /registry/bulk runs a bulk-register manifest against this
     * registry (dimensions → mappings → datasets, the
     * [[graft.registry.BulkRegister]] order/validation/resume semantics).
     * The mutation twin of the read endpoints: together with /register they
@@ -479,52 +349,14 @@ final class Api(
     * partial order — one at a time matches the GUI's disabled-while-
     * running buttons. */
   private val registration = new Object
-  private def bulkRegisterHandler(): HttpHandler = new HttpHandler {
-    def handle(ex: HttpExchange): Unit = {
-      if (ex.getRequestMethod != "POST") {
-        respond(ex, 405, """{"error": "POST required"}""")
-        return
-      }
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      try {
-        val result = registration.synchronized {
-          graft.registry.BulkRegister(registry, body)
-        }
-        respond(ex, 200,
-          s"""{"registered": ${result.registered.map(quote).mkString("[", ",", "]")}, """ +
-            s""""skipped": ${result.skipped.map(quote).mkString("[", ",", "]")}}""")
-      } catch {
-        // a bad manifest is the CLIENT's fault; registry I/O or Spark
-        // failures are ours — don't report server bugs as 400s
-        case e: IllegalArgumentException =>
-          respond(ex, 400, s"""{"error": ${quote(String.valueOf(e.getMessage))}}""")
-        case e: Exception =>
-          respond(ex, 500, s"""{"error": ${quote(String.valueOf(e.getMessage))}}""")
-      }
-    }
+  private def bulk(ex: HttpExchange): (Int, Any) = {
+    val result = registration.synchronized(graft.registry.BulkRegister(registry, body(ex)))
+    200 -> obj("registered" -> result.registered, "skipped" -> result.skipped)
   }
 
   /** Rows via Spark's own JSON encoder (handles types/escaping), capped. */
-  private def toJsonRows(df: DataFrame): String =
-    df.limit(maxRows).toJSON.collect().mkString("[", ",", "]")
-
-  private def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length)
-    val os = ex.getResponseBody
-    os.write(bytes)
-    os.close()
-  }
+  private def rows(df: DataFrame): RawValue =
+    new RawValue(df.limit(maxRows).toJSON.collect().mkString("[", ",", "]"))
 }
 
 object Api {
@@ -544,4 +376,70 @@ object Api {
     * dsgrid/dataset/models.py:10-14 ValueFormat; graft reads/writes both —
     * Registry.DatasetFormat). */
   val ValueFormats: Seq[String] = Seq("pivoted", "stacked")
+
+  /** An async job: `status` 202 while it runs, then the status its
+    * `GET /jobs/<id>` answers with, and either the inline `body` (rows or
+    * error) or the spool `file` (?file=true results never sit in memory). */
+  private final case class Job(status: Int, body: Any = null, file: Option[String] = None,
+      finishedAt: Long = System.currentTimeMillis())
+
+  /** Non-JSON bodies: a static HTML page, an opened result file. */
+  private final case class Page(html: String)
+  private final case class Download(name: String, in: java.io.FileInputStream)
+
+  /** The client's input is at fault (400) or the server is (500). */
+  private def statusOf(e: Exception): Int = e match {
+    case _: IllegalArgumentException | _: JsonProcessingException | _: AnalysisException => 400
+    case _ => 500
+  }
+
+  /** A JSON object in field order; Scala collections become JSON arrays. */
+  private def obj(fields: (String, Any)*): java.util.Map[String, Any] = {
+    val m = new java.util.LinkedHashMap[String, Any]()
+    fields.foreach { case (k, v) => m.put(k, javaValue(v)) }
+    m
+  }
+
+  private def javaValue(v: Any): Any = v match {
+    case s: Seq[_] => s.map(javaValue).asJava
+    case o => o
+  }
+
+  private def error(message: String) = obj("error" -> message)
+
+  /** The mutation routes refuse every method but POST. */
+  private def postOnly(handler: HttpExchange => (Int, Any))(ex: HttpExchange): (Int, Any) =
+    if (ex.getRequestMethod != "POST") 405 -> error("POST required") else handler(ex)
+
+  private def body(ex: HttpExchange): String =
+    new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+
+  /** `Json.mapper` with the API's wire spacing: `{"k": v, "k2": v2}` for
+    * objects, `["a","b"]` for arrays. */
+  private val printer = Json.mapper.writer(new MinimalPrettyPrinter {
+    override def writeObjectFieldValueSeparator(g: JsonGenerator): Unit = g.writeRaw(": ")
+    override def writeObjectEntrySeparator(g: JsonGenerator): Unit = g.writeRaw(", ")
+  })
+
+  private def send(ex: HttpExchange, status: Int, body: Any): Unit = body match {
+    case Download(name, in) =>
+      try {
+        ex.getResponseHeaders.set("Content-Type", "application/octet-stream")
+        ex.getResponseHeaders.set("Content-Disposition", s"""attachment; filename="$name"""")
+        // length from the open channel: File.length() is 0 after an unlink
+        ex.sendResponseHeaders(status, in.getChannel.size())
+        val os = ex.getResponseBody
+        try in.transferTo(os) finally os.close()
+      } finally in.close()
+    case Page(html) => write(ex, status, "text/html; charset=utf-8", html.getBytes(StandardCharsets.UTF_8))
+    case v => write(ex, status, "application/json", printer.writeValueAsBytes(javaValue(v)))
+  }
+
+  private def write(ex: HttpExchange, status: Int, contentType: String, bytes: Array[Byte]): Unit = {
+    ex.getResponseHeaders.set("Content-Type", contentType)
+    ex.sendResponseHeaders(status, bytes.length)
+    val os = ex.getResponseBody
+    os.write(bytes)
+    os.close()
+  }
 }

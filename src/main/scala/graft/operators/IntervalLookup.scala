@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graft.PlanDataset
 import org.apache.spark.sql.types.LongType
 
-import graft.plans.IntervalJoin.{IntervalJoinNode, IntervalJoinStrategy}
+import graft.plans.IntervalJoin.IntervalJoinNode
 
 /** User-facing entry for the broadcast interval-lookup join — see
   * [[graft.plans.IntervalJoin]] for the execution design (sorted
@@ -18,21 +18,14 @@ object IntervalLookup {
     * must be pairwise disjoint — the exec validates and refuses
     * otherwise. Column names must not collide across the two sides.
     *
-    * Works on any session: the planner strategy is registered via
-    * `spark.sql.extensions=graft.plans.GraftExtensions` or, failing that,
-    * appended to `spark.experimental.extraStrategies` on first use. */
+    * Planned by the strategy `spark.sql.extensions=graft.plans.GraftExtensions`
+    * injects (every `GraftSession` carries it). */
   def join(
       probe: DataFrame,
       intervals: DataFrame,
       pointCol: String,
       loCol: String,
       hiCol: String): DataFrame = {
-    val spark = probe.sparkSession
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[IntervalJoinStrategy]) &&
-        !spark.sessionState.planner.strategies.exists(_.isInstanceOf[IntervalJoinStrategy])) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ new IntervalJoinStrategy
-    }
     val pa = PlanDataset.analyzed(probe)
     val ia = PlanDataset.analyzed(intervals)
     val dup = pa.output.map(_.name).toSet.intersect(ia.output.map(_.name).toSet)
@@ -49,6 +42,6 @@ object IntervalLookup {
         s"IntervalLookup.join: '${a.name}' must be BIGINT, got ${a.dataType.sql} " +
           "(quantize float boundaries first)")
     }
-    PlanDataset(spark, IntervalJoinNode(point, lo, hi, pa, ia))
+    PlanDataset(probe.sparkSession, IntervalJoinNode(point, lo, hi, pa, ia))
   }
 }

@@ -4,8 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
 import org.apache.spark.sql.graft.PlanDataset
 
-import graft.plans.TopKPerGroup
-import graft.plans.TopKPerGroup.{TopKPerGroupNode, TopKStrategy}
+import graft.plans.TopKPerGroup.TopKPerGroupNode
 
 /** User-facing entry for the custom top-k-per-group physical operator —
   * see [[graft.plans.TopKPerGroup]] for the execution design (bounded
@@ -21,9 +20,8 @@ object TopK {
     * boundary are otherwise resolved arbitrarily (exactly as with
     * `row_number`). Output row order is unspecified.
     *
-    * Works on any session: the planner strategy is registered via
-    * `spark.sql.extensions=graft.plans.GraftExtensions` or, failing that,
-    * appended to `spark.experimental.extraStrategies` on first use. */
+    * Planned by the strategy `spark.sql.extensions=graft.plans.GraftExtensions`
+    * injects (every `GraftSession` carries it). */
   def perGroup(
       df: DataFrame,
       groupCols: Seq[String],
@@ -32,18 +30,6 @@ object TopK {
     require(k >= 1, s"TopK.perGroup: k must be >= 1, got $k")
     require(groupCols.nonEmpty, "TopK.perGroup: need at least one group column")
     require(orderCols.nonEmpty, "TopK.perGroup: need at least one order column")
-    val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[TopKStrategy]) &&
-        !spark.sessionState.planner.strategies.exists(_.isInstanceOf[TopKStrategy])) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ new TopKStrategy
-    }
-    if (!spark.experimental.extraOptimizations.contains(TopKPerGroup.PushFilterThroughTopK) &&
-        !spark.sessionState.optimizer.batches.exists(
-          _.rules.contains(TopKPerGroup.PushFilterThroughTopK))) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKPerGroup.PushFilterThroughTopK
-    }
     val analyzed = PlanDataset.analyzed(df)
     def attr(name: String) = analyzed.output
       .find(_.name == name)
@@ -52,6 +38,6 @@ object TopK {
     val order = orderCols.map { case (name, asc) =>
       SortOrder(attr(name), if (asc) Ascending else Descending)
     }
-    PlanDataset(spark, TopKPerGroupNode(groupCols.map(attr), order, k, analyzed))
+    PlanDataset(df.sparkSession, TopKPerGroupNode(groupCols.map(attr), order, k, analyzed))
   }
 }

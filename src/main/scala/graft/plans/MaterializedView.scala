@@ -37,11 +37,9 @@ import org.apache.spark.sql.graft.PlanDataset
   * re-issued under the old ids), so parent operators are untouched —
   * the rewrite is invisible above the aggregate.
   *
-  * Registered via GraftExtensions (`injectOptimizerRule`) and, for
-  * extension-less sessions, appended to `spark.experimental
-  * .extraOptimizations` on first `create`/`register` (the TopK
-  * fallback pattern). Gated by `spark.graft.mv.rewrite` (default ON —
-  * registering an MV is already the opt-in). */
+  * Registered via GraftExtensions (`injectOptimizerRule`; every
+  * `GraftSession` carries it). Gated by `spark.graft.mv.rewrite` (default
+  * ON — registering an MV is already the opt-in). */
 object MaterializedView {
 
   /** A registered view: where the materialization lives, what it
@@ -83,7 +81,6 @@ object MaterializedView {
       count: Boolean,
       mins: Seq[String] = Nil,
       maxs: Seq[String] = Nil): Unit = {
-    ensureRule(spark)
     registry.put(canon(sourcePath),
       MvDef(mvPath, groupCols, sums.toSet, count, mins.toSet, maxs.toSet,
         snapshotOf(sourcePath)))
@@ -146,7 +143,6 @@ object MaterializedView {
       count: Boolean,
       mins: Seq[String] = Nil,
       maxs: Seq[String] = Nil): MvDef = {
-    ensureRule(spark)
     val mv = MvDef(mvPath, groupCols, sums.toSet, count, mins.toSet, maxs.toSet, Map.empty)
     snapshotRegistry.put(snapshotFiles.map(canon).toSet, mv)
     mv
@@ -237,16 +233,6 @@ object MaterializedView {
       mv.groupCols, sumCols, count = true, minCols, maxCols)
     txnMvs.put(canon(logDir), (head, newDef))
     (head, deltaRows)
-  }
-
-  /** extraOptimizations fallback so the rewrite works on sessions without
-    * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-  def ensureRule(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(RewriteToMv) &&
-        !spark.sessionState.optimizer.batches.exists(_.rules.contains(RewriteToMv))) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteToMv
-    }
   }
 
   object RewriteToMv extends Rule[LogicalPlan] {

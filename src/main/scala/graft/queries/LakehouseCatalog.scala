@@ -24,7 +24,7 @@ private[graft] object LakehouseCatalog {
       val agg = t(s, dir, "orders")
         .groupBy("o_orderpriority")
         .agg(round(sum(col("o_totalprice")), 2).as("total"))
-      val out = s.conf.get("spark.local.dir", "/tmp") + "/graft_csv_roundtrip"
+      val out = scratch("graft-q43") + "/roundtrip"
       graft.sources.Writers.csv(agg, out, singleFile = true)
       graft.sources.Readers
         .csv(s, out, Some(graft.core.FileSchema(Seq("o_orderpriority" -> "STRING", "total" -> "DOUBLE"))))
@@ -136,7 +136,7 @@ private[graft] object LakehouseCatalog {
       val agg = t(s, dir, "orders")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).cast("long").as("n"), round(sum(col("o_totalprice")), 2).as("total"))
-      val out = s.conf.get("spark.local.dir", "/tmp") + "/graft_json_roundtrip"
+      val out = scratch("graft-q70") + "/roundtrip"
       graft.sources.Writers.json(agg, out, singleFile = true)
       graft.sources.Readers.json(s, out)
         .select(col("o_orderstatus"), col("n"), col("total"))
@@ -152,11 +152,11 @@ private[graft] object LakehouseCatalog {
   val q71_overwrite_inplace = Q(
     "q71_overwrite_inplace",
     (s, dir) => {
-      val scratch = s.conf.get("spark.local.dir", "/tmp") + "/graft_overwrite_inplace"
+      val table = scratch("graft-q71") + "/orders"
       graft.sources.Writers.parquet(
-        t(s, dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice"), scratch)
+        t(s, dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice"), table)
       val pruned = graft.sources.Writers
-        .overwriteInPlace(s, s.read.parquet(scratch).filter(col("o_totalprice") > 150000.0), scratch)
+        .overwriteInPlace(s, s.read.parquet(table).filter(col("o_totalprice") > 150000.0), table)
       pruned
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).cast("long").as("n"), round(sum(col("o_totalprice")), 2).as("total"))
@@ -173,15 +173,14 @@ private[graft] object LakehouseCatalog {
   val q72_persist_intermediate = Q(
     "q72_persist_intermediate",
     (s, dir) => {
-      // scratch keyed by sf dir: reuseExisting must never see another
-      // scale factor's intermediate
-      val scratch = s.conf.get("spark.local.dir", "/tmp") +
-        "/graft_persist_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+      // a fresh dir per run: reuseExisting must only ever see this
+      // run's first write, never another run's or scale factor's
+      val cut = scratch("graft-q72")
       val perSupp = t(s, dir, "lineitem")
         .groupBy("l_suppkey")
         .agg(sum(col("l_quantity")).as("qty"))
-      val first = graft.sources.Writers.persistIntermediate(s, perSupp, scratch, "per_supp")
-      val resumed = graft.sources.Writers.persistIntermediate(s, perSupp, scratch, "per_supp", reuseExisting = true)
+      val first = graft.sources.Writers.persistIntermediate(s, perSupp, cut, "per_supp")
+      val resumed = graft.sources.Writers.persistIntermediate(s, perSupp, cut, "per_supp", reuseExisting = true)
       resumed
         .select(floor(col("qty") / 100.0).cast("long").as("qty_bucket"))
         .groupBy("qty_bucket")
@@ -329,7 +328,7 @@ private[graft] object LakehouseCatalog {
         .agg(
           round(sum(col("l_extendedprice")), 2).as("total"),
           count(lit(1)).cast("long").as("n"))
-      val out = s.conf.get("spark.local.dir", "/tmp") + "/graft_orc_roundtrip"
+      val out = scratch("graft-q127") + "/roundtrip"
       graft.sources.Writers.orc(agg, out)
       graft.sources.Readers.orc(s, out).orderBy("l_linestatus")
     },
@@ -378,7 +377,7 @@ private[graft] object LakehouseCatalog {
     "q132_schema_evolution",
     (s, dir) => {
       val orders = t(s, dir, "orders")
-      val base = s.conf.get("spark.local.dir", "/tmp") + "/graft_schema_evo"
+      val base = scratch("graft-q132")
       val v1 = orders.filter(col("o_orderkey") % 2 === 0)
         .groupBy(col("o_orderpriority").as("pri"))
         .agg(round(sum(col("o_totalprice")), 2).as("total"))
@@ -457,7 +456,7 @@ private[graft] object LakehouseCatalog {
   val q137_compaction = Q(
     "q137_compaction",
     (s, dir) => {
-      val base = s.conf.get("spark.local.dir", "/tmp") + "/graft_q137"
+      val base = scratch("graft-q137") + "/documents"
       graft.sources.Writers.parquet(
         t(s, dir, "documents").repartition(40), base)
       graft.sources.Writers.compactFiles(s, base, targetFileBytes = 4L << 20)
@@ -478,7 +477,7 @@ private[graft] object LakehouseCatalog {
   val q140_text_roundtrip = Q(
     "q140_text_roundtrip",
     (s, dir) => {
-      val base = s.conf.get("spark.local.dir", "/tmp") + "/graft_q140"
+      val base = scratch("graft-q140") + "/lines"
       val lines = t(s, dir, "documents").select(
         concat(col("doc_id").cast("string"), lit("|"),
           regexp_replace(col("text"), "[\\n\\r\\t]", " ")).as("value"))
@@ -625,16 +624,14 @@ private[graft] object LakehouseCatalog {
     "q194_file_skipping",
     (s, dir) => {
       import graft.sources.Skipping
-      val scratch = s.conf.get("spark.local.dir", "/tmp") +
-        "/graft_q194_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      graft.sources.HadoopFs.delete(s, scratch)
+      val table = scratch("graft-q194") + "/orders"
       t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
         .repartitionByRange(8, col("o_totalprice"))
-        .write.parquet(scratch)
-      val manifest = Skipping.buildManifest(s, scratch, "o_totalprice")
+        .write.parquet(table)
+      val manifest = Skipping.buildManifest(s, table, "o_totalprice")
       val nFiles = manifest.count()
-      val (files, ranged) = Skipping.readRange(s, scratch, manifest, "o_totalprice", 100000.0, 150000.0)
+      val (files, ranged) = Skipping.readRange(s, table, manifest, "o_totalprice", 100000.0, 150000.0)
       require(files.nonEmpty && files.size < nFiles,
         s"skipping must open a strict subset: ${files.size} of $nFiles")
       ranged
@@ -938,14 +935,13 @@ private[graft] object LakehouseCatalog {
   val q262_dpp = Q(
     "q262_dpp",
     (s, dir) => {
-      val scratch = s.conf.get("spark.local.dir", "/tmp") +
-        "/graft_q262_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+      val base = scratch("graft-q262")
       val li = t(s, dir, "lineitem").select(col("l_partkey"), col("l_quantity"))
       val part = t(s, dir, "part")
       li.join(part.select(col("p_partkey").as("l_partkey"), col("p_brand").as("brand")),
           Seq("l_partkey"))
-        .write.mode("overwrite").partitionBy("brand").parquet(s"$scratch/fact")
-      val fact = s.read.parquet(s"$scratch/fact")
+        .write.mode("overwrite").partitionBy("brand").parquet(s"$base/fact")
+      val fact = s.read.parquet(s"$base/fact")
       // the filter is on p_partkey, NOT on brand: only the runtime subquery
       // over the broadcast dim can know which brand partitions survive
       val dim = part
@@ -1169,14 +1165,12 @@ private[graft] object LakehouseCatalog {
       import s.implicits._
       import graft.sources.TxnLog
       val raw = s.read.parquet(s"$dir/events.parquet")
-      val scratch = s.conf.get("spark.local.dir", "/tmp") +
-        "/graft_q267_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      graft.sources.HadoopFs.delete(s, scratch)
-      val srcDir = s"$scratch/src"
+      val base = scratch("graft-q267")
+      val srcDir = s"$base/src"
       raw.select(col("event_id"), col("user_id")).repartition(4, col("event_id"))
         .write.parquet(srcDir)
-      val logDir = s"$scratch/_log"
-      val dataDir = s"$scratch/data"
+      val logDir = s"$base/_log"
+      val dataDir = s"$base/data"
       val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
       val q = scopedStreamStart(s)(stream.writeStream

@@ -310,18 +310,16 @@ private[graft] object StreamingCatalog {
     "q190_stream_upsert",
     (s, dir) => {
       val raw = s.read.parquet(s"$dir/events.parquet")
-      val scratch = s.conf.get("spark.local.dir", "/tmp") +
-        "/graft_q190_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      graft.sources.HadoopFs.delete(s, scratch)
-      val srcDir = s"$scratch/src"
+      val base = scratch("graft-q190")
+      val srcDir = s"$base/src"
       raw.repartition(4, col("event_id")).write.parquet(srcDir)
       val stream = s.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
       val agg = stream.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
       val q = scopedStreamStart(s)(graft.streaming.StreamOps.idempotentUpsertCounts(
-        agg, s"$scratch/serving", s"$scratch/ckpt"))
+        agg, s"$base/serving", s"$base/ckpt"))
       q.awaitTermination()
-      graft.streaming.StreamOps.readServingCounts(s, s"$scratch/serving", Seq("event_type"))
+      graft.streaming.StreamOps.readServingCounts(s, s"$base/serving", Seq("event_type"))
         .select(col("event_type"), col("n").cast("long").as("n"))
         .orderBy("event_type")
     },

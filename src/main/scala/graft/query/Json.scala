@@ -29,7 +29,7 @@ object Json {
     val n = mapper.readTree(json)
     ProjectQuery(
       name = str(n, "name"),
-      datasets = datasetSection(n.get("datasets")),
+      datasets = datasetSection(req(n, "datasets")),
       result = Option(n.get("result")).map(resultSection).getOrElse(ResultSection()),
       sessionTimeZone = optStr(n, "session_time_zone"))
   }
@@ -38,7 +38,7 @@ object Json {
     val n = mapper.readTree(json)
     DatasetQuery(
       name = str(n, "name"),
-      dataset = datasetRef(n.get("dataset")),
+      dataset = datasetRef(req(n, "dataset")),
       result = Option(n.get("result")).map(resultSection).getOrElse(ResultSection()))
   }
 
@@ -330,11 +330,14 @@ object Json {
     else if (n.isBoolean) n.asBoolean()
     else n.asText()
 
-  private[graft] def str(n: JsonNode, field: String): String = {
+  /** A required field: absent or JSON `null` is the document's fault. */
+  private[graft] def req(n: JsonNode, field: String): JsonNode = {
     val v = n.get(field)
     require(v != null && !v.isNull, s"missing required field: $field")
-    v.asText()
+    v
   }
+
+  private[graft] def str(n: JsonNode, field: String): String = req(n, field).asText()
 
   private[graft] def optStr(n: JsonNode, field: String): Option[String] =
     Option(n.get(field)).filterNot(_.isNull).map(_.asText())

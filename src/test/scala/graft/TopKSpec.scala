@@ -216,4 +216,14 @@ class TopKSpec extends SparkSpec {
     }
   }
 
+  test("the session carries every rule TopK, IntervalLookup and MaterializedView plan through") {
+    // the operators install nothing themselves: GraftExtensions is the only source
+    val strategies = spark.sessionState.planner.strategies
+    assert(strategies.exists(_.isInstanceOf[TopKPerGroup.TopKStrategy]))
+    assert(strategies.exists(_.isInstanceOf[graft.plans.IntervalJoin.IntervalJoinStrategy]))
+    val rules = spark.sessionState.optimizer.batches.flatMap(_.rules)
+    assert(rules.contains(TopKPerGroup.PushFilterThroughTopK))
+    assert(rules.contains(graft.plans.MaterializedView.RewriteToMv))
+    assert(spark.experimental.extraStrategies.isEmpty && spark.experimental.extraOptimizations.isEmpty)
+  }
 }
