@@ -152,7 +152,7 @@ final class Api(
         try {
           SparkSession.setActiveSession(registry.spark)
           handler(ex)
-        } catch { case e: Exception => statusOf(e) -> error(String.valueOf(e.getMessage)) }
+        } catch { case e: Exception => statusOf(e) -> error(messageOf(e)) }
       send(ex, status, body)
     })
 
@@ -282,7 +282,7 @@ final class Api(
         val part = new java.io.File(dir).listFiles().find(_.getName.endsWith(".parquet")).get
         Job(200, file = Some(part.getAbsolutePath))
       } else Job(200, rows(df))
-    } catch { case e: Exception => Job(500, error(String.valueOf(e.getMessage))) }
+    } catch { case e: Exception => Job(500, error(messageOf(e))) }
 
   private def job(ex: HttpExchange): (Int, Any) = {
     val rest = ex.getRequestURI.getPath.stripPrefix("/jobs/").stripSuffix("/")
@@ -391,6 +391,13 @@ object Api {
   private def statusOf(e: Exception): Int = e match {
     case _: IllegalArgumentException | _: JsonProcessingException | _: AnalysisException => 400
     case _ => 500
+  }
+
+  /** The client-facing reason: an `AnalysisException`'s message without
+    * the analyzed plan, whose relation and attribute ids are internals. */
+  private def messageOf(e: Exception): String = e match {
+    case a: AnalysisException => a.getSimpleMessage
+    case _ => String.valueOf(e.getMessage)
   }
 
   /** A JSON object in field order; Scala collections become JSON arrays. */

@@ -73,7 +73,6 @@ object MaterializedView {
 
   /** Register an EXISTING materialization for `sourcePath`. */
   def register(
-      spark: SparkSession,
       sourcePath: String,
       mvPath: String,
       groupCols: Seq[String],
@@ -110,7 +109,7 @@ object MaterializedView {
       .groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(mvPath)
-    register(spark, sourcePath, mvPath, groupCols, sums, count, mins, maxs)
+    register(sourcePath, mvPath, groupCols, sums, count, mins, maxs)
   }
 
   def unregister(sourcePath: String): Unit = registry.remove(canon(sourcePath))
@@ -135,7 +134,6 @@ object MaterializedView {
   private[graft] val txnMvs = TrieMap.empty[String, (Long, MvDef)]
 
   def registerSnapshot(
-      spark: SparkSession,
       snapshotFiles: Seq[String],
       mvPath: String,
       groupCols: Seq[String],
@@ -173,7 +171,7 @@ object MaterializedView {
       .groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(mvPath)
-    val mv = registerSnapshot(spark, files, mvPath, groupCols, sums, count = true, mins, maxs)
+    val mv = registerSnapshot(files, mvPath, groupCols, sums, count = true, mins, maxs)
     txnMvs.put(canon(logDir), (head, mv))
     head
   }
@@ -229,7 +227,7 @@ object MaterializedView {
       .filter(col("cnt") > 0)
     merged.write.mode("overwrite").parquet(newMvPath)
     val files = graft.sources.TxnLog.liveFiles(logDir, head).toSeq.sorted
-    val newDef = registerSnapshot(spark, files, newMvPath,
+    val newDef = registerSnapshot(files, newMvPath,
       mv.groupCols, sumCols, count = true, minCols, maxCols)
     txnMvs.put(canon(logDir), (head, newDef))
     (head, deltaRows)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Par
 import graft.sources.TxnLog
 
 import graft.QueryDsl._
@@ -802,7 +803,7 @@ private[graft] object LakehouseCatalog {
       val root = scratch("graft-residue")
       val base = residueBase(s, dir)
       // disjoint-path fixture writes run overlapped (guide §2.6)
-      QueryDsl.parActions(0 until 3)(m =>
+      Par.map(0 until 3)(m =>
         TxnLog.writeDataFile(base.filter(pmod(col("key"), lit(3)) === m), s"$root/m$m"))
     }
 
@@ -833,7 +834,7 @@ private[graft] object LakehouseCatalog {
       val ev = t(s, dir, "events").select(col("event_id").cast("long").as("event_id"),
         col("user_id").cast("long").as("user_id"))
       // disjoint-path fixture writes run overlapped (guide §2.6)
-      val Seq(f0a, f0b) = QueryDsl.parActions(Seq(
+      val Seq(f0a, f0b) = Par.map(Seq(
         ("even", col("event_id") % 2 === 0), ("odd", col("event_id") % 2 === 1))) {
         case (name, pred) => TxnLog.writeDataFile(ev.filter(pred), s"$root/$name")
       }
@@ -844,7 +845,7 @@ private[graft] object LakehouseCatalog {
         .select((col("event_id") + 10000000L).as("event_id"), col("user_id")), s"$root/late")
       TxnLog.commit(logDir, 2, adds = Seq(f2), removes = Nil)
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 2L) { v =>
+      Par.map(0L to 2L) { v =>
         val snap = TxnLog.readAsOf(s, logDir, v)
         (v, TxnLog.liveFiles(logDir, v).size.toLong, snap.count())
       }.toDF("version", "n_files", "n_rows")
@@ -987,7 +988,7 @@ private[graft] object LakehouseCatalog {
       TxnLog.mergeCopyOnWrite(s, logDir, s"$root/merged", updates, "key")
       val v0Files = TxnLog.liveFiles(logDir, 0)
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 1L) { v =>
+      Par.map(0L to 1L) { v =>
         val live = TxnLog.liveFiles(logDir, v)
         val agg = TxnLog.readAsOf(s, logDir, v)
           .agg(count(lit(1)).cast("long"), sum(col("value")).cast("long")).head()
@@ -1030,7 +1031,7 @@ private[graft] object LakehouseCatalog {
       TxnLog.deleteMergeOnRead(s, logDir, s"$root/dv1", col("key") % 7 === 0)
       TxnLog.deleteMergeOnRead(s, logDir, s"$root/dv2", col("key") % 11 === 0)
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 2L) { v =>
+      Par.map(0L to 2L) { v =>
         val agg = TxnLog.readAsOfWithDeletes(s, logDir, v)
           .agg(count(lit(1)).cast("long"), coalesce(sum(col("value")), lit(0L)).cast("long"))
           .head()
@@ -1077,7 +1078,7 @@ private[graft] object LakehouseCatalog {
         col("event_id").cast("long").as("event_id"),
         col("user_id").cast("long").as("user_id"))
       // disjoint-path fixture writes run overlapped (guide §2.6)
-      val Seq(f0a, f0b) = QueryDsl.parActions(Seq(
+      val Seq(f0a, f0b) = Par.map(Seq(
         ("even", col("event_id") % 2 === 0), ("odd", col("event_id") % 2 === 1))) {
         case (name, pred) => TxnLog.writeDataFile(ev.filter(pred), s"$root/$name")
       }
@@ -1396,7 +1397,7 @@ private[graft] object LakehouseCatalog {
           .count()
       }
       // three independent post-optimize reads run overlapped (guide §2.6)
-      val Seq(before, after, rect) = QueryDsl.parActions(Seq(0, 1, 2)) {
+      val Seq(before, after, rect) = Par.map(Seq(0, 1, 2)) {
         case 0 => boxOpens(0)
         case 1 => boxOpens(v1)
         case _ => TxnLog.readAsOf(s, logDir, v1)
@@ -1459,7 +1460,7 @@ private[graft] object LakehouseCatalog {
         .select(col("key"), (col("key") * 5).as("value"), (col("key") * 7).as("w"))
       TxnLog.mergeCopyOnWrite(s, logDir, s"$root/merged", updates, "key")
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 2L) { v =>
+      Par.map(0L to 2L) { v =>
         val snap = TxnLog.readAsOf(s, logDir, v)
         val withW = if (snap.columns.contains("w")) snap
           else snap.withColumn("w", lit(null).cast("long"))
@@ -1510,7 +1511,7 @@ private[graft] object LakehouseCatalog {
       TxnLog.mergeCopyOnWrite(s, logDir, s"$root/merged", updates, "key")
       TxnLog.restore(s, logDir, 0)
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 3L) { v =>
+      Par.map(0L to 3L) { v =>
         val agg = TxnLog.readAsOfWithDeletes(s, logDir, v)
           .agg(count(lit(1)).cast("long"), coalesce(sum(col("value")), lit(0L)).cast("long"))
           .head()
@@ -1557,7 +1558,7 @@ private[graft] object LakehouseCatalog {
       val (root, logDir, base) = residueTable(s, dir, "q273")
       val fs = sharedResidueFiles(s, dir)
       // disjoint-path fixture writes run overlapped (guide §2.6)
-      val Seq(m0a, m1b) = QueryDsl.parActions(Seq(
+      val Seq(m0a, m1b) = Par.map(Seq(
         ("m0a", 0, 10L), ("m1b", 1, 100L))) { case (name, res, mult) =>
         TxnLog.writeDataFile(base.filter(col("key") % 3 === res)
           .select(col("key"), (col("key") * mult).as("value")), s"$root/$name")
@@ -1569,7 +1570,7 @@ private[graft] object LakehouseCatalog {
         catch { case _: java.util.ConcurrentModificationException => true }
       val head = TxnLog.latestVersion(logDir).get
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(Seq(("a", vA, false), ("b", vB, false), ("c", head, cConflict))) {
+      Par.map(Seq(("a", vA, false), ("b", vB, false), ("c", head, cConflict))) {
         case (w, v, conflict) =>
           val agg = TxnLog.readAsOf(s, logDir, v)
             .agg(count(lit(1)).cast("long"), sum(col("value")).cast("long")).head()
@@ -1621,7 +1622,7 @@ private[graft] object LakehouseCatalog {
       TxnLog.commit(logDir, 2, adds = Seq(appended), removes = Nil)
       val srcAtClone = TxnLog.liveFiles(logDir, 1)
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(Seq(("clone", cloneLog, 0L), ("clone", cloneLog, 1L),
+      Par.map(Seq(("clone", cloneLog, 0L), ("clone", cloneLog, 1L),
         ("src", logDir, 1L), ("src", logDir, 2L))) { case (tbl, log, v) =>
         val agg = TxnLog.readAsOfWithDeletes(s, log, v)
           .agg(count(lit(1)).cast("long"), coalesce(sum(col("value")), lit(0L)).cast("long"))
@@ -1675,14 +1676,14 @@ private[graft] object LakehouseCatalog {
         (col("p_partkey") * 2).cast("long").as("value"))
       val half = base.agg(max("key")).head.getLong(0) / 2
       // disjoint-path fixture writes run overlapped (guide §2.6)
-      val old = QueryDsl.parActions(Seq(
+      val old = Par.map(Seq(
         ("old0", col("key") <= half), ("old1", col("key") > half))) {
         case (name, pred) => TxnLog.writeDataFile(base.filter(pred), s"$root/$name")
       }
       TxnLog.commit(logDir, 0, adds = old, removes = Nil)
       val fresh = base.filter(col("key") % 25 === 0).select(
         (col("key") + 10000000L).as("key"), col("cat"), (col("key") * 3).as("value"))
-      val parts = QueryDsl.parActions(0 until 4) { c =>
+      val parts = Par.map(0 until 4) { c =>
         TxnLog.writeDataFile(fresh.filter(col("cat") === c), s"$root/cat$c") -> s"cat=$c"
       }
       TxnLog.commit(logDir, 1, adds = parts.map(_._1), removes = Nil,
@@ -1724,7 +1725,7 @@ private[graft] object LakehouseCatalog {
       TxnLog.commit(logDir, 2, adds = Seq(TxnLog.writeDataFile(appended, s"$root/v2")), removes = Nil)
       TxnLog.renameColumn(s, logDir, "amount", "amt")
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 3L) { v =>
+      Par.map(0L to 3L) { v =>
         val snap = TxnLog.readAsOfMapped(s, logDir, v)
         val valueCol = snap.columns.filter(_ != "key").head
         val agg = snap.agg(count(lit(1)).cast("long"), sum(col(valueCol)).cast("long")).head()
@@ -2040,7 +2041,7 @@ private[graft] object LakehouseCatalog {
       TxnLog.compact(s, logDir, s"$root/opt", targetFiles = 4,
         bucket = Some(pmod(col("key"), lit(4))))
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 3L) { v =>
+      Par.map(0L to 3L) { v =>
         val agg = TxnLog.readAsOfWithDeletes(s, logDir, v)
           .agg(count(lit(1)).cast("long"), coalesce(sum(col("value")), lit(0L)).cast("long"))
           .head()

@@ -17,37 +17,6 @@ private[graft] object QueryDsl {
       run: (SparkSession, String) => DataFrame,
       oracle: Option[String])
 
-  /** Order-preserving parallel map for INDEPENDENT Spark actions inside a
-    * query's driver sequence (guide §2.6: actions are only sequential
-    * because the driver calls them sequentially — overlapping independent
-    * jobs lets the scheduler back-fill executors from the next job's tasks
-    * while the current one drains its tail). The lakehouse queries' shapes
-    * are exactly this: N fixture-file writes to DISJOINT paths, then M
-    * per-version snapshot aggregates over an already-final log. Spark
-    * driver calls are thread-safe (the registry copy/validation paths have
-    * run actions under Future.traverse since r10); results come back in
-    * input order, so the assembled local frame is bit-identical to the
-    * sequential loop's. Use ONLY when iterations touch disjoint state.
-    * Bounded dedicated pool: the global EC would serialize behind other
-    * work and an unbounded one could swamp the scheduler. Each task runs
-    * under the caller's session, pinned explicitly: a worker thread must
-    * not depend on which thread created it (the active-session
-    * thread-local is inherited only at thread creation). */
-  private[graft] def parActions[A, B](xs: Seq[A], par: Int = 4)(f: A => B): Seq[B] =
-    if (xs.sizeIs <= 1) xs.map(f)
-    else {
-      val session = SparkSession.active
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(par, xs.size))
-      implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.traverse(xs) { a =>
-          scala.concurrent.Future { SparkSession.setActiveSession(session); f(a) }
-        },
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
-
   /** events.ts has shipped in three encodings across testdata generations:
     * parquet TIMESTAMP(NANOS) read as long nanos (session sets
     * spark.sql.legacy.parquet.nanosAsLong), plain micros TIMESTAMP_NTZ,

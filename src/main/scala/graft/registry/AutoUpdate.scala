@@ -3,7 +3,7 @@ package graft.registry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Constants
+import graft.core.{Constants, Par}
 
 /** Registry auto-updater — cascade a dimension update through every
   * dependent object so the registry never needs hand-repair (ref:
@@ -82,20 +82,15 @@ object AutoUpdate {
       }
       // the dataset sweep is O(#datasets) driver-side schema reads (most
       // datasets don't carry the dimension column and are schema-check
-      // only) — run it concurrently; Future.traverse preserves report
-      // order, and prunes write to disjoint per-dataset paths
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val datasetsTouched = Await.result(
-        Future.traverse(reg.listDatasets()) { d => Future {
-          val touchedLoad = pruneDatasetTable(reg, ids, name,
-            s"${reg.root}/datasets/$d/load_data.parquet")
-          val touchedLookup = pruneDatasetTable(reg, ids, name,
-            s"${reg.root}/datasets/$d/load_data_lookup.parquet")
-          if (touchedLoad || touchedLookup) Some(d) else None
-        } },
-        Duration.Inf).flatten
+      // only) — run it concurrently; Par.map preserves report order, and
+      // prunes write to disjoint per-dataset paths
+      val datasetsTouched = Par.map(reg.listDatasets()) { d =>
+        val touchedLoad = pruneDatasetTable(reg, ids, name,
+          s"${reg.root}/datasets/$d/load_data.parquet")
+        val touchedLookup = pruneDatasetTable(reg, ids, name,
+          s"${reg.root}/datasets/$d/load_data_lookup.parquet")
+        if (touchedLoad || touchedLookup) Some(d) else None
+      }.flatten
       // the cascade repaired every dependent, so the VALIDATED registration
       // path must now accept the update; its update-compatibility check is
       // the post-condition that proves the cascade complete

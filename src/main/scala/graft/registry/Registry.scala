@@ -1,6 +1,7 @@
 package graft.registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Par
 import graft.query.Json
 import graft.sources.{HadoopFs, Readers}
 
@@ -216,17 +217,8 @@ object Registry {
     // hundreds of selections are the realistic shape (the reference's
     // production registries) — copy subtrees concurrently; each copy
     // targets a distinct destination path
-    def copyAll(kind: String, names: Seq[String]): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(
-        Future.traverse(names) { n => Future {
-          HadoopFs.copy(reg.spark, s"${reg.root}/$kind/$n", s"$destRoot/$kind/$n")
-        } },
-        Duration.Inf)
-      ()
-    }
+    def copyAll(kind: String, names: Seq[String]): Unit =
+      Par.map(names)(n => HadoopFs.copy(reg.spark, s"${reg.root}/$kind/$n", s"$destRoot/$kind/$n"))
     copyAll("datasets", datasets)
     copyAll("dimensions", dimensions)
     copyAll("mappings", mappings)
@@ -363,16 +355,11 @@ object Registry {
         .select(col("id").cast("string").as("id")).distinct()
       // reg.mapping() is a driver-side parquet schema read per table —
       // build the union's legs concurrently (order-preserving)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val tagged = Await.result(
-        Future.traverse(group) { case (m, side, _) => Future {
-          reg.mapping(m).select(
-            col(side).cast("string").as("id"),
-            lit(m).as("mapping"), lit(side).as("side"))
-        } },
-        Duration.Inf).reduce(_.unionByName(_))
+      val tagged = Par.map(group) { case (m, side, _) =>
+        reg.mapping(m).select(
+          col(side).cast("string").as("id"),
+          lit(m).as("mapping"), lit(side).as("side"))
+      }.reduce(_.unionByName(_))
       tagged.join(broadcast(ids), Seq("id"), "left_anti")
         .groupBy(col("mapping"), col("side"))
         .agg(slice(sort_array(collect_set(col("id"))), 1, 5).as("missing"))

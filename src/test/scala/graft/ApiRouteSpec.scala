@@ -135,6 +135,23 @@ class ApiRouteSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("an analysis error body names the column but not the analyzed plan") {
+    val dataDir = Files.createTempDirectory("graft-api-route-plan").toString
+    Seq((1L, "the quick brown fox", "web")).toDF("doc_id", "text", "source")
+      .coalesce(1).write.parquet(s"$dataDir/docs.parquet")
+    val api = new Api(buildRegistry())
+    val port = api.start()
+    try {
+      val badSql = post(port, "/curate", s"""{"data_dir": "$dataDir",
+        "plan": {"name": "b", "input": "docs", "stages": [{"stage_type": "filter",
+          "filters": [{"filter_type": "raw", "expression": "ghost_col > 1"}]}]}}""")
+      assert(badSql.statusCode() == 400, badSql.body())
+      assert(badSql.body().contains("ghost_col"), badSql.body())
+      assert(!badSql.body().contains("Relation ["), badSql.body())
+      assert("#\\d+".r.findFirstIn(badSql.body()).isEmpty, badSql.body())
+    } finally api.stop()
+  }
+
   test("wire bodies: object spacing, compact arrays, error envelopes") {
     val reg = buildRegistry()
     val projectId = new org.apache.hadoop.fs.Path(reg.root).getName

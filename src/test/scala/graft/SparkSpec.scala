@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 
 /** Shared local session for all specs (one JVM-wide session keeps the suite
   * fast; specs only create tiny in-memory frames). */
@@ -19,12 +19,19 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   // write command then NPEs ("sparkSession is null" in
   // InsertIntoHadoopFsRelationCommand.run; VERIFY_r18 caught it once in
   // TopKSpec). Pin both session slots on whichever thread first touches
-  // `spark` in each suite instance (tests of one suite run on that thread).
-  lazy val spark: SparkSession = {
-    val s = TestSession.spark
+  // `spark` (suite construction may), and again before every test body,
+  // whichever thread runs it.
+  lazy val spark: SparkSession = pin(TestSession.spark)
+
+  private def pin(s: SparkSession): SparkSession = {
     SparkSession.setDefaultSession(s)
     SparkSession.setActiveSession(s)
     s
+  }
+
+  override def withFixture(test: NoArgTest): Outcome = {
+    pin(spark)
+    super.withFixture(test)
   }
   import spark.implicits._
 
