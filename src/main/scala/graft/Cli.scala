@@ -33,7 +33,7 @@ import graft.sources.HadoopFs
   * graft.Cli query composite-create <registryRoot> <query.json> <id> [--cache <dir>]
   * graft.Cli query composite-run <registryRoot> <id> <query.json> <outDir> [--csv] [--cache <dir>]
   * graft.Cli query register-derived <registryRoot> <query.json> <id> [--cache <dir>]
-  * graft.Cli curate <dataDir> <plan.json> <outDir> [--csv] [--cache <dir>] [--resume] [--dry-run] [--register <registryRoot>]
+  * graft.Cli curate <dataDir> <plan.json> <outDir> [--csv] [--cache <dir>] [--dry-run] [--register <registryRoot>]
   * graft.Cli serve <registryRoot> [port]
   * }}}
   *
@@ -130,14 +130,13 @@ object Cli {
 
     // Curation pipeline from a JSON plan document (the declarative surface
     // over the LLM-data operators — mirrors `query project run` exactly:
-    // parse, submit with optional cache/resume, write result + sidecar)
+    // parse, submit with an optional cache, write result + sidecar)
     case "curate" :: dataDir :: planFile :: outDir :: rest =>
       val spark = GraftSession.get()
       val rc = validated {
         val planText = readFile(planFile)
         val plan = graft.query.CurationJson.parse(planText)
-        val sub = new graft.query.CurationSubmitter(
-          spark, dataDir, flagValue(rest, "--cache"), resume = rest.contains("--resume"))
+        val sub = new graft.query.CurationSubmitter(spark, dataDir, flagValue(rest, "--cache"))
         if (rest.contains("--dry-run")) {
           // schema walk only: print the per-stage output schema, run nothing
           sub.explain(plan).zipWithIndex.foreach { case ((tpe, cols, persist), i) =>
@@ -413,7 +412,7 @@ object Cli {
       System.err.println(
         """usage:  (<registryRoot> may be @<config.json> written by `config create`)
           |  graft.Cli config create <config.json> <registryRoot>
-          |  graft.Cli curate <dataDir> <plan.json> <outDir> [--csv] [--cache <dir>] [--resume] [--dry-run] [--register <registryRoot>]
+          |  graft.Cli curate <dataDir> <plan.json> <outDir> [--csv] [--cache <dir>] [--dry-run] [--register <registryRoot>]
           |  graft.Cli serve <registryRoot> [port]
           |  graft.Cli query project <registryRoot> <query.json> <outDir> [--csv] [--cache <dir>]
           |  graft.Cli query dataset <registryRoot> <query.json> <outDir> [--csv] [--cache <dir>]

@@ -282,7 +282,7 @@ final class Api(
         val part = new java.io.File(dir).listFiles().find(_.getName.endsWith(".parquet")).get
         Job(200, file = Some(part.getAbsolutePath))
       } else Job(200, rows(df))
-    } catch { case e: Exception => Job(500, error(messageOf(e))) }
+    } catch { case e: Exception => Job(statusOf(e), error(messageOf(e))) }
 
   private def job(ex: HttpExchange): (Int, Any) = {
     val rest = ex.getRequestURI.getPath.stripPrefix("/jobs/").stripSuffix("/")

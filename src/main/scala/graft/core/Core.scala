@@ -122,14 +122,20 @@ object GraftSession {
     s
   }
 
-  /** Run a thunk with a temporarily overridden session time zone
-    * (ref: dsgrid/query/query_submitter.py:697-714 restarts the session for
-    * this; in-JVM a scoped conf set/restore suffices). */
-  def withSessionTimeZone[T](spark: SparkSession, tz: String)(f: => T): T = {
-    val key = "spark.sql.session.timeZone"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, tz)
-    try f
-    finally spark.conf.set(key, old)
+  /** Run `body` with runtime conf overrides, then restore each key's
+    * previous value, or unset it if it had none (ref:
+    * dsgrid/utils/spark.py:823-850 custom_spark_conf; the reference restarts
+    * its session for a time-zone override, query_submitter.py:697-714 —
+    * in-JVM a scoped set/restore suffices). Spark reads most conf at
+    * analysis or execution time, so materialize inside the scope. */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val previous = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally previous.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

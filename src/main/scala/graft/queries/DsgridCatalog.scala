@@ -998,7 +998,7 @@ private[graft] object DsgridCatalog {
   /** Session-time-zone management (SURVEY §2.9, the last spec-only time
     * row): the SAME column expression (`date_format`) renders different
     * wall-clock fields under a scoped session-zone override
-    * (`Core.withSessionTimeZone` — the reference restarts its session for
+    * (`GraftSession.withConf` — the reference restarts its session for
     * this, query_submitter.py:697-714). The aggregate is materialized
     * INSIDE the scope: session-zone-dependent expressions resolve the conf
     * at execution, so a lazily-returned frame would silently run under the
@@ -1010,7 +1010,7 @@ private[graft] object DsgridCatalog {
       // time-zone-aware expressions (date_format) capture the session zone
       // at ANALYSIS time, so a frame defined outside would bake in the old
       // zone no matter when it executes.
-      val (rows, schema) = graft.core.GraftSession.withSessionTimeZone(s, "America/Denver") {
+      val (rows, schema) = graft.core.GraftSession.withConf(s, "spark.sql.session.timeZone" -> "America/Denver") {
         val agg = t(s, dir, "events")
           .select(date_format(col("ts"), "HH").cast("long").as("local_hour"))
           .groupBy("local_hour")

@@ -459,12 +459,9 @@ private[graft] object GraphCatalog {
       // shuffle width down (per-round job overhead, not data, dominates
       // at catalog sizes; on a real cluster this knob scales with the
       // edge count instead)
-      val prevP = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val scc =
-        try graft.operators.Graph.stronglyConnectedComponents(
-          ring.unionByName(cross).unionByName(single))
-        finally s.conf.set("spark.sql.shuffle.partitions", prevP)
+      val scc = graft.core.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.operators.Graph.stronglyConnectedComponents(ring.unionByName(cross).unionByName(single))
+      }
       scc.groupBy(col("scc")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").cast("long").as("scc_size"))
         .agg(count(lit(1)).cast("long").as("n_sccs"),

@@ -168,20 +168,23 @@ private[graft] object LakehouseCatalog {
             FROM orders WHERE o_totalprice > 150000.0 GROUP BY 1 ORDER BY 1"""))
 
   /** Persist-intermediate (SURVEY §2.1): a mid-pipeline frame is cut to
-    * scratch parquet and read back (lineage truncation), and the second
-    * call hits the reuseExisting resume path — both must yield the same
-    * bytes the oracle computes directly. */
+    * scratch parquet and read back (lineage truncation), published once
+    * under a content key, and a second `FileCache.cached` call whose build
+    * would throw reuses the entry — all must yield the same bytes the
+    * oracle computes directly. */
   val q72_persist_intermediate = Q(
     "q72_persist_intermediate",
     (s, dir) => {
-      // a fresh dir per run: reuseExisting must only ever see this
-      // run's first write, never another run's or scale factor's
+      // a fresh dir per run: the reuse must only ever see this run's
+      // entry, never another run's or scale factor's
       val cut = scratch("graft-q72")
       val perSupp = t(s, dir, "lineitem")
         .groupBy("l_suppkey")
         .agg(sum(col("l_quantity")).as("qty"))
-      val first = graft.sources.Writers.persistIntermediate(s, perSupp, cut, "per_supp")
-      val resumed = graft.sources.Writers.persistIntermediate(s, perSupp, cut, "per_supp", reuseExisting = true)
+      val lineageCut = graft.sources.Writers.persistIntermediate(s, perSupp, cut, "per_supp")
+      graft.query.FileCache.cached(s, cut, "per_supp")(lineageCut)
+      val resumed = graft.query.FileCache.cached(s, cut, "per_supp")(
+        throw new IllegalStateException("q72: the published entry was not reused"))
       resumed
         .select(floor(col("qty") / 100.0).cast("long").as("qty_bucket"))
         .groupBy("qty_bucket")

@@ -26,7 +26,7 @@ private[graft] object QueryDsl {
     * spark.sql.parquet.inferTimestampNTZ.enabled=false, so the NTZ file
     * column already arrives as a UTC-instant TIMESTAMP (session-tz
     * INDEPENDENT — a bare cast would capture the session zone at analysis
-    * time and silently shift under withSessionTimeZone scopes, which is
+    * time and silently shift under scoped session-zone overrides, which is
     * how q80 broke when the testdata encoding changed). The NTZ branch
     * below is a fallback for foreign sessions without that conf: it pins
     * the interpretation to UTC explicitly via convert_timezone against

@@ -1064,9 +1064,7 @@ private[graft] object RelationalCatalog {
     "q230_window_topk_rewrite",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val prev = s.conf.getOption("spark.graft.topk.rewriteWindow")
-      s.conf.set("spark.graft.topk.rewriteWindow", "true")
-      try {
+      graft.core.GraftSession.withConf(s, "spark.graft.topk.rewriteWindow" -> "true") {
         val li = t(s, dir, "lineitem")
         val w = Window.partitionBy(col("l_orderkey"))
           .orderBy(col("l_extendedprice").desc, col("l_linenumber"))
@@ -1082,11 +1080,6 @@ private[graft] object RelationalCatalog {
         // materialize under the conf scope — the rewrite fires at
         // optimization time, which localCheckpoint forces here
         out.localCheckpoint(true)
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set("spark.graft.topk.rewriteWindow", v)
-          case None => s.conf.unset("spark.graft.topk.rewriteWindow")
-        }
       }
     },
     Some("""SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey,
@@ -1206,9 +1199,7 @@ private[graft] object RelationalCatalog {
     "q242_plan_lint",
     (s, dir) => {
       import s.implicits._
-      val prev = s.conf.getOption("spark.graft.lint.noCartesian")
-      s.conf.set("spark.graft.lint.noCartesian", "true")
-      try {
+      graft.core.GraftSession.withConf(s, "spark.graft.lint.noCartesian" -> "true") {
         val n = t(s, dir, "nation")
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
         val r = t(s, dir, "region").select(col("r_regionkey"))
@@ -1224,11 +1215,6 @@ private[graft] object RelationalCatalog {
           .toDF("case", "vetoed", "rows")
           .select(col("case"), col("vetoed"), col("rows").cast("long").as("rows"))
           .orderBy("case")
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set("spark.graft.lint.noCartesian", v)
-          case None => s.conf.unset("spark.graft.lint.noCartesian")
-        }
       }
     },
     Some("""SELECT 'cross_join' AS "case", TRUE AS vetoed, 0::BIGINT AS rows

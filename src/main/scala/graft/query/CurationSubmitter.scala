@@ -30,11 +30,10 @@ final class CurationSubmitter(
     val spark: SparkSession,
     /** directory holding `<table>.parquet` inputs */
     dataDir: String,
-    cacheDir: Option[String] = None,
-    /** reuse persisted stage outputs already on disk (valid only while
+    /** result cache and stage checkpoints; a checkpoint is reused while
       * the input and the plan prefix are unchanged — both are folded into
-      * the step key, so a stale checkpoint is simply never found). */
-    resume: Boolean = false,
+      * the step key, so a stale checkpoint is simply never found. */
+    cacheDir: Option[String] = None,
     /** registry backing `"artifacts": true` dedup stages ([[graft.registry
       * .DerivedArtifacts]]): shingle/bucket frames persist as
       * provenance-stamped registered datasets keyed by (input token +
@@ -378,9 +377,9 @@ final class CurationSubmitter(
   }
 
   /** Run the plan. With a `cacheDir`: stage persist points checkpoint to
-    * `curation_steps/` keyed by (input token + plan prefix) — reruns of
-    * the same prefix over unchanged input resume from the checkpoint when
-    * `resume` is set; the final result publishes atomically under
+    * `curation_steps/step_<key>` keyed by (input token + plan prefix) —
+    * reruns of the same prefix over unchanged input resume from the
+    * checkpoint; the final result publishes atomically under
     * `cached_tables/<key>` with `plan.json` + `metadata.json` sidecars,
     * and an identical resubmission is a pure cache read. */
   def submit(plan: CurationPlan): DataFrame = {
@@ -397,13 +396,12 @@ final class CurationSubmitter(
           (s"curation__${plan.name}__s$i",
             Models.contentHash(token + CurationModels.canonicalPrefix(plan, i - 1)))
         }
-        val out = applyStage(df, st, artifactKey)
-        if (st.persist && cacheDir.isDefined) {
-          val stepKey = Models.contentHash(token + CurationModels.canonicalPrefix(plan, i))
-          graft.sources.Writers.persistIntermediate(
-            spark, out, s"${cacheDir.get}/curation_steps", s"step_$stepKey",
-            reuseExisting = resume)
-        } else out
+        cacheDir match {
+          case Some(dir) if st.persist =>
+            val stepKey = Models.contentHash(token + CurationModels.canonicalPrefix(plan, i))
+            FileCache.cached(spark, s"$dir/curation_steps", s"step_$stepKey")(applyStage(df, st, artifactKey))
+          case _ => applyStage(df, st, artifactKey)
+        }
       }
     cacheDir match {
       case None => build()

@@ -3,14 +3,16 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.{HadoopFs, Readers}
 
-/** Content-hash-keyed parquet result cache shared by the project-query and
-  * curation submitters (ref: the reference's cached_tables layout,
-  * dsgrid/query/query_submitter.py:133-171): entries live under
-  * `<base>/<key>/table.parquet`, are written to a temp dir first, and
+/** The engine's one content-keyed parquet store (ref: the reference's
+  * cached_tables layout, dsgrid/query/query_submitter.py:133-171, and its
+  * mapping-plan checkpoints, dataset_mapping_manager.py:51-103): query
+  * results, mapped datasets, map steps and curation checkpoints all live
+  * under `<base>/<key>/table.parquet`, are written to a temp dir first, and
   * publish with ONE atomic rename so concurrent submitters never read a
-  * half-written result. Hadoop FS API throughout — works on HDFS/S3 the
-  * same as local disk. */
-private[query] object FileCache {
+  * half-written entry. An entry that exists is reused, so the key must fold
+  * in everything that changes the frame. Hadoop FS API throughout — works
+  * on HDFS/S3 the same as local disk. */
+private[graft] object FileCache {
 
   /** Read `<base>/<key>/table.parquet` if present, else build + publish.
     * Losing the rename race to a concurrent submitter is fine — read

@@ -29,18 +29,11 @@ import Models._
   *     query's content hash + a registry content token exactly like the
   *     reference's two-level cache (query_submitter.py:133-171) — a cluster
   *     points this at shared scratch storage so repeated queries skip
-  *     stages 1-5. Cache writes go to a temp dir then publish by atomic
-  *     rename, so concurrent submitters never read half-written results.
+  *     stages 1-5. Every entry (result, mapped dataset, map step) goes
+  *     through [[FileCache]]: written to a temp dir, published by atomic
+  *     rename, reused whenever its key exists.
   */
-final class Submitter(
-    registry: Registry,
-    cacheDir: Option[String] = None,
-    /** reuse persisted map-step intermediates already on disk instead of
-      * recomputing them — the resume path for interrupted mapping plans
-      * (ref: dataset_mapping_manager.py:51-103). Off by default: resumed
-      * steps are only valid while the registry data they derive from is
-      * unchanged. */
-    resumeMapping: Boolean = false) {
+final class Submitter(registry: Registry, cacheDir: Option[String] = None) {
 
   private def spark: SparkSession = registry.spark
 
@@ -49,21 +42,31 @@ final class Submitter(
     * fresh Submitter to observe later mutations). */
   private lazy val registryToken: String = registry.contentToken
 
+  /** The store of persisted datasets and map steps: the `cacheDir`, else a
+    * scratch dir shared by every Submitter in the JVM's temp dir. */
+  private def storeBase: String = cacheDir.getOrElse(sys.props("java.io.tmpdir") + "/graft-cache")
+
+  /** The content key of everything built from `ref`: registry state, the
+    * session time zone the ref's filters resolve under (string timestamp
+    * bounds cast in that zone) and the canonical ref. Canonicalization may
+    * collect filter record sets, so callers compute it only when storing. */
+  private def refKey(ref: DatasetRef): String =
+    Models.contentHash(registryToken + spark.conf.get("spark.sql.session.timeZone") + Models.canonical(ref))
+
   /** Stage 4: one dataset mapped onto the project dimension space;
     * projection datasets then apply their growth-rate dataset. With a
-    * `cacheDir`, the mapped result is content-hash cached per dataset —
-    * the reference's first cache level (cached_project_mapped_datasets,
-    * dsgrid/project.py:418-449); the combined query result is the second. */
-  def mapDataset(ref: DatasetRef): DataFrame = cacheDir match {
-    case Some(_) =>
-      cached("mapped_" + Models.contentHash(registryToken + Models.canonical(ref)))(
-        mapDatasetUncached(ref))
-    case None => mapDatasetUncached(ref)
-  }
+    * `cacheDir` or `"persist": true`, the mapped result is stored per
+    * dataset — the reference's first cache level
+    * (cached_project_mapped_datasets, dsgrid/project.py:418-449); the
+    * combined query result is the second. */
+  def mapDataset(ref: DatasetRef): DataFrame =
+    if (cacheDir.isDefined || ref.persist)
+      FileCache.cached(spark, s"$storeBase/cached_tables", "mapped_" + refKey(ref))(mapDatasetUncached(ref))
+    else mapDatasetUncached(ref)
 
   private def mapDatasetUncached(ref: DatasetRef): DataFrame =
     if (ref.sparkConf.isEmpty) buildMappedDataset(ref)
-    else withSparkConf(ref.sparkConf) {
+    else graft.core.GraftSession.withConf(spark, ref.sparkConf: _*) {
       // materialize INSIDE the conf window: Spark reads most conf at
       // physical-planning/execution time, so a lazily returned plan would
       // execute after restore and never see the overrides. The reference
@@ -73,21 +76,6 @@ final class Submitter(
       buildMappedDataset(ref).localCheckpoint()
     }
 
-  /** Set conf overrides, run `body`, restore the previous values (unset
-    * keys are restored by unsetting). Mirrors custom_spark_conf
-    * (utils/spark.py:823-850). */
-  private def withSparkConf[T](conf: Seq[(String, String)])(body: => T): T = {
-    val sc = registry.spark.conf
-    val previous = conf.map { case (k, _) => k -> sc.getOption(k) }
-    try {
-      conf.foreach { case (k, v) => sc.set(k, v) }
-      body
-    } finally previous.foreach {
-      case (k, Some(v)) => sc.set(k, v)
-      case (k, None) => sc.unset(k)
-    }
-  }
-
   private def buildMappedDataset(ref: DatasetRef): DataFrame = {
     val raw = registry.dataset(ref.datasetId)
     val renamed = ref.columnRenames.foldLeft(raw) { case (d, (from, to)) =>
@@ -95,9 +83,8 @@ final class Submitter(
     }
     val resolvedFilters = ref.filters.map(resolveFilter)
     val base = prefilterDataset(renamed, resolvedFilters, ref)
-    // loop-invariant (and canonicalization may collect filter record sets):
-    // computed at most once, only if some mapping actually persists
-    lazy val refKey = Models.contentHash(registryToken + Models.canonical(ref))
+    // loop-invariant: computed at most once, only if some mapping persists
+    lazy val key = refKey(ref)
     val afterMappings = ref.mappings.foldLeft(base) { (df, m) =>
       val table = registry.mapping(m.mappingName)
       val stepMapped =
@@ -105,13 +92,13 @@ final class Submitter(
         else MappingKernel.mapStackedDimension(df, m.dimension, table)
       val stepSalted = m.saltPartitions.fold(stepMapped)(n =>
         MappingKernel.repartitionAfterDisaggregation(stepMapped, n, Seq(m.dimension)))
-      // the persist name hashes the full dataset-ref context + registry
-      // state, so a resumed step can only ever be reused by the SAME query
-      // over UNCHANGED data (the reference hashes the mapping plan the same
-      // way, dataset_mapping_plan.py) — a different query's prefilters or a
+      // the step key hashes the full dataset-ref context + registry state,
+      // so a stored step is only ever reused by the SAME ref over UNCHANGED
+      // data (the reference hashes the mapping plan the same way,
+      // dataset_mapping_plan.py) — a different query's prefilters or a
       // registry mutation produce a different key and force recompute
       if (m.persist)
-        persistStep(stepSalted, s"mapstep_${refKey}_${m.dimension}_${m.mappingName}")
+        FileCache.cached(spark, storeBase, s"mapstep_${key}_${m.dimension}_${m.mappingName}")(stepSalted)
       else stepSalted
     }
     // Exact filter semantics for MAPPED dimensions are enforced HERE, after
@@ -133,7 +120,7 @@ final class Submitter(
       .foldLeft(afterMappings)((d, f) => f(d))
     val mappedBase =
       MappingKernel.applyScalingFactor(MappingKernel.applyFraction(exactFiltered))
-    val mapped = ref.growth match {
+    ref.growth match {
       case None => mappedBase
       case Some(g) =>
         val growthRates = MappingKernel.mapAndApply(
@@ -148,9 +135,6 @@ final class Submitter(
           case other => throw new IllegalArgumentException(s"unknown growth kind: $other")
         }
     }
-    if (ref.persist)
-      persistStep(mapped, "mapped_" + Models.contentHash(registryToken + Models.canonical(ref)))
-    else mapped
   }
 
   /** The semantic prefilter: per-dataset filters expressed in PROJECT
@@ -194,11 +178,6 @@ final class Submitter(
   private val noopMemo = scala.collection.concurrent.TrieMap.empty[String, Boolean]
   private def isNoopMappingMemo(name: String, table: DataFrame): Boolean =
     noopMemo.getOrElseUpdate(name, MappingKernel.isNoopMapping(table))
-
-  private def persistStep(df: DataFrame, name: String): DataFrame = {
-    val dir = cacheDir.getOrElse(sys.props("java.io.tmpdir") + "/graft-cache")
-    graft.sources.Writers.persistIntermediate(spark, df, dir, name, reuseExisting = resumeMapping)
-  }
 
   /** Stages 4-5: map every dataset, evaluate the combination expression. */
   def combine(section: DatasetSection): DataFrame = {
@@ -352,20 +331,11 @@ final class Submitter(
     * (ref: query_submitter.py:614-653). */
   def submit(q: ProjectQuery): DataFrame = {
     validate(q)
-    // canonicalization may collect DataFrame-bearing filter records to
-    // content-hash them — only pay that when a cache actually uses the key
-    def run() = cacheDir match {
-      case None => postProcess(combine(q.datasets), q.result)
-      case Some(_) =>
-        val canon = Models.canonical(q)
-        val key = Models.contentHash(registryToken + canon)
-        val df = cached(key)(postProcess(combine(q.datasets), q.result))
-        writeSidecars(key, q.name, Json.render(q), df, reportFrames(df, q.result))
-        df
-    }
+    def run() = cachedResult(Models.canonical(q), q.name, Json.render(q), q.result)(
+      postProcess(combine(q.datasets), q.result))
     q.sessionTimeZone match {
       case Some(tz) =>
-        graft.core.GraftSession.withSessionTimeZone(spark, tz) {
+        graft.core.GraftSession.withConf(spark, "spark.sql.session.timeZone" -> tz) {
           val df = run()
           // plans are lazy — materialize inside the pinned-tz scope (the
           // cached path already wrote parquet; otherwise cut the plan here)
@@ -382,33 +352,15 @@ final class Submitter(
     (df, reportFrames(df, q.result))
   }
 
-  /** DatasetQuery validation: same fail-fast checks, single dataset. */
-  def validate(q: DatasetQuery): Unit = {
-    validateResult(q.name, q.result)
-    require(registry.listDatasets().contains(q.dataset.datasetId),
-      s"query '${q.name}': unknown dataset '${q.dataset.datasetId}'")
-    val knownMappings = registry.listMappings().toSet
-    for (m <- q.dataset.mappings)
-      require(knownMappings.contains(m.mappingName),
-        s"query '${q.name}': unknown mapping '${m.mappingName}'")
-    val cols = mapDatasetSchema(q.dataset)
-    for (agg <- q.result.aggregations; c <- agg.groupBy)
-      require(cols.contains(c) || q.result.supplementalColumns.exists(_.columnName == c),
-        s"query '${q.name}': aggregation groups by '$c' which the dataset does not provide")
-  }
+  /** DatasetQuery validation: the project checks over its one dataset. */
+  def validate(q: DatasetQuery): Unit =
+    validate(ProjectQuery(q.name, DatasetSection(Seq(q.dataset)), q.result))
 
   /** Dataset query (§3.2): one dataset, mapping + shaping, no combine. */
   def submit(q: DatasetQuery): DataFrame = {
     validate(q)
-    cacheDir match {
-      case None => postProcess(mapDataset(q.dataset), q.result)
-      case Some(_) =>
-        val canon = Models.canonical(q)
-        val key = Models.contentHash(registryToken + canon)
-        val df = cached(key)(postProcess(mapDataset(q.dataset), q.result))
-        writeSidecars(key, q.name, Json.render(q), df, reportFrames(df, q.result))
-        df
-    }
+    cachedResult(Models.canonical(q), q.name, Json.render(q), q.result)(
+      postProcess(mapDataset(q.dataset), q.result))
   }
 
   /** §3.3: run stages 4-5 of a project query and save the combined table as
@@ -465,37 +417,31 @@ final class Submitter(
   // cache plumbing
   // ------------------------------------------------------------------
 
-  // atomic-rename publish + lost-race cleanup live in FileCache (shared
-  // with the curation submitter)
-  private def cached(key: String)(build: => DataFrame): DataFrame = cacheDir match {
-    case None => build
-    case Some(dir) => FileCache.cached(spark, s"$dir/cached_tables", key)(build)
-  }
-
-  /** query.json (a rendered query document, re-runnable for every
+  /** Without a `cacheDir`, `build`. With one, the result cached under
+    * `cached_tables/<hash(registry token + canon)>` with sidecars beside it:
+    * query.json (a rendered query document, re-runnable for every
     * JSON-expressible query — DataFrame-bearing filters render as opaque
     * tokens that the parser rejects by design; use the registry-resolved
     * forms for re-runnable documents) + metadata.json (which records the
-    * registry content token the result was built from) + report tables
-    * beside a cached result. `renderedQuery` is by-name: rendering may
-    * collect filter record sets, so it only runs when a sidecar is
-    * actually written. No-op without a cacheDir. */
-  private def writeSidecars(
-      key: String,
-      name: String,
-      renderedQuery: => String,
-      df: DataFrame,
-      reports: Seq[(String, DataFrame)]): Unit =
-    for (dir <- cacheDir) {
+    * registry content token the result was built from) + report tables.
+    * `canon` and `renderedQuery` are by-name: both may collect filter
+    * record sets, so they only run when a cache uses them. */
+  private def cachedResult(canon: => String, name: String, renderedQuery: => String, r: ResultSection)(
+      build: => DataFrame): DataFrame = cacheDir match {
+    case None => build
+    case Some(dir) =>
+      val key = Models.contentHash(registryToken + canon)
       val keyDir = s"$dir/cached_tables/$key"
+      val df = FileCache.cached(spark, s"$dir/cached_tables", key)(build)
       if (!HadoopFs.exists(spark, s"$keyDir/query.json")) {
         HadoopFs.writeText(spark, s"$keyDir/query.json", renderedQuery)
         HadoopFs.writeJson(spark, s"$keyDir/metadata.json")(metadata(name, df))
       }
-      for ((rname, rdf) <- reports)
+      for ((rname, rdf) <- reportFrames(df, r))
         if (!HadoopFs.exists(spark, s"$keyDir/reports/$rname.parquet"))
           rdf.write.mode("overwrite").parquet(s"$keyDir/reports/$rname.parquet")
-    }
+      df
+  }
 
   private def metadata(name: String, df: DataFrame)(n: com.fasterxml.jackson.databind.node.ObjectNode): Unit = {
     n.put("name", name)

@@ -429,23 +429,10 @@ object Writers {
 
   /** Materialize an intermediate to scratch parquet and read it back — cuts
     * the lineage when a plan grows too complex for Catalyst to handle well
-    * (ref: dsgrid/utils/spark.py:502-527). With `reuseExisting`, an
-    * already-written intermediate is read back instead of recomputed — the
-    * resume path for interrupted mapping plans
-    * (ref: dsgrid/query/dataset_mapping_manager.py:51-103). */
-  def persistIntermediate(
-      spark: SparkSession,
-      df: DataFrame,
-      scratchDir: String,
-      name: String,
-      reuseExisting: Boolean = false): DataFrame = {
+    * (ref: dsgrid/utils/spark.py:502-527). Always writes: content-keyed
+    * reuse goes through `graft.query.FileCache.cached`. */
+  def persistIntermediate(spark: SparkSession, df: DataFrame, scratchDir: String, name: String): DataFrame = {
     val path = s"$scratchDir/$name.parquet"
-    if (reuseExisting) {
-      // _SUCCESS, not mere existence: an interrupted previous write — the
-      // exact scenario resume exists for — leaves a dir without the marker
-      // and must be recomputed, not read half-finished
-      if (HadoopFs.exists(spark, s"$path/_SUCCESS")) return Readers.parquet(spark, path)
-    }
     parquet(df, path)
     Readers.parquet(spark, path)
   }

@@ -373,12 +373,8 @@ object StreamOps {
     * clones the session at start, so the scoping is race-free); batch
     * queries on the session are unaffected. On a real cluster the same
     * knob is sized to state volume instead. */
-  def scopedStreamStart[A](s: org.apache.spark.sql.SparkSession)(start: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try start
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  def scopedStreamStart[A](s: org.apache.spark.sql.SparkSession)(start: => A): A =
+    graft.core.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8")(start)
 
   /** Untimed per-JVM streaming warm-up for benchmark harnesses. The first
     * streaming query a JVM runs pays ~2-3 s of machinery that later ones

@@ -412,12 +412,9 @@ object ScaleProbe {
         .select(col("k").as("src"), (col("k") + 1000000000L).as("dst"))
       // the catalog query's scoped shuffle width: the fixpoint rounds are
       // many tiny stages whose job overhead, not data, dominates locally
-      val prevP = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val scc =
-        try graft.operators.Graph.stronglyConnectedComponents(
-          ring.unionByName(cross).unionByName(single))
-        finally s.conf.set("spark.sql.shuffle.partitions", prevP)
+      val scc = graft.core.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        graft.operators.Graph.stronglyConnectedComponents(ring.unionByName(cross).unionByName(single))
+      }
       scc.groupBy(col("scc")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").cast("long").as("scc_size"))
         .agg(count(lit(1)).cast("long").as("n_sccs"),

@@ -186,7 +186,7 @@ class ApiRouteSpec extends SparkSpec {
         """{"error": "job holds inline rows; submit with ?file=true for a download"}""")
       val failed = post(port, "/query/project/async", """{"nope": 1}""")
       val failedId = failed.body().split("\"")(3)
-      exact(awaitJob(port, failedId), 500, """{"error": "requirement failed: missing required field: name"}""")
+      exact(awaitJob(port, failedId), 400, """{"error": "requirement failed: missing required field: name"}""")
       val dataDir = Files.createTempDirectory("graft-api-route-dry").toString
       Seq((1L, "a b c", "web")).toDF("doc_id", "text", "source")
         .coalesce(1).write.parquet(s"$dataDir/docs.parquet")

@@ -293,12 +293,13 @@ class CurationSpec extends SparkSpec {
         TextFeaturesStage("text", Seq("language", "token_count")),
         ExactDedupStage(persist = true),
         SortStage(Seq("doc_id"))))
-    val sub = new CurationSubmitter(spark, dir, Some(cache), resume = true)
+    val sub = new CurationSubmitter(spark, dir, Some(cache))
     val r1 = sortedRows(sub.submit(plan))
     val steps = new java.io.File(s"$cache/curation_steps").listFiles().map(_.getName)
     assert(steps.length == 1 && steps.head.startsWith("step_"))
-    val stepDir = s"$cache/curation_steps/${steps.head}"
-    val mtime = new java.io.File(stepDir, "_SUCCESS").lastModified()
+    val marker = new java.io.File(s"$cache/curation_steps/${steps.head}/table.parquet", "_SUCCESS")
+    assert(marker.isFile, s"no checkpoint marker at $marker")
+    val mtime = marker.lastModified()
     // drop the published result (simulating an interrupted downstream) and
     // resubmit: the checkpoint is REUSED (marker untouched), result equal
     val entry = sub.cacheEntryDir(plan).get
@@ -309,7 +310,7 @@ class CurationSpec extends SparkSpec {
     deleteRec(new java.io.File(entry))
     val r2 = sortedRows(sub.submit(plan))
     assert(r2 == r1)
-    assert(new java.io.File(stepDir, "_SUCCESS").lastModified() == mtime)
+    assert(marker.lastModified() == mtime)
     // a DIFFERENT prefix (changed upstream stage) gets its own step key —
     // the stale checkpoint is never found, exactly like the reference's
     // mapping_plan_hash guard (dataset_mapping_plan.py:46-62)

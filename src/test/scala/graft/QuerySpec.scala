@@ -201,8 +201,10 @@ class QuerySpec extends SparkSpec {
     val key = contentHash(reg.contentToken + canonical(q))
     assert(Files.exists(java.nio.file.Paths.get(s"$cacheDir/cached_tables/$key/table.parquet")))
     assert(rows(sub.submit(q)) == first)
-    // first cache level: the per-dataset mapped table is cached too
-    val dsKey = "mapped_" + contentHash(reg.contentToken + canonical(q.datasets.datasets.head))
+    // first cache level: the per-dataset mapped table is cached too, keyed
+    // by registry state + session time zone + canonical ref
+    val dsKey = "mapped_" + contentHash(
+      reg.contentToken + spark.conf.get("spark.sql.session.timeZone") + canonical(q.datasets.datasets.head))
     assert(Files.exists(java.nio.file.Paths.get(s"$cacheDir/cached_tables/$dsKey/table.parquet")))
     // sidecars written beside the result
     assert(Files.exists(java.nio.file.Paths.get(s"$cacheDir/cached_tables/$key/query.json")))
@@ -285,15 +287,16 @@ class QuerySpec extends SparkSpec {
     assert(
       graft.plans.PlanChecks.shuffleCount(saltedOut) > graft.plans.PlanChecks.shuffleCount(plainOut),
       "salted mapping must add a repartition exchange")
-    // persist knob: the map-step parquet lands in the cache dir, keyed by
-    // the canonical ref + registry state
+    // persist knob: the map-step entry lands in the cache dir, keyed by
+    // the canonical ref + session time zone + registry state
     val cacheDir = Files.createTempDirectory("graft-persist").toString
     val persisted = DatasetRef("dsA", Seq(
       DimensionMappingRef("geography", "county_to_state", persist = true)))
     val out = new Submitter(reg, Some(cacheDir)).mapDataset(persisted)
     assert(out.count() == 4)
-    val expected = s"mapstep_${contentHash(reg.contentToken + canonical(persisted))}" +
-      "_geography_county_to_state.parquet"
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val expected = s"mapstep_${contentHash(reg.contentToken + tz + canonical(persisted))}" +
+      "_geography_county_to_state/table.parquet"
     assert(Files.exists(java.nio.file.Paths.get(s"$cacheDir/$expected")))
   }
 
@@ -315,12 +318,12 @@ class QuerySpec extends SparkSpec {
     // drop the top-level cache so the mapping pipeline genuinely re-runs
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$cacheDir/cached_tables"))
     // same query, same data → the persisted step is reused (identical files)
-    assert(new Submitter(reg, Some(cacheDir), resumeMapping = true).mapDataset(ref).count() == 4)
+    assert(new Submitter(reg, Some(cacheDir)).mapDataset(ref).count() == 4)
     assert(stepFiles() == firstFiles, "map-step must be reused, not rewritten")
     // mutated data → different registry token → different step key → recompute
     Registry.registerDataset(reg, "dsA",
       Seq(("c1", "com", "elec", 999.0)).toDF("geography", "sector", "metric", ValueColumn))
-    val out = new Submitter(reg, Some(cacheDir), resumeMapping = true).mapDataset(ref)
+    val out = new Submitter(reg, Some(cacheDir)).mapDataset(ref)
     assert(out.count() == 1) // fresh result — stale reuse is impossible by key
     assert(stepFiles().size > firstFiles.size)
   }
