@@ -168,9 +168,9 @@ private[graft] object LakehouseCatalog {
             FROM orders WHERE o_totalprice > 150000.0 GROUP BY 1 ORDER BY 1"""))
 
   /** Persist-intermediate (SURVEY §2.1): a mid-pipeline frame is cut to
-    * scratch parquet and read back (lineage truncation), published once
-    * under a content key, and a second `FileCache.cached` call whose build
-    * would throw reuses the entry — all must yield the same bytes the
+    * scratch parquet and read back (lineage truncation), written once
+    * where `FileCache` keeps an entry, and a `FileCache.cached` call whose
+    * build would throw reuses it — both must yield the same bytes the
     * oracle computes directly. */
   val q72_persist_intermediate = Q(
     "q72_persist_intermediate",
@@ -181,8 +181,9 @@ private[graft] object LakehouseCatalog {
       val perSupp = t(s, dir, "lineitem")
         .groupBy("l_suppkey")
         .agg(sum(col("l_quantity")).as("qty"))
-      val lineageCut = graft.sources.Writers.persistIntermediate(s, perSupp, cut, "per_supp")
-      graft.query.FileCache.cached(s, cut, "per_supp")(lineageCut)
+      // the cut lands at `<cut>/per_supp/table.parquet`, FileCache's
+      // layout for entry `per_supp`, so the frame is written only once
+      graft.sources.Writers.persistIntermediate(s, perSupp, s"$cut/per_supp", "table")
       val resumed = graft.query.FileCache.cached(s, cut, "per_supp")(
         throw new IllegalStateException("q72: the published entry was not reused"))
       resumed

@@ -15,7 +15,7 @@ import CurationModels._
   * fail-fast validation, per-stage persist/resume (ref:
   * dsgrid/query/dataset_mapping_plan.py:34-62 MapOperation.persist +
   * MapOperationCheckpoint), a content-hash result cache keyed by
-  * (input content token + canonical plan), and `plan.json`/`metadata.json`
+  * (content token of every table read + canonical plan), and `plan.json`/`metadata.json`
   * sidecars beside every cached result (ref: query_submitter.py:614-653).
   *
   * Scale shapes are the stages' own: every stage is one of the
@@ -31,7 +31,7 @@ final class CurationSubmitter(
     /** directory holding `<table>.parquet` inputs */
     dataDir: String,
     /** result cache and stage checkpoints; a checkpoint is reused while
-      * the input and the plan prefix are unchanged — both are folded into
+      * the tables read and the plan prefix are unchanged — both are folded into
       * the step key, so a stale checkpoint is simply never found. */
     cacheDir: Option[String] = None,
     /** registry backing `"artifacts": true` dedup stages ([[graft.registry
@@ -47,6 +47,16 @@ final class CurationSubmitter(
     * `Registry.contentToken`; metadata-only, no data read). */
   def inputToken(table: String): String =
     Registry.treeToken(spark, s"$dataDir/$table.parquet").getOrElse("missing")
+
+  /** Content token of every table a plan reads: its input plus each
+    * stage's side table (decontaminate benchmark, semantic-dedup
+    * embeddings), so a rewrite of any of them invalidates the result and
+    * every checkpoint. A plan without side tables keeps its input token. */
+  def planToken(plan: CurationPlan): String =
+    (plan.input +: plan.stages.collect {
+      case st: DecontaminateStage => st.benchmarkInput
+      case st: SemanticDedupStage => st.embeddingInput
+    }).map(inputToken).mkString("|")
 
   private def load(table: String): DataFrame =
     Readers.parquet(spark, s"$dataDir/$table.parquet")
@@ -226,7 +236,7 @@ final class CurationSubmitter(
     * operator registry; this class adds no operator semantics of its own.
     * `artifactKey` is the (artifact id prefix, source token) pair an
     * `"artifacts": true` dedup stage resolves under — [[submit]] derives
-    * it from (plan name, input token + canonical plan prefix); the bare
+    * it from (plan name, plan token + canonical plan prefix); the bare
     * two-arg form (specs, ad-hoc callers) never touches the registry. */
   def applyStage(df: DataFrame, st: CurationStage): DataFrame =
     applyStage(df, st, None)
@@ -377,14 +387,14 @@ final class CurationSubmitter(
   }
 
   /** Run the plan. With a `cacheDir`: stage persist points checkpoint to
-    * `curation_steps/step_<key>` keyed by (input token + plan prefix) —
-    * reruns of the same prefix over unchanged input resume from the
+    * `curation_steps/step_<key>` keyed by (plan token + plan prefix) —
+    * reruns of the same prefix over unchanged tables resume from the
     * checkpoint; the final result publishes atomically under
     * `cached_tables/<key>` with `plan.json` + `metadata.json` sidecars,
     * and an identical resubmission is a pure cache read. */
   def submit(plan: CurationPlan): DataFrame = {
     validate(plan)
-    lazy val token = inputToken(plan.input)
+    lazy val token = planToken(plan)
     def build(): DataFrame =
       plan.stages.zipWithIndex.foldLeft(load(plan.input)) { case (df, (st, i)) =>
         // artifact key for this stage: the frame a stage sees is fully
@@ -435,7 +445,7 @@ final class CurationSubmitter(
     * CLI status output). */
   def cacheEntryDir(plan: CurationPlan): Option[String] =
     cacheDir.map(dir =>
-      s"$dir/cached_tables/${Models.contentHash(inputToken(plan.input) + CurationModels.canonical(plan))}")
+      s"$dir/cached_tables/${Models.contentHash(planToken(plan) + CurationModels.canonical(plan))}")
 
   private def writeSidecars(
       keyDir: String, plan: CurationPlan, token: String, df: DataFrame): Unit =
@@ -444,9 +454,9 @@ final class CurationSubmitter(
       HadoopFs.writeJson(spark, s"$keyDir/metadata.json") { n =>
         n.put("name", plan.name)
         n.put("input", plan.input)
-        // provenance: which input state produced this result (the cache key
-        // is a one-way hash — without this the entry is unattributable
-        // after the input changes)
+        // provenance: which table state produced this result (the plan
+        // token; the cache key is a one-way hash — without this the entry
+        // is unattributable after a table changes)
         n.put("input_token", token)
         val cols = n.putArray("columns")
         df.columns.foreach(cols.add)

@@ -163,6 +163,8 @@ object Models {
       dataset: DatasetRef,
       result: ResultSection = ResultSection())
 
+  val SessionTimeZoneKey = "spark.sql.session.timeZone"
+
   /** Deterministic canonical serialization for content-hash caching
     * (ref: query_submitter.py:133-160 hashes canonical JSON). Case-class
     * toString is stable for the data-free ADT, but DataFrame-bearing filters
@@ -172,11 +174,14 @@ object Models {
     * so registry mutations invalidate (the reference hashes project version
     * + dataset configs, query_submitter.py:133-171). */
   /** sparkConf is execution tuning, not semantics: two runs differing only
-    * in conf produce identical results and must share a cache entry (the
-    * reference excludes spark_conf_per_dataset from its query hash for the
-    * same reason, models.py:608). */
+    * in tuning conf produce identical results and must share a cache entry
+    * (the reference excludes spark_conf_per_dataset from its query hash for
+    * the same reason, models.py:608). The session time zone is the
+    * exception: string timestamp bounds of a `between` filter cast in it,
+    * so it changes the rows and stays in the key. */
   private def canonicalRef(ref: DatasetRef): DatasetRef =
-    ref.copy(filters = ref.filters.map(DimensionFilter.canonicalize), sparkConf = Nil)
+    ref.copy(filters = ref.filters.map(DimensionFilter.canonicalize),
+      sparkConf = ref.sparkConf.filter(_._1 == SessionTimeZoneKey))
 
   def canonical(ref: DatasetRef): String =
     canonicalRef(ref).toString

@@ -48,10 +48,14 @@ final class Submitter(registry: Registry, cacheDir: Option[String] = None) {
 
   /** The content key of everything built from `ref`: registry state, the
     * session time zone the ref's filters resolve under (string timestamp
-    * bounds cast in that zone) and the canonical ref. Canonicalization may
+    * bounds cast in that zone: the ref's `spark_conf` zone when it sets
+    * one, else the session's, so the key is the same inside and outside
+    * the ref's conf window) and the canonical ref. Canonicalization may
     * collect filter record sets, so callers compute it only when storing. */
-  private def refKey(ref: DatasetRef): String =
-    Models.contentHash(registryToken + spark.conf.get("spark.sql.session.timeZone") + Models.canonical(ref))
+  private def refKey(ref: DatasetRef): String = {
+    val zone = ref.sparkConf.toMap.getOrElse(SessionTimeZoneKey, spark.conf.get(SessionTimeZoneKey))
+    Models.contentHash(registryToken + zone + Models.canonical(ref))
+  }
 
   /** Stage 4: one dataset mapped onto the project dimension space;
     * projection datasets then apply their growth-rate dataset. With a
@@ -335,7 +339,7 @@ final class Submitter(registry: Registry, cacheDir: Option[String] = None) {
       postProcess(combine(q.datasets), q.result))
     q.sessionTimeZone match {
       case Some(tz) =>
-        graft.core.GraftSession.withConf(spark, "spark.sql.session.timeZone" -> tz) {
+        graft.core.GraftSession.withConf(spark, SessionTimeZoneKey -> tz) {
           val df = run()
           // plans are lazy — materialize inside the pinned-tz scope (the
           // cached path already wrote parquet; otherwise cut the plan here)

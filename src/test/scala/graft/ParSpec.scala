@@ -51,10 +51,8 @@ class ParSpec extends SparkSpec {
     val finished = new ConcurrentLinkedQueue[Int]()
     val othersDone = new CountDownLatch(3)
     val out = Par.map(Seq(0, 1, 2, 3)) { i =>
-      // a task records its finish before it releases task 0, so task 0
-      // cannot record between another task's countDown and its add
-      if (i == 0) { othersDone.await(10, TimeUnit.SECONDS); finished.add(i) }
-      else { finished.add(i); othersDone.countDown() }
+      if (i == 0) othersDone.await(10, TimeUnit.SECONDS) else othersDone.countDown()
+      finished.add(i)
       i * 10
     }
     assert(out == Seq(0, 10, 20, 30))

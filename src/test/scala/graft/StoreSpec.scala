@@ -81,6 +81,28 @@ class StoreSpec extends SparkSpec {
     assert(stepFiles() == written, "the curation step must be reused, not rewritten")
   }
 
+  test("a curation step is not reused after a side table it reads changes") {
+    val dir = Files.createTempDirectory("graft-store-side").toString
+    Seq((1L, "alpha beta gamma delta epsilon zeta"), (2L, "one two three four five six"),
+      (3L, "red green blue cyan magenta yellow"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/docs.parquet")
+    def writeBench(text: String): Unit =
+      Seq((100L, text)).toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(s"$dir/bench.parquet")
+    val cache = Some(Files.createTempDirectory("graft-store-side-cache").toString)
+    def plan(last: CurationStage) =
+      CurationPlan("side", "docs", Seq(DecontaminateStage("bench", ngram = 3, persist = true), last))
+    writeBench("alpha beta gamma delta epsilon zeta")
+    val first = new CurationSubmitter(spark, dir, cache).submit(plan(SortStage(Seq("doc_id"))))
+    assert(first.select("doc_id").as[Long].collect().toSeq == Seq(2L, 3L))
+    // the benchmark now overlaps doc 2; a later stage changes, so the
+    // result is rebuilt from the decontaminate step's key
+    writeBench("one two three four five six")
+    val later = plan(SelectStage(Seq("doc_id")))
+    val uncached = sortedRows(new CurationSubmitter(spark, dir).submit(later))
+    assert(uncached == Seq(Seq(1L), Seq(3L)))
+    assert(sortedRows(new CurationSubmitter(spark, dir, cache).submit(later)) == uncached)
+  }
+
   test("a persisted dataset under a cache dir is stored once") {
     val reg = buildRegistry()
     val cache = Files.createTempDirectory("graft-store-persist")
@@ -105,6 +127,21 @@ class StoreSpec extends SparkSpec {
     val uncached = rows(new Submitter(reg).submit(b))
     assert(uncached.map(_.last) == Seq(0.0, 1.0, 2.0, 3.0))
     assert(rows(new Submitter(reg, Some(cache)).submit(b)) == uncached)
+  }
+
+  test("refs differing only in a spark_conf session time zone share no stored entry") {
+    val reg = buildRegistry()
+    val cache = Files.createTempDirectory("graft-store-conf-tz").toString
+    val plain = DatasetRef("dsT",
+      filters = Seq(DimensionFilter.BetweenFilter("timestamp", "2012-01-01 00:00:00", "2012-01-01 03:00:00")))
+    val denver = plain.copy(sparkConf = Seq("spark.sql.session.timeZone" -> "America/Denver"))
+    def q(ref: DatasetRef) = ProjectQuery("conf_tz", DatasetSection(Seq(ref)), ResultSection(sortBy = Seq("timestamp")))
+    // under Denver the string bounds are UTC hours 7-10
+    assert(rows(new Submitter(reg, Some(cache)).submit(q(denver))).map(_.last) == Seq(7.0, 8.0, 9.0, 10.0))
+    val uncached = rows(new Submitter(reg).submit(q(plain)))
+    assert(uncached.map(_.last) == Seq(0.0, 1.0, 2.0, 3.0))
+    assert(rows(new Submitter(reg, Some(cache)).submit(q(plain))) == uncached)
+    assert(sortedRows(new Submitter(reg, Some(cache)).mapDataset(plain)) == sortedRows(new Submitter(reg).mapDataset(plain)))
   }
 
   test("validate(DatasetQuery) runs the project checks: growth kind and report columns") {
