@@ -274,14 +274,10 @@ final class Api(
     try {
       SparkSession.setActiveSession(registry.spark)
       val df = new Submitter(registry).submit(Json.parseProjectQuery(query))
-      if (asFile) {
-        // one parquet file per job under the spool: coalesce(1) is
-        // fine here — a download endpoint is single-stream anyway
-        val dir = s"$spoolDir/$id"
-        df.coalesce(1).write.mode("overwrite").parquet(dir)
-        val part = new java.io.File(dir).listFiles().find(_.getName.endsWith(".parquet")).get
-        Job(200, file = Some(part.getAbsolutePath))
-      } else Job(200, rows(df))
+      // one parquet file per job under the spool: a single writer task
+      // is fine here — a download endpoint is single-stream anyway
+      if (asFile) Job(200, file = Some(graft.sources.TxnLog.writeDataFile(df, s"$spoolDir/$id")))
+      else Job(200, rows(df))
     } catch { case e: Exception => Job(statusOf(e), error(messageOf(e))) }
 
   private def job(ex: HttpExchange): (Int, Any) = {
@@ -344,10 +340,11 @@ final class Api(
     * (ref: apps/registration_gui.py:106-374 — register-project /
     * register-and-submit-dataset buttons over config files; here the
     * manifest IS the config file, posted inline). Registration is
-    * serialized: the registry's list/read paths are rename-atomic per
-    * object, but two interleaved manifests could observe each other's
-    * partial order — one at a time matches the GUI's disabled-while-
-    * running buttons. */
+    * serialized: each registry object (its tables and sidecars) becomes
+    * visible by one directory rename, so a read never sees it half
+    * written or mixing old and new files, but two interleaved manifests
+    * could observe each other's partial order — one at a time matches the
+    * GUI's disabled-while-running buttons. */
   private val registration = new Object
   private def bulk(ex: HttpExchange): (Int, Any) = {
     val result = registration.synchronized(graft.registry.BulkRegister(registry, body(ex)))

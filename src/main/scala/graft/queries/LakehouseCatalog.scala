@@ -168,10 +168,10 @@ private[graft] object LakehouseCatalog {
             FROM orders WHERE o_totalprice > 150000.0 GROUP BY 1 ORDER BY 1"""))
 
   /** Persist-intermediate (SURVEY §2.1): a mid-pipeline frame is cut to
-    * scratch parquet and read back (lineage truncation), written once
-    * where `FileCache` keeps an entry, and a `FileCache.cached` call whose
-    * build would throw reuses it — both must yield the same bytes the
-    * oracle computes directly. */
+    * scratch parquet and read back (lineage truncation) as a
+    * `FileCache.cached` entry, and a second call whose build would throw
+    * reuses it — both must yield the same bytes the oracle computes
+    * directly. */
   val q72_persist_intermediate = Q(
     "q72_persist_intermediate",
     (s, dir) => {
@@ -181,9 +181,8 @@ private[graft] object LakehouseCatalog {
       val perSupp = t(s, dir, "lineitem")
         .groupBy("l_suppkey")
         .agg(sum(col("l_quantity")).as("qty"))
-      // the cut lands at `<cut>/per_supp/table.parquet`, FileCache's
-      // layout for entry `per_supp`, so the frame is written only once
-      graft.sources.Writers.persistIntermediate(s, perSupp, s"$cut/per_supp", "table")
+      // the cut lands at `<cut>/per_supp/table.parquet`
+      graft.query.FileCache.cached(s, cut, "per_supp")(perSupp)
       val resumed = graft.query.FileCache.cached(s, cut, "per_supp")(
         throw new IllegalStateException("q72: the published entry was not reused"))
       resumed

@@ -417,27 +417,26 @@ final class CurationSubmitter(
       case None => build()
       case Some(dir) =>
         val key = Models.contentHash(token + CurationModels.canonical(plan))
-        val df = FileCache.cached(spark, s"$dir/cached_tables", key)(build())
-        writeSidecars(s"$dir/cached_tables/$key", plan, token, df)
-        df
+        FileCache.cached(spark, s"$dir/cached_tables", key,
+          (df, entry) => writeSidecars(entry, plan, token, df))(build())
     }
   }
 
-  /** Run the plan and REGISTER the result as a dataset (validate = false —
-    * curated corpora are engine-derived, not user fact tables), with the
-    * plan document + input token stamped as a `curation.json` provenance
-    * sidecar — the curation twin of the project-query `register-derived`
+  /** Run the plan and REGISTER the result as a dataset (unvalidated —
+    * curated corpora are engine-derived, not user fact tables), published
+    * together with the plan document + input token stamped as a
+    * `curation.json` provenance sidecar — the curation twin of the project-query `register-derived`
     * verb, so a curated corpus enters the same registry lifecycle
     * (listing, content tokens, derived artifacts) as any other dataset. */
   def submitAndRegister(
       reg: graft.registry.Registry, datasetId: String, plan: CurationPlan): DataFrame = {
     val result = submit(plan)
-    graft.registry.Registry.registerDataset(reg, datasetId, result, validate = false)
-    HadoopFs.writeJson(spark, s"${reg.root}/datasets/$datasetId/curation.json") { n =>
-      n.put("dataset_id", datasetId)
-      n.put("input_token", inputToken(plan.input))
-      n.set[com.fasterxml.jackson.databind.JsonNode]("plan", Json.mapper.readTree(CurationJson.render(plan)))
-    }
+    graft.registry.Registry.publishDataset(reg, datasetId, result, sidecars = dir =>
+      HadoopFs.writeJson(spark, s"$dir/curation.json") { n =>
+        n.put("dataset_id", datasetId)
+        n.put("input_token", inputToken(plan.input))
+        n.set[com.fasterxml.jackson.databind.JsonNode]("plan", Json.mapper.readTree(CurationJson.render(plan)))
+      })
     reg.loadData(datasetId)
   }
 
@@ -448,18 +447,17 @@ final class CurationSubmitter(
       s"$dir/cached_tables/${Models.contentHash(planToken(plan) + CurationModels.canonical(plan))}")
 
   private def writeSidecars(
-      keyDir: String, plan: CurationPlan, token: String, df: DataFrame): Unit =
-    if (!HadoopFs.exists(spark, s"$keyDir/plan.json")) {
-      HadoopFs.writeText(spark, s"$keyDir/plan.json", CurationJson.render(plan))
-      HadoopFs.writeJson(spark, s"$keyDir/metadata.json") { n =>
-        n.put("name", plan.name)
-        n.put("input", plan.input)
-        // provenance: which table state produced this result (the plan
-        // token; the cache key is a one-way hash — without this the entry
-        // is unattributable after a table changes)
-        n.put("input_token", token)
-        val cols = n.putArray("columns")
-        df.columns.foreach(cols.add)
-      }
+      entry: String, plan: CurationPlan, token: String, df: DataFrame): Unit = {
+    HadoopFs.writeText(spark, s"$entry/plan.json", CurationJson.render(plan))
+    HadoopFs.writeJson(spark, s"$entry/metadata.json") { n =>
+      n.put("name", plan.name)
+      n.put("input", plan.input)
+      // provenance: which table state produced this result (the plan
+      // token; the cache key is a one-way hash — without this the entry
+      // is unattributable after a table changes)
+      n.put("input_token", token)
+      val cols = n.putArray("columns")
+      df.columns.foreach(cols.add)
     }
+  }
 }

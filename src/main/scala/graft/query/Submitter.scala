@@ -7,7 +7,7 @@ import graft.core.Constants._
 import graft.operators.{Aggregation => AggOps, DatasetExpr, DimensionFilter, MappingKernel, PreFilter, Reshape}
 import graft.functions.Units
 import graft.registry.Registry
-import graft.sources.{HadoopFs, Readers}
+import graft.sources.{HadoopFs, Readers, Writers}
 import graft.time.TimeZones
 import Models._
 
@@ -374,10 +374,11 @@ final class Submitter(registry: Registry, cacheDir: Option[String] = None) {
     * can reconstruct dimension info (ref metadata.json,
     * query_submitter.py:614-653). */
   def createCompositeDataset(id: String, datasets: DatasetSection): Unit = {
-    val dir = s"${registry.root}/composite_datasets/$id"
     val df = combine(datasets)
-    df.write.mode("overwrite").parquet(s"$dir/table.parquet")
-    HadoopFs.writeJson(spark, s"$dir/metadata.json")(metadata(id, Readers.parquet(spark, s"$dir/table.parquet")))
+    HadoopFs.publish(spark, s"${registry.root}/composite_datasets/$id") { dir =>
+      Writers.parquet(df, s"$dir/table.parquet")
+      HadoopFs.writeJson(spark, s"$dir/metadata.json")(metadata(id, df))
+    }
   }
 
   /** The metadata sidecar of a composite dataset, parsed. */
@@ -422,7 +423,8 @@ final class Submitter(registry: Registry, cacheDir: Option[String] = None) {
   // ------------------------------------------------------------------
 
   /** Without a `cacheDir`, `build`. With one, the result cached under
-    * `cached_tables/<hash(registry token + canon)>` with sidecars beside it:
+    * `cached_tables/<hash(registry token + canon)>`, published together
+    * with the sidecars beside it:
     * query.json (a rendered query document, re-runnable for every
     * JSON-expressible query — DataFrame-bearing filters render as opaque
     * tokens that the parser rejects by design; use the registry-resolved
@@ -435,16 +437,12 @@ final class Submitter(registry: Registry, cacheDir: Option[String] = None) {
     case None => build
     case Some(dir) =>
       val key = Models.contentHash(registryToken + canon)
-      val keyDir = s"$dir/cached_tables/$key"
-      val df = FileCache.cached(spark, s"$dir/cached_tables", key)(build)
-      if (!HadoopFs.exists(spark, s"$keyDir/query.json")) {
-        HadoopFs.writeText(spark, s"$keyDir/query.json", renderedQuery)
-        HadoopFs.writeJson(spark, s"$keyDir/metadata.json")(metadata(name, df))
-      }
-      for ((rname, rdf) <- reportFrames(df, r))
-        if (!HadoopFs.exists(spark, s"$keyDir/reports/$rname.parquet"))
-          rdf.write.mode("overwrite").parquet(s"$keyDir/reports/$rname.parquet")
-      df
+      FileCache.cached(spark, s"$dir/cached_tables", key, { (df, entry) =>
+        HadoopFs.writeText(spark, s"$entry/query.json", renderedQuery)
+        HadoopFs.writeJson(spark, s"$entry/metadata.json")(metadata(name, df))
+        for ((rname, rdf) <- reportFrames(df, r))
+          Writers.parquet(rdf, s"$entry/reports/$rname.parquet")
+      })(build)
   }
 
   private def metadata(name: String, df: DataFrame)(n: com.fasterxml.jackson.databind.node.ObjectNode): Unit = {

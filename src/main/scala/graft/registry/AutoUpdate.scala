@@ -111,7 +111,7 @@ object AutoUpdate {
       dimensionName: String,
       path: String): Boolean = {
     if (!graft.sources.HadoopFs.exists(reg.spark, path)) return false
-    val table = reg.spark.read.parquet(path)
+    val table = graft.sources.Readers.parquet(reg.spark, path)
     if (!table.columns.contains(dimensionName)) return false
     val pruned = table.join(
       broadcast(ids).withColumnRenamed("id", dimensionName), Seq(dimensionName), "left_semi")

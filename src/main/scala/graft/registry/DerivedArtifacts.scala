@@ -44,10 +44,10 @@ object DerivedArtifacts {
 
   /** Resolve-or-build: return the registered artifact when its provenance
     * matches the source dataset's current content token (and the build
-    * params), else run `build`, register the result (validate = false —
-    * artifacts are engine-derived, not user fact tables), stamp
-    * provenance, and return it. The returned frame always reads the
-    * REGISTERED parquet, never the in-flight build plan. */
+    * params), else run `build` and publish the result unvalidated
+    * (artifacts are engine-derived, not user fact tables) together with
+    * its provenance sidecar, and return it. The returned frame always
+    * reads the REGISTERED parquet, never the in-flight build plan. */
   def resolve(reg: Registry, artifactId: String, sourceId: String, paramsToken: String)(
       build: => DataFrame): DataFrame =
     resolveWithToken(reg, artifactId, sourceId, datasetToken(reg, sourceId), paramsToken)(build)
@@ -64,14 +64,13 @@ object DerivedArtifacts {
       sourceDesc: String,
       sourceToken: String,
       paramsToken: String)(build: => DataFrame): DataFrame = {
-    if (!provenance(reg, artifactId).contains((sourceToken, paramsToken))) {
-      Registry.registerDataset(reg, artifactId, build, validate = false)
-      HadoopFs.writeJson(reg.spark, s"${reg.root}/datasets/$artifactId/provenance.json") { n =>
-        n.put("source_dataset", sourceDesc)
-        n.put("source_token", sourceToken)
-        n.put("params_token", paramsToken)
-      }
-    }
+    if (!provenance(reg, artifactId).contains((sourceToken, paramsToken)))
+      Registry.publishDataset(reg, artifactId, build, sidecars = dir =>
+        HadoopFs.writeJson(reg.spark, s"$dir/provenance.json") { n =>
+          n.put("source_dataset", sourceDesc)
+          n.put("source_token", sourceToken)
+          n.put("params_token", paramsToken)
+        })
     reg.loadData(artifactId)
   }
 

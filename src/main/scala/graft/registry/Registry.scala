@@ -3,7 +3,7 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Par
 import graft.query.Json
-import graft.sources.{HadoopFs, Readers}
+import graft.sources.{HadoopFs, Readers, Writers}
 
 /** Filesystem-convention registry — the minimal versioned store the engine
   * needs to resolve dimensions, mappings and datasets (the reference keeps
@@ -267,8 +267,8 @@ object Registry {
   def dumpDimension(reg: Registry, name: String, outPath: String): Unit = {
     require(reg.listDimensions().contains(name), s"dumpDimension: no such dimension '$name'")
     val records = reg.dimensionRecords(name)
-    if (outPath.endsWith(".csv")) graft.sources.Writers.csv(records, outPath, singleFile = true)
-    else records.write.mode("overwrite").parquet(outPath)
+    if (outPath.endsWith(".csv")) Writers.csv(records, outPath, singleFile = true)
+    else Writers.parquet(records, outPath)
   }
 
   val DimensionCategories = Set("base", "subset", "supplemental")
@@ -278,7 +278,9 @@ object Registry {
     * category gates what queries may do with the dimension: subset
     * dimensions filter, they never aggregate (query_submitter.py:173-249).
     * Non-base categories are recorded in a `meta.json` sidecar; absent
-    * sidecar = base, so pre-existing registry trees read unchanged. */
+    * sidecar = base, so pre-existing registry trees read unchanged. The
+    * records and sidecar publish as one directory, replacing any earlier
+    * registration whole. */
   def registerDimension(reg: Registry, name: String, records: DataFrame, category: String = "base"): Unit = {
     require(DimensionCategories.contains(category),
       s"registerDimension($name): unknown category '$category'; one of ${DimensionCategories.toSeq.sorted.mkString(", ")}")
@@ -292,9 +294,11 @@ object Registry {
       require(broken.isEmpty,
         s"registerDimension($name): incompatible update — ${broken.mkString("; ")}")
     }
-    records.write.mode("overwrite").parquet(s"${reg.root}/dimensions/$name/records.parquet")
-    if (category != "base")
-      HadoopFs.writeJson(reg.spark, s"${reg.root}/dimensions/$name/meta.json")(_.put("category", category))
+    HadoopFs.publish(reg.spark, s"${reg.root}/dimensions/$name") { dir =>
+      Writers.parquet(records, s"$dir/records.parquet")
+      if (category != "base")
+        HadoopFs.writeJson(reg.spark, s"$dir/meta.json")(_.put("category", category))
+    }
   }
 
   /** Mapping references the new `records` of dimension `name` would break:
@@ -405,18 +409,16 @@ object Registry {
           s"registerMapping($name): $side values missing from dimension '$dim': ${missing.mkString(", ")}")
       }
     }
-    table.write.mode("overwrite").parquet(s"${reg.root}/mappings/$name/table.parquet")
-    val metaPath = s"${reg.root}/mappings/$name/meta.json"
-    if (fromDimension.nonEmpty || toDimension.nonEmpty)
-      HadoopFs.writeJson(reg.spark, metaPath) { n =>
-        fromDimension.foreach(n.put("from_dimension", _))
-        toDimension.foreach(n.put("to_dimension", _))
-      }
-    else
-      // re-registration without endpoints DETACHES the mapping: a stale
-      // sidecar would otherwise keep blocking dimension removals/updates
-      // against a declaration the caller no longer makes
-      HadoopFs.delete(reg.spark, metaPath)
+    // the directory is replaced whole, so a re-registration without
+    // endpoints detaches the mapping
+    HadoopFs.publish(reg.spark, s"${reg.root}/mappings/$name") { dir =>
+      Writers.parquet(table, s"$dir/table.parquet")
+      if (fromDimension.nonEmpty || toDimension.nonEmpty)
+        HadoopFs.writeJson(reg.spark, s"$dir/meta.json") { n =>
+          fromDimension.foreach(n.put("from_dimension", _))
+          toDimension.foreach(n.put("to_dimension", _))
+        }
+    }
   }
 
   def registerDataset(
@@ -443,17 +445,27 @@ object Registry {
     if (validate)
       validateDataset(datasetId, loadData, lookup, dimensionRecords, expectedTimestamps,
         requireCompleteAssociations, expectedMissing)
-    loadData.write.mode("overwrite").parquet(s"${reg.root}/datasets/$datasetId/load_data.parquet")
-    lookup.foreach(_.write.mode("overwrite").parquet(s"${reg.root}/datasets/$datasetId/load_data_lookup.parquet"))
-    format.foreach { f =>
-      HadoopFs.writeJson(reg.spark, s"${reg.root}/datasets/$datasetId/format.json") { n =>
+    publishDataset(reg, datasetId, loadData, lookup, format)
+  }
+
+  /** Publish dataset `datasetId` unvalidated, as one directory that
+    * replaces any earlier registration whole: the fact table, the optional
+    * lookup and format sidecar, and whatever `sidecars` writes into the
+    * directory (the provenance an engine-derived dataset carries). */
+  private[graft] def publishDataset(reg: Registry, datasetId: String, loadData: DataFrame,
+      lookup: Option[DataFrame] = None, format: Option[DatasetFormat] = None,
+      sidecars: String => Unit = _ => ()): Unit =
+    HadoopFs.publish(reg.spark, s"${reg.root}/datasets/$datasetId") { dir =>
+      Writers.parquet(loadData, s"$dir/load_data.parquet")
+      lookup.foreach(Writers.parquet(_, s"$dir/load_data_lookup.parquet"))
+      format.foreach(f => HadoopFs.writeJson(reg.spark, s"$dir/format.json") { n =>
         n.put("value_format", f.valueFormat)
         val cols = n.putArray("pivoted_columns")
         f.pivotedColumns.foreach(cols.add)
         n.put("variable_column", f.variableColumn)
-      }
+      })
+      sidecars(dir)
     }
-  }
 
   /** Registration validation: nulls, unknown dimension values, time-spine
     * match, and (opt-in) cross-product completeness. Each check is a

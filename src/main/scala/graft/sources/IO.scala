@@ -181,7 +181,7 @@ object Readers {
 /** The engine's one storage accessor and the only place a path becomes a
   * Hadoop `FileSystem`. The decision it owns: every engine path — registry
   * roots, cache directories, JSON sidecars, written results and the
-  * `Writers`' own list/delete/rename steps — is a Hadoop path, so a plain
+  * `Writers`' own list/delete/publish steps — is a Hadoop path, so a plain
   * local path, a `file:` URI, HDFS and object stores all behave the same.
   * The local-only exceptions are `Readers.readWithRecovery`, `TxnLog`,
   * `FixedWidth` and the NIO lock path of `HadoopStorage`. Sidecars parse
@@ -205,9 +205,11 @@ object HadoopFs {
   }
 
   /** Sorted names of the directories directly under `path`; Nil when it
-    * is missing. */
+    * is missing. Hidden names (a leading `.` or `_`) are skipped, so a
+    * [[publish]] temp dir is never listed. */
   def subdirs(spark: SparkSession, path: String): Seq[String] =
-    list(spark, path).filter(_.isDirectory).map(_.getPath.getName).sorted
+    list(spark, path).filter(_.isDirectory).map(_.getPath.getName)
+      .filterNot(n => n.startsWith(".") || n.startsWith("_")).sorted
 
   /** Delete `path` and everything under it; false when nothing was there. */
   def delete(spark: SparkSession, path: String): Boolean = {
@@ -215,11 +217,43 @@ object HadoopFs {
     fs(spark, hp).delete(hp, true)
   }
 
-  /** Hadoop rename; false when it fails. Careful: renaming onto an
-    * EXISTING directory moves the source inside it and returns true. */
-  def rename(spark: SparkSession, from: String, to: String): Boolean = {
-    val src = new HPath(from)
-    fs(spark, src).rename(src, new HPath(to))
+  /** The engine's one publish step: how a directory object it writes (its
+    * parquet tables and JSON sidecars together) becomes visible. `write`
+    * fills a hidden sibling temp dir, `.tmp_<name>_<uuid>`, with the whole
+    * object and one rename makes it visible; the temp dir is removed on
+    * failure. An existing `target` is replaced: moved aside, the new dir
+    * renamed in, the old one deleted. Spark cannot overwrite a path a
+    * job reads (ref: dsgrid/utils/spark.py:474-499), so the object may be
+    * built from its own previous version. */
+  def publish(spark: SparkSession, target: String)(write: String => Unit): Unit =
+    publishDir(spark, target, replace = true)(write)
+
+  /** [[publish]] for a content-keyed entry: an existing `target` already
+    * holds the same content, so it is kept and the new copy dropped — a
+    * lost race against a concurrent writer. */
+  def publishOnce(spark: SparkSession, target: String)(write: String => Unit): Unit =
+    publishDir(spark, target, replace = false)(write)
+
+  private def publishDir(spark: SparkSession, target: String, replace: Boolean)(write: String => Unit): Unit = {
+    val dst = new HPath(target)
+    val f = fs(spark, dst)
+    val tmp = new HPath(dst.getParent, s".tmp_${dst.getName}_${java.util.UUID.randomUUID().toString.take(8)}")
+    try {
+      write(tmp.toString)
+      if (replace && f.exists(dst)) {
+        val old = tmp.suffix("_old")
+        if (!f.rename(dst, old)) throw new java.io.IOException(s"could not move $target aside")
+        if (!f.rename(tmp, dst)) {
+          f.rename(old, dst)
+          throw new java.io.IOException(s"could not rename $tmp to $target")
+        }
+        f.delete(old, true)
+      } else f.rename(tmp, dst)
+      // a Hadoop rename onto a directory that appeared meanwhile moves the
+      // source inside it and returns true: the other writer won, so drop
+      // this copy
+      f.delete(new HPath(dst, tmp.getName), true)
+    } finally f.delete(tmp, true)
   }
 
   /** Recursive copy, across any two filesystems (`FileUtil.copy` with
@@ -258,12 +292,14 @@ object HadoopFs {
 }
 
 /** Writers: plain + auto-partitioned parquet, header CSV, in-place
-  * overwrite, persist-intermediate
-  * (ref: dsgrid/utils/spark.py:474-671, dsgrid/spark/functions.py:578-589). */
+  * overwrite (ref: dsgrid/utils/spark.py:474-671,
+  * dsgrid/spark/functions.py:578-589). A lineage cut to scratch parquet
+  * (ref: dsgrid/utils/spark.py:502-527) is a `graft.query.FileCache.cached`
+  * entry. */
 object Writers {
 
-  def parquet(df: DataFrame, path: String, overwrite: Boolean = true): Unit =
-    df.write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists).parquet(path)
+  def parquet(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(path)
 
   /** Write parquet, then if the produced files are badly sized, rewrite with
     * a partition count targeting ~`targetMb` files. Mirrors the reference's
@@ -294,9 +330,7 @@ object Writers {
         if (actual > desired) base.coalesce(desired)
         else if (columns.nonEmpty) base.repartition(desired, columns.map(org.apache.spark.sql.functions.col): _*)
         else base.repartition(desired)
-      val tmp = path + ".graft-tmp"
-      parquet(rewritten, tmp)
-      replaceWith(spark, tmp, path)
+      HadoopFs.publish(spark, path)(parquet(rewritten, _))
     }
   }
 
@@ -411,29 +445,10 @@ object Writers {
     HadoopFs.delete(spark, new HPath(spark.conf.get("spark.sql.warehouse.dir"), relative).toString)
   }
 
-  /** Spark can't overwrite an input path in place: write tmp, swap, re-read
-    * (ref: dsgrid/utils/spark.py:474-499). */
+  /** Spark can't overwrite an input path in place: publish the rewrite
+    * over it and re-read (ref: dsgrid/utils/spark.py:474-499). */
   def overwriteInPlace(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    val tmp = path + ".graft-tmp"
-    parquet(df, tmp)
-    replaceWith(spark, tmp, path)
-    Readers.parquet(spark, path)
-  }
-
-  /** Swap a freshly written `tmp` table in for `path`. */
-  private def replaceWith(spark: SparkSession, tmp: String, path: String): Unit = {
-    HadoopFs.delete(spark, path)
-    if (!HadoopFs.rename(spark, tmp, path))
-      throw new java.io.IOException(s"could not rename $tmp to $path")
-  }
-
-  /** Materialize an intermediate to scratch parquet and read it back — cuts
-    * the lineage when a plan grows too complex for Catalyst to handle well
-    * (ref: dsgrid/utils/spark.py:502-527). Always writes: content-keyed
-    * reuse goes through `graft.query.FileCache.cached`. */
-  def persistIntermediate(spark: SparkSession, df: DataFrame, scratchDir: String, name: String): DataFrame = {
-    val path = s"$scratchDir/$name.parquet"
-    parquet(df, path)
+    HadoopFs.publish(spark, path)(parquet(df, _))
     Readers.parquet(spark, path)
   }
 

@@ -398,12 +398,9 @@ object StreamOps {
     // its own first-time costs beyond the first batch's
     val stages = (0 to 2).map { c =>
       val stage = java.nio.file.Files.createTempDirectory(s"graft-swarm-c$c")
-      spark.range(c * 24, (c + 1) * 24)
-        .selectExpr("id", "id % 8 AS k", "timestamp_seconds(1000000000 + id * 60) AS ts")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = new java.io.File(stage.toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get.toPath
-      java.nio.file.Files.move(part, inDir.resolve(f"chunk$c%03d.parquet"))
+      val part = graft.sources.TxnLog.writeDataFile(spark.range(c * 24, (c + 1) * 24)
+        .selectExpr("id", "id % 8 AS k", "timestamp_seconds(1000000000 + id * 60) AS ts"), stage.toString)
+      java.nio.file.Files.move(java.nio.file.Paths.get(part), inDir.resolve(f"chunk$c%03d.parquet"))
       stage
     }
     val schema = spark.read.parquet(inDir.toString).schema

@@ -363,7 +363,7 @@ object Dedup {
     // and feed BOTH the signature pipeline and the exact-Jaccard verify
     // join from the cached frame. The bucket frame is also cached because
     // the candidate generation self-joins it. At cluster scale swap cache()
-    // for a scratch-parquet checkpoint (Writers.persistIntermediate).
+    // for a scratch-parquet checkpoint (a FileCache.cached entry).
     val shingles = hashedShingleSets(df, idCol, textCol, shingleSize).cache()
     val sig = minhashSignaturesFromShingles(shingles, idCol, bands * rowsPerBand)
     val buckets = lshBucketsFromSignatures(sig, idCol, bands, rowsPerBand).cache()
@@ -474,7 +474,7 @@ object Dedup {
     * rounds' frames still reference theirs lazily):
     * `val n = new java.util.concurrent.atomic.AtomicInteger
     *  Dedup.duplicateClusters(pairs, checkpoint =
-    *    df => Writers.persistIntermediate(spark, df, scratch, s"cc_${n.incrementAndGet()}"))` */
+    *    df => FileCache.cached(spark, scratch, s"cc_${n.incrementAndGet()}")(df))` */
   def duplicateClusters(
       pairs: DataFrame,
       maxIterations: Int = 20,

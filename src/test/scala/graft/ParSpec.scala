@@ -51,8 +51,14 @@ class ParSpec extends SparkSpec {
     val finished = new ConcurrentLinkedQueue[Int]()
     val othersDone = new CountDownLatch(3)
     val out = Par.map(Seq(0, 1, 2, 3)) { i =>
-      if (i == 0) othersDone.await(10, TimeUnit.SECONDS) else othersDone.countDown()
-      finished.add(i)
+      if (i == 0) {
+        othersDone.await(10, TimeUnit.SECONDS)
+        finished.add(i)
+      } else {
+        // record the finish before releasing task 0, so 0 is always last
+        finished.add(i)
+        othersDone.countDown()
+      }
       i * 10
     }
     assert(out == Seq(0, 10, 20, 30))

@@ -36,8 +36,11 @@ class StorageSpec extends SparkSpec {
       assert(HadoopFs.readJson(spark, s"$root/missing.json").isEmpty)
       HadoopFs.writeJson(spark, s"$root/j/side.json")(_.put("k", "v \"q\""))
       assert(HadoopFs.readJson(spark, s"$root/j/side.json").map(_.get("k").asText()).contains("v \"q\""))
-      assert(HadoopFs.rename(spark, s"$root/j", s"$root/j2"))
-      assert(!HadoopFs.exists(spark, s"$root/j") && HadoopFs.exists(spark, s"$root/j2/side.json"))
+      HadoopFs.publish(spark, s"$root/j2")(d => HadoopFs.writeText(spark, s"$d/side.json", "{}"))
+      HadoopFs.publish(spark, s"$root/j2")(d => HadoopFs.writeJson(spark, s"$d/other.json")(_.put("k", 1)))
+      assert(!HadoopFs.exists(spark, s"$root/j2/side.json") && HadoopFs.exists(spark, s"$root/j2/other.json"))
+      assert(HadoopFs.subdirs(spark, root) == Seq("j", "j2", "kind"))
+      assert(new File(dir).list().forall(!_.startsWith(".")), "a publish left its temp dir behind")
       assert(HadoopFs.delete(spark, s"$root/j2") && !HadoopFs.delete(spark, s"$root/j2"))
     }
     assert(!new File(s"file:$dir").exists(), "a file: URI must never become a relative local path")
@@ -65,7 +68,7 @@ class StorageSpec extends SparkSpec {
       assert(parquetFiles(plain) == files, name)
       assert(parquetFiles(viaUri) == files, name)
       assert(expected(viaUri) == expected(plain), name)
-      assert(!new File(viaUri + ".graft-tmp").exists(), s"$name left its tmp table behind")
+      assert(new File(viaUri).getParentFile.list().forall(!_.startsWith(".tmp_")), s"$name left its tmp table behind")
       assert(!new File(s"file:$viaUri").exists(), s"$name wrote under a relative file: path")
     }
   }

@@ -653,7 +653,7 @@ class DedupSpec extends SparkSpec {
     val scratch = java.nio.file.Files.createTempDirectory("graft-cc").toString
     val n = new java.util.concurrent.atomic.AtomicInteger
     val durable = Dedup.duplicateClusters(chain, checkpoint =
-      df => graft.sources.Writers.persistIntermediate(spark, df, scratch, s"cc_${n.incrementAndGet()}"))
+      df => graft.query.FileCache.cached(spark, scratch, s"cc_${n.incrementAndGet()}")(df))
     assert(durable.select("root").distinct().as[Long].collect().toSeq == Seq(1L))
     assert(n.get() >= 4, "every round must have checkpointed")
   }
